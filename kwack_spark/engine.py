@@ -139,7 +139,18 @@ class KwackSpark:
         ``<durable_path>/_checkpoint``) makes restarts resume instead of
         reprocess, and table ``<topic>`` is registered as a view over the
         landed files — the production shape for sessions that outlive the
-        driver."""
+        driver.
+
+        Either way the query fires one micro-batch every 250 ms
+        (``streaming.trigger.LIVE_PROCESSING_TIME``), not Spark's ASAP
+        loop.  A record is visible to ``sql()`` at most one interval plus
+        one micro-batch's run time after it lands (when no earlier batch is
+        still running).  An idle topic polls its source 4 times a second
+        instead of about 100.  When a batch runs longer than the interval,
+        the next one starts at once.  Starting a live topic raises one
+        logger, Spark's ``ProcessingTimeExecutor`` ("Current batch is
+        falling behind"), to ERROR in the driver JVM: for every streaming
+        query in that JVM, and until it exits."""
         from kwack_spark.config import Serde
         from kwack_spark.sources.kafka import decode_topic
         from kwack_spark.streaming import ingest as si

@@ -912,6 +912,38 @@ def _dhash64_from_px(w: int, h: int, ch: int, px):
     return fp
 
 
+# Bytes a per-task decode memo may hold (keys plus 8-byte fingerprints).  A
+# count cap does not bound memory when keys are whole media payloads: 16k
+# PNGs of a few MB each is tens of GB in one Python worker.
+DECODE_MEMO_BYTES = 64 << 20
+
+_MISS = object()
+
+
+class DecodeMemo:
+    """``fn(payload)`` memoized on the exact payload bytes (no hash
+    collisions), for one task.  Entries are kept while the bytes they
+    hold — key length plus 8 for the fingerprint — fit in ``budget``; past
+    that, or for a payload bigger than the whole budget, ``fn`` just runs.
+    ``held`` is the bytes held so far."""
+
+    def __init__(self, fn, budget: int = DECODE_MEMO_BYTES):
+        self._fn = fn
+        self._budget = budget
+        self._memo: dict = {}
+        self.held = 0
+
+    def __call__(self, payload: bytes):
+        fp = self._memo.get(payload, _MISS)
+        if fp is _MISS:
+            fp = self._fn(payload)
+            cost = len(payload) + 8
+            if self.held + cost <= self._budget:
+                self._memo[payload] = fp
+                self.held += cost
+        return fp
+
+
 def dhash64(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     """64-bit perceptual difference hash (dHash) from REAL image decode:
     full PNG decode (``_png_decode`` — CRC chunk walk, inflate, all five
@@ -927,26 +959,17 @@ def dhash64(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     it (the payload never shuffles)."""
     import pandas as pd
 
+    def _png_fp(payload: bytes):
+        parsed = _png_decode(payload)
+        if parsed is None:
+            return None
+        return _dhash64_from_px(parsed[0], parsed[1], parsed[2], parsed[4])
+
     def kernel(batches) -> Iterator:
-        # per-task memo on the payload BYTES (r13, guide §4.5): dHash is a
-        # pure function of the payload, and duplicate-heavy corpora (the
-        # detection target) re-decode identical images otherwise; bounded,
-        # task-scoped, exact-bytes key
-        memo: dict = {}
-
-        def _fp(payload: bytes):
-            if payload in memo:
-                return memo[payload]
-            parsed = _png_decode(payload)
-            fp = (
-                _dhash64_from_px(parsed[0], parsed[1], parsed[2], parsed[4])
-                if parsed is not None
-                else None
-            )
-            if len(memo) < 16384:
-                memo[payload] = fp
-            return fp
-
+        # per-task memo on the payload BYTES: dHash is a pure function of
+        # the payload, and duplicate-heavy corpora (the detection target)
+        # re-decode identical images otherwise
+        _fp = DecodeMemo(_png_fp)
         for pdf in batches:
             ids, fps = [], []
             for rec in pdf.itertuples(index=False):
@@ -1984,23 +2007,18 @@ def _codec_keyframes(df, payload_col, id_col, every_n, splitter):
     of the frame BYTES, and duplicate videos (the very thing these queries
     detect) carry byte-identical frames — so each task memoizes fp by frame
     bytes and a duplicate-heavy corpus decodes each distinct frame once per
-    task instead of once per occurrence.  Bounded (worst case a corpus of
-    all-distinct frames just misses), keyed on the exact bytes (no hash
-    collisions), and scoped to the task — nothing persists across runs."""
+    task instead of once per occurrence.  Bounded by the bytes it holds
+    (``DecodeMemo``; worst case a corpus of all-distinct frames just
+    misses), keyed on the exact bytes (no hash collisions), and scoped to
+    the task — nothing persists across runs."""
     import pandas as pd
 
+    def _jpeg_fp(frame: bytes):
+        parsed = _jpeg_decode(frame)
+        return _dhash64_from_px(*parsed) if parsed is not None else None
+
     def kernel(batches) -> Iterator:
-        memo: dict = {}
-
-        def _fp(frame: bytes):
-            if frame in memo:
-                return memo[frame]
-            parsed = _jpeg_decode(frame)
-            fp = _dhash64_from_px(*parsed) if parsed is not None else None
-            if len(memo) < 65536:
-                memo[frame] = fp
-            return fp
-
+        _fp = DecodeMemo(_jpeg_fp)
         for pdf in batches:
             ids, nos, fps = [], [], []
             for rec in pdf.itertuples(index=False):

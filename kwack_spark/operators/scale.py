@@ -22,8 +22,12 @@ The levers for the shuffles that remain after Catalyst has done its part:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def bucket_table(
@@ -369,15 +373,21 @@ def hll_estimate(sketch: DataFrame) -> DataFrame:
 def _has_shuffle_exchange(jplan, max_nodes: int = 256) -> bool:
     """True when the physical plan tree contains a shuffle Exchange (or the
     bounded walk gives up — the conservative answer for ``widen_if_narrow``,
-    which must then not insert one).  Pure tree traversal over py4j: no
-    execution, class-name matching, depth-first with a node budget."""
+    which must then not insert one; logged at debug level so the skipped
+    widen is visible).  Pure tree traversal over py4j: no execution,
+    class-name matching, depth-first with a node budget."""
     stack = [jplan]
     seen = 0
     while stack:
         node = stack.pop()
         seen += 1
         if seen > max_nodes:
-            return True  # give up conservatively: treat as already wide
+            _log.debug(
+                "shuffle-exchange probe gave up after %d plan nodes; "
+                "treating the plan as already wide (no widening)",
+                max_nodes,
+            )
+            return True
         name = node.getClass().getSimpleName()
         if name == "ShuffleExchangeExec":
             # same semantics as the former string probe: hash/range/round-

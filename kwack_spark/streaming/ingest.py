@@ -26,6 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 from kwack_spark.config import Serde
 from kwack_spark.schema.registry import MockSchemaRegistry
 from kwack_spark.sources.kafka import KAFKA_FRAME_SCHEMA, decode_topic
+from kwack_spark.streaming.trigger import LIVE_PROCESSING_TIME, start_query
 
 
 # 16-bit popcount lookup table for the vectorized stateful kernels — built
@@ -333,26 +334,30 @@ def stateful_lsh_neardup(
         n0 = len(ids)
         all_sets = [set(s) for s in shs] + [set(sh) for _, sh in batch]
         all_ids = ids + [did for did, _ in batch]
-        # r13 (guide §4.2): one per-bucket vocabulary + indicator matrix,
-        # ONE int matmul for every (arrival, prior) intersection count —
-        # replacing the per-pair Python set ops.  Intersections/unions are
-        # exact ints either way, and int/int division in float64 is the
-        # same correctly-rounded IEEE value the old per-pair `len(s & hs)
-        # / union` computed, so emitted rows are identical in content and
-        # order.  Oversized buckets (indicator would exceed ~20M cells)
-        # keep the streaming-friendly per-pair loop.
+        # one indicator matrix + ONE int matmul for every (arrival, prior)
+        # intersection count, replacing the per-pair Python set ops.  Its
+        # columns are the BATCH's tokens only: a token an arrival shares
+        # with any doc is one of the arrival's own, so the counts stay
+        # exact while the matrix is docs x batch vocabulary — a 1-doc batch
+        # costs history x its set size, not history x the bucket's whole
+        # vocabulary.  Intersections/unions are exact ints either way, and
+        # int/int division in float64 is the same correctly-rounded IEEE
+        # value the per-pair `len(s & hs) / union` computes, so emitted
+        # rows are identical in content and order.  Oversized indicators
+        # (over ~20M cells) keep the per-pair loop.
         vocab: dict = {}
-        for s in all_sets:
+        for s in all_sets[n0:]:
             for tok in s:
                 if tok not in vocab:
                     vocab[tok] = len(vocab)
         nv, nd = len(vocab), len(all_sets)
-        if batch and nv and nd * nv <= 20_000_000:
+        if nv and nd * nv <= 20_000_000:
             ind = np.zeros((nd, nv), dtype=np.int32)
             for r, s in enumerate(all_sets):
-                if s:
-                    ind[r, [vocab[t] for t in s]] = 1
-            sizes = ind.sum(axis=1)
+                cols = [c for c in map(vocab.get, s) if c is not None]
+                if cols:
+                    ind[r, cols] = 1
+            sizes = np.fromiter(map(len, all_sets), dtype=np.int64, count=nd)
             ids_arr = np.asarray(all_ids, dtype=np.int64)
             # intersections of each batch row against ALL docs (mask to
             # priors per arrival below)
@@ -601,7 +606,7 @@ def to_memory_sink(
     name: str,
     output_mode: str = "append",
     continuous: bool = False,
-    processing_time: str | None = None,
+    processing_time: str = LIVE_PROCESSING_TIME,
 ) -> StreamingQuery:
     """Stream into an in-memory table — the engine's live-table surface and
     the test harness.
@@ -610,17 +615,13 @@ def to_memory_sink(
     backlog and stop.  ``continuous=True``: keep the micro-batch loop running
     so the table grows as records arrive (the engine's live mode; callers
     synchronize with ``query.processAllAvailable()``).  ``processing_time``
-    (continuous mode only, e.g. ``'1 second'``): fire micro-batches on a
-    fixed cadence instead of ASAP — REQUIRED when the plan holds armed
-    processing-time timeouts (stateful TTL): their shouldRunAnotherBatch is
-    always true, so the ASAP trigger degenerates into a busy loop of empty
-    timer batches, each paying full per-partition state-store overhead."""
+    (continuous mode only): the micro-batch cadence, 250 ms by default (see
+    streaming/trigger.py).  A plan holding armed processing-time timeouts
+    (stateful TTL) needs a cadence: their shouldRunAnotherBatch is always
+    true, so Spark's ASAP trigger would busy-loop empty timer batches, each
+    paying full per-partition state-store overhead."""
     w = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    if not continuous:
-        w = w.trigger(availableNow=True)
-    elif processing_time is not None:
-        w = w.trigger(processingTime=processing_time)
-    return w.start()
+    return start_query(w, df.sparkSession, continuous, processing_time)
 
 
 def stateful_kll_registers(df: DataFrame, key: str, k: int = 64) -> DataFrame:

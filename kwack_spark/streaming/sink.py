@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from kwack_spark.streaming.trigger import LIVE_PROCESSING_TIME, start_query
+
 
 PARTITION_COL = "kw_batch_id"  # no leading underscore: _-prefixed paths are
 # hidden from Spark's partition discovery, and "batch_id" alone could
@@ -81,7 +83,9 @@ def to_idempotent_parquet_sink(
 
     ``continuous=False`` (default): Trigger.AvailableNow — drain the backlog
     and stop; re-running with the same checkpoint processes only NEW input.
-    ``continuous=True``: keep the micro-batch loop running (live mode).
+    ``continuous=True``: keep the micro-batch loop running (live mode), one
+    micro-batch per ``LIVE_PROCESSING_TIME`` (250 ms; see
+    streaming/trigger.py).
     ``post_batch(batch_id)``, if given, runs driver-side after each landed
     batch (e.g. re-registering a catalog view over the grown dataset)."""
     writer = idempotent_batch_writer(base_path)
@@ -96,9 +100,7 @@ def to_idempotent_parquet_sink(
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    if not continuous:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_query(w, df.sparkSession, continuous, LIVE_PROCESSING_TIME)
 
 
 def read_sink(spark: SparkSession, base_path: str) -> DataFrame:
@@ -309,9 +311,7 @@ def to_manifest_parquet_sink(
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    if not continuous:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_query(w, df.sparkSession, continuous, LIVE_PROCESSING_TIME)
 
 
 def read_manifest(base_path: str) -> dict:

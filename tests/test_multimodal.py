@@ -423,3 +423,42 @@ def test_jpeg_codec_r12_golden_hashes():
         for fr in mm._avi_mjpeg_frames(payload):
             acc.update(hashlib.md5(fr).digest())
         assert acc.hexdigest() == want, f"avi roundtrip drift id={d}"
+
+
+def test_decode_memo_bounds_bytes_not_entries():
+    """A task over large, distinct payloads holds at most the memo's byte
+    budget, however many entries fit under the old count caps; repeats of
+    kept payloads still skip the decode, and a payload bigger than the
+    whole budget is decoded every time and never kept."""
+    import numpy as np
+
+    from kwack_spark.operators import multimodal as mm
+
+    rng = np.random.RandomState(5)
+    payloads = [
+        mm._png_encode(rng.randint(0, 256, (128, 128 * 3)).astype(np.int32), 3)
+        for _ in range(12)
+    ]
+    size = len(payloads[0])
+    assert size > 40_000  # random pixels do not compress
+    decodes = []
+
+    def decode(p):
+        decodes.append(p)
+        parsed = mm._png_decode(p)
+        return mm._dhash64_from_px(parsed[0], parsed[1], parsed[2], parsed[4])
+
+    budget = 4 * size + 64
+    memo = mm.DecodeMemo(decode, budget=budget)
+    fps = [memo(p) for p in payloads]
+    assert memo.held <= budget
+    assert len(decodes) == 12
+    assert [memo(p) for p in payloads] == fps  # same answers, kept or not
+    assert 12 + 12 - 4 <= len(decodes) < 24  # only kept payloads skip a decode
+
+    big = mm.DecodeMemo(decode, budget=size // 2)
+    n = len(decodes)
+    big(payloads[0])
+    big(payloads[0])
+    assert len(decodes) == n + 2 and big.held == 0
+    assert mm.DECODE_MEMO_BYTES <= 128 << 20

@@ -259,3 +259,18 @@ def test_cms_prebuilt_sketch_absent_buckets(spark):
     assert "zz_unseen_key" in est
     # at width=256 with 4 keys, at least one of the 4 buckets is empty
     assert est["zz_unseen_key"] == 0
+
+
+def test_shuffle_probe_logs_when_walk_budget_runs_out(spark, caplog):
+    """The exchange probe answers "already wide" when it runs out of its
+    node budget, and says so at debug level instead of silently skipping
+    the widen."""
+    import logging
+
+    df = spark.range(100).repartition(4).select((F.col("id") % 7).alias("k"))
+    jplan = df._jdf.queryExecution().sparkPlan()
+    with caplog.at_level(logging.DEBUG, logger=scale.__name__):
+        assert scale._has_shuffle_exchange(jplan) is True  # a real exchange
+        assert not caplog.records
+        assert scale._has_shuffle_exchange(jplan, max_nodes=1) is True
+    assert any("gave up after 1 plan nodes" in r.getMessage() for r in caplog.records)

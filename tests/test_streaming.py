@@ -839,3 +839,115 @@ def test_footer_row_count_rejects_remote_file_authority(spark, tmp_path):
     assert sk._footer_row_count("file://nas-host/data") is None
     with pytest.raises(ValueError, match="overlaps"):
         sk._check_disjoint_paths("file://nas-host/data", "file://nas-host/data/out")
+
+
+def _land_frame_file(spark, tmp_path, frames, sid, topic, uids, name):
+    """Write one parquet file of Avro frames elsewhere, then move it into
+    ``frames`` in one rename, the way a producer lands a file."""
+    import glob
+    import os
+
+    rows = [
+        (None, ks.confluent_frame(avro_schema.encode({"uid": i, "val": float(i)}, AVRO), sid),
+         topic, 0, i, TS0 + datetime.timedelta(seconds=i), 0, None)
+        for i in uids
+    ]
+    staged = str(tmp_path / f"staged_{name}")
+    spark.createDataFrame(rows, ks.KAFKA_FRAME_SCHEMA).coalesce(1).write.parquet(staged)
+    (part,) = glob.glob(f"{staged}/part-*.parquet")
+    os.replace(part, os.path.join(frames, f"{name}.parquet"))
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "durable"])
+def test_live_topic_runs_on_processing_time_cadence(spark, tmp_path, monkeypatch, durable):
+    """Both live-topic sinks start with a processing-time trigger at the
+    package default, not Spark's ASAP loop (which re-polls an idle source
+    every 10 ms)."""
+    import os
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from kwack_spark.config import KwackConfig
+    from kwack_spark.engine import KwackSpark
+    from kwack_spark.streaming.trigger import LIVE_PROCESSING_TIME
+
+    calls = []
+    real_trigger = DataStreamWriter.trigger
+
+    def recording_trigger(self, **kwargs):
+        calls.append(kwargs)
+        return real_trigger(self, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "trigger", recording_trigger)
+    frames = str(tmp_path / "frames")
+    os.makedirs(frames)
+    topic = "live_cad_durable" if durable else "live_cad_memory"
+    eng = KwackSpark(KwackConfig(), spark=spark)
+    q = eng.register_live_topic(
+        topic,
+        value_serde=Serde(kind="string"),
+        frames_dir=frames,
+        durable_path=str(tmp_path / "land") if durable else None,
+    )
+    try:
+        assert calls == [{"processingTime": LIVE_PROCESSING_TIME}]
+        assert q.isActive
+    finally:
+        q.stop()
+
+
+def test_continuous_start_quiets_falling_behind_logger(spark, tmp_path):
+    """A continuous start raises Spark's falling-behind logger to ERROR.
+    The class must still exist under that name: if Spark moves it, the
+    level lands on a logger nothing uses and the WARN spam comes back."""
+    import uuid
+
+    from kwack_spark.streaming.trigger import _FALLING_BEHIND_LOGGER
+
+    jvm = spark.sparkContext._jvm
+    jvm.py4j.reflection.ReflectionUtil.classForName(_FALLING_BEHIND_LOGGER)
+    path = str(tmp_path / "in")
+    spark.range(3).selectExpr("id").write.parquet(path)
+    stream = spark.readStream.schema("id long").parquet(path)
+    q = si.to_memory_sink(stream, f"quiet_{uuid.uuid4().hex[:6]}", continuous=True)
+    try:
+        level = jvm.org.apache.logging.log4j.LogManager.getLogger(
+            _FALLING_BEHIND_LOGGER
+        ).getLevel()
+        assert level.toString() == "ERROR"
+    finally:
+        q.stop()
+
+
+def test_live_topic_durable_late_file_visible_exactly_once(spark, tmp_path):
+    """A frame file landed after registration shows up in the durable live
+    table after processAllAvailable(), every record exactly once."""
+    import os
+
+    from kwack_spark.config import KwackConfig
+    from kwack_spark.engine import KwackSpark
+
+    frames = str(tmp_path / "frames")
+    os.makedirs(frames)
+    reg = MockSchemaRegistry()
+    sid = reg.register("live_late-value", json.dumps(AVRO), "AVRO")
+    eng = KwackSpark(KwackConfig(), spark=spark, registry=reg)
+    q = eng.register_live_topic(
+        "live_late",
+        value_serde=Serde(kind="latest"),
+        frames_dir=frames,
+        durable_path=str(tmp_path / "land"),
+    )
+    try:
+        q.processAllAvailable()
+        assert eng.sql("SELECT count(*) AS n FROM live_late").collect()[0].n == 0
+
+        _land_frame_file(spark, tmp_path, frames, sid, "live_late", range(40), "f0")
+        q.processAllAvailable()
+        got = eng.sql(
+            "SELECT count(*) AS n, count(DISTINCT uid) AS d, min(uid) AS lo, "
+            "max(uid) AS hi FROM live_late"
+        ).collect()[0]
+        assert (got.n, got.d, got.lo, got.hi) == (40, 40, 0, 39)
+    finally:
+        q.stop()
