@@ -1035,7 +1035,7 @@ def kafka_proto_msgindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# JVM from_avro fast path: evolution-free plain-record decode
+# plain-record Avro decode on the Python stage
 # ---------------------------------------------------------------------------
 
 _SUPPLIER_FAST_AVRO = {
@@ -1052,12 +1052,10 @@ _SUPPLIER_FAST_AVRO = {
 
 @register(
     "kafka_avro_fastpath",
-    # identity oracle over supplier; an evolution-free plain record with an
-    # explicit reader schema satisfies every avro_jvm.eligible gate, so when
-    # the spark-avro module is on the classpath this decodes via from_avro
-    # inside whole-stage codegen (sources/avro_jvm.py); without the jar the
-    # Python stage produces the identical rows — the oracle holds on both
-    # physical plans, which is the fast path's contract.
+    # identity oracle over supplier: an evolution-free plain record with an
+    # explicit reader schema, the simplest Avro topic.  It decodes on the
+    # Python stage like every Avro topic; the name is kept because the
+    # registered query set is a stable contract.
     oracle="""
         SELECT s_suppkey AS rowkey, s_suppkey, s_name, s_nationkey,
                s_acctbal
@@ -1067,10 +1065,8 @@ _SUPPLIER_FAST_AVRO = {
 )
 def kafka_avro_fastpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     """supplier -> Confluent-framed plain Avro (no unions, no evolution,
-    explicit schema) -> decode_topic, which takes the gated JVM ``from_avro``
-    path when available (KwackEngine.java:516-585 decodes in Java; this is
-    the Spark equivalent — decode rides whole-stage codegen instead of an
-    Arrow round-trip into Python)."""
+    explicit schema) -> decode_topic's Arrow-batched Python stage (the
+    reference decodes in Java, KwackEngine.java:516-585)."""
     schema = _SUPPLIER_FAST_AVRO
     schema_str = json.dumps(schema)
 
@@ -1105,8 +1101,7 @@ def kafka_avro_fastpath(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # JVM from_json fast path: plain-struct JSON-Schema decode, jar-free — the
-# one JVM decode path that actually EXECUTES in any deployment (from_avro
-# needs the spark-avro module on the classpath)
+# one JVM struct decode path (Avro and Protobuf decode on the Python stage)
 # ---------------------------------------------------------------------------
 
 _CUSTOMER_FAST_JS = {

@@ -1088,6 +1088,37 @@ _E2E_ENSEMBLE_CTES = _ENSEMBLE_CTES.replace(
     "FROM documents", "FROM documents JOIN s2k USING (doc_id)"
 )
 
+# The text funnel's oracle (URL dedup -> LSH keep-best -> ensemble gate): the
+# s1k/s2k/s3k chain shared by corpus_curation_e2e, corpus_curation_multimodal
+# and corpus_curation_all_modalities, as the Spark side shares
+# _curation_text_funnel.  s2k and s3k are MATERIALIZED for the reason the
+# Spark side checkpoints them: each survivor set feeds several later CTEs,
+# and DuckDB inlines a plain CTE into every consumer, re-planning the
+# recursive component walk once per copy — at sf0.01 that exhausted DuckDB's
+# default memory limit (80% of RAM, 12.5 GiB on a 15 GiB host) on two of the
+# three compositions.
+_TEXT_FUNNEL_CTES = f"""u AS (SELECT doc_id, {_URL_RAW_SQL} AS raw_url FROM documents),
+        {_URL_CANON_CTES},
+        s1k AS (SELECT min(doc_id) AS doc_id FROM c GROUP BY canon_url),
+        {_E2E_LSH_CTES},
+        {_COMP_CTES},
+        ranked2 AS (
+            SELECT cm.keep_id, cm.node,
+                   row_number() OVER (PARTITION BY cm.keep_id
+                                      ORDER BY dd.n_chars DESC, cm.node) AS rn
+            FROM comp cm JOIN documents dd ON dd.doc_id = cm.node
+        ),
+        drop2 AS (SELECT node AS doc_id FROM ranked2 WHERE rn > 1),
+        s2k AS MATERIALIZED (
+            SELECT doc_id FROM s1k
+            WHERE doc_id NOT IN (SELECT doc_id FROM drop2)
+        ),
+        {_E2E_ENSEMBLE_CTES},
+        s3k AS MATERIALIZED (
+            SELECT doc_id FROM j
+            WHERE j.gopher_pass AND j.score_ok AND j.stop_ok
+        )"""
+
 # 5-gram decontamination shingles: benchmark contamination means sharing a
 # CONTIGUOUS 5-token phrase — specific enough that topical 3-gram overlap
 # in a homogeneous corpus does not mass-flag clean documents (measured: 3-
@@ -1202,27 +1233,7 @@ def _shard_manifest(survivors):
     # fails the hash.
     oracle=f"""
         WITH RECURSIVE
-        u AS (SELECT doc_id, {_URL_RAW_SQL} AS raw_url FROM documents),
-        {_URL_CANON_CTES},
-        s1k AS (SELECT min(doc_id) AS doc_id FROM c GROUP BY canon_url),
-        {_E2E_LSH_CTES},
-        {_COMP_CTES},
-        ranked2 AS (
-            SELECT cm.keep_id, cm.node,
-                   row_number() OVER (PARTITION BY cm.keep_id
-                                      ORDER BY dd.n_chars DESC, cm.node) AS rn
-            FROM comp cm JOIN documents dd ON dd.doc_id = cm.node
-        ),
-        drop2 AS (SELECT node AS doc_id FROM ranked2 WHERE rn > 1),
-        s2k AS (
-            SELECT doc_id FROM s1k
-            WHERE doc_id NOT IN (SELECT doc_id FROM drop2)
-        ),
-        {_E2E_ENSEMBLE_CTES},
-        s3k AS (
-            SELECT doc_id FROM j
-            WHERE j.gopher_pass AND j.score_ok AND j.stop_ok
-        ),
+        {_TEXT_FUNNEL_CTES},
         toks4 AS (SELECT doc_id, {_toks()} AS tk FROM documents),
         sh4 AS (SELECT doc_id, ({_SHINGLES_5}) AS sh FROM toks4),
         bench4 AS (
@@ -1396,27 +1407,7 @@ def corpus_curation_e2e(spark, sf_dir):
     # pins the final text+image-deduped survivor set bit-for-bit.
     oracle=f"""
         WITH RECURSIVE
-        u AS (SELECT doc_id, {_URL_RAW_SQL} AS raw_url FROM documents),
-        {_URL_CANON_CTES},
-        s1k AS (SELECT min(doc_id) AS doc_id FROM c GROUP BY canon_url),
-        {_E2E_LSH_CTES},
-        {_COMP_CTES},
-        ranked2 AS (
-            SELECT cm.keep_id, cm.node,
-                   row_number() OVER (PARTITION BY cm.keep_id
-                                      ORDER BY dd.n_chars DESC, cm.node) AS rn
-            FROM comp cm JOIN documents dd ON dd.doc_id = cm.node
-        ),
-        drop2 AS (SELECT node AS doc_id FROM ranked2 WHERE rn > 1),
-        s2k AS (
-            SELECT doc_id FROM s1k
-            WHERE doc_id NOT IN (SELECT doc_id FROM drop2)
-        ),
-        {_E2E_ENSEMBLE_CTES},
-        s3k AS (
-            SELECT doc_id FROM j
-            WHERE j.gopher_pass AND j.score_ok AND j.stop_ok
-        ),
+        {_TEXT_FUNNEL_CTES},
         {_DHASH_FP_CTES.replace(
             "FROM documents", "FROM documents JOIN s3k USING (doc_id)"
         )},
@@ -1498,27 +1489,7 @@ def corpus_curation_multimodal(spark, sf_dir):
     # survivor set bit-for-bit.
     oracle=f"""
         WITH RECURSIVE
-        u AS (SELECT doc_id, {_URL_RAW_SQL} AS raw_url FROM documents),
-        {_URL_CANON_CTES},
-        s1k AS (SELECT min(doc_id) AS doc_id FROM c GROUP BY canon_url),
-        {_E2E_LSH_CTES},
-        {_COMP_CTES},
-        ranked2 AS (
-            SELECT cm.keep_id, cm.node,
-                   row_number() OVER (PARTITION BY cm.keep_id
-                                      ORDER BY dd.n_chars DESC, cm.node) AS rn
-            FROM comp cm JOIN documents dd ON dd.doc_id = cm.node
-        ),
-        drop2 AS (SELECT node AS doc_id FROM ranked2 WHERE rn > 1),
-        s2k AS (
-            SELECT doc_id FROM s1k
-            WHERE doc_id NOT IN (SELECT doc_id FROM drop2)
-        ),
-        {_E2E_ENSEMBLE_CTES},
-        s3k AS (
-            SELECT doc_id FROM j
-            WHERE j.gopher_pass AND j.score_ok AND j.stop_ok
-        ),
+        {_TEXT_FUNNEL_CTES},
         {_DHASH_FP_CTES.replace(
             "FROM documents", "FROM documents JOIN s3k USING (doc_id)"
         )},

@@ -109,13 +109,6 @@ class MockSchemaRegistry:
                 return rs
         raise KeyError(f"subject version not found: {subject} v{version}")
 
-    def subject_versions(self, subject: str) -> list[RegisteredSchema]:
-        """All versions of a subject (evolution-gate check for the JVM Avro
-        fast path, sources/avro_jvm.py)."""
-        if subject not in self._subjects:
-            raise KeyError(f"subject not found: {subject}")
-        return list(self._subjects[subject])
-
     def snapshot(self) -> dict[int, tuple[str, str, tuple]]:
         """id -> (schema_type, schema_str, resolved reference prelude);
         broadcast to executors so writer schema resolution is a dict hit,
@@ -258,15 +251,6 @@ class HttpSchemaRegistry:
             schema_str=data["schema"],
             references=self._parse_refs(data),
         )
-
-    def subject_versions(self, subject: str) -> list[RegisteredSchema]:
-        """All versions of a subject (evolution-gate check for the JVM Avro
-        fast path, sources/avro_jvm.py)."""
-        out = []
-        for v in self._get(f"/subjects/{subject}/versions"):
-            rs = self.by_subject_version(subject, v)
-            out.append(rs)
-        return out
 
     def snapshot(self) -> dict[int, tuple[str, str, tuple]]:
         # list() first: resolve_references may fetch + cache new entries

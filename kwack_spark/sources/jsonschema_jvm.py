@@ -8,10 +8,9 @@ topics are a plain object schema with typed properties — for those the
 per-record ``json.loads`` + coerce in Python costs ~10x the reference's
 per-record Java (KwackEngine.java:516-585 dispatches to Confluent's Java
 deserializers), while Spark's built-in ``from_json`` keeps the whole
-scan+parse inside whole-stage codegen.  ``from_json`` ships in core Spark —
-unlike the spark-avro fast path (sources/avro_jvm.py) it needs NO extra
-jar, so this is the one JVM decode path that can actually execute in any
-deployment.
+scan+parse inside whole-stage codegen.  ``from_json`` ships in core Spark
+and needs NO extra jar, so it is the one JVM struct decode path; Avro and
+Protobuf always decode on the Python stage.
 
 Gates (anything failing one silently keeps the identical-result Python
 path; ``decode_topic`` never changes behavior, only its physical plan):

@@ -17,7 +17,8 @@ Design for testability and scale:
 - Schema-driven decode (Avro/JSON-Schema/Proto) runs in ONE Arrow-batched
   mapInPandas stage; the registry snapshot is broadcast so per-record writer
   schema resolution (Avro evolution) is a dict lookup on the executor.
-- Primitive serdes decode JVM-side (cast / conv) — no Python in the path.
+- Primitive serdes, and plain-struct JSON Schema (``from_json``), decode
+  JVM-side — no Python in the path.
 - At 100 TB the Kafka read parallelizes per topic-partition (1 task each,
   ``minPartitions`` to split further); decode is narrow (no shuffle).
 """
@@ -391,9 +392,14 @@ def decode_topic(
     (and reconcile counts against end offsets) or 'tag' (and route
     ``WHERE corrupt`` to a dead-letter table: offsets + keys survive, so
     the bad producers are identifiable without re-reading the topic).
-    'tag' always decodes on the Python stage (both JVM fast paths are
-    fail-mode-only, and JVM primitive casts yield NULLs instead of errors,
-    which could not be told apart from legitimate NULLs).
+
+    Two physical decode paths, chosen here and nowhere else: the JVM path
+    (primitive casts, and ``from_json`` for plain-struct JSON Schema) and
+    one Arrow-batched Python stage (Avro, Protobuf, every other JSON
+    Schema) with a single per-record body for all three ``on_error``
+    modes.  'tag' always decodes on the Python stage (``from_json`` runs
+    in fail mode only, and JVM primitive casts yield NULLs instead of
+    errors, which could not be told apart from legitimate NULLs).
     """
     if on_error not in ("fail", "skip", "tag"):
         raise ValueError(
@@ -427,81 +433,24 @@ def decode_topic(
         cols.append(_jvm_value_col(value_serde, skip_bytes))
         return df.select(*cols, *meta_cols)
 
-    # --- JVM from_avro fast path (evolution-free topics) ----------------------
-    # Whole-stage-codegen decode when (a) the spark-avro module is present,
-    # (b) no writer evolution is possible for this subject, and (c) the
-    # schema maps identically under both type matrices — see
-    # sources/avro_jvm.py for the gates.  Identical results to the Python
-    # stage, ~Java-cost per record instead of ~10x (the reference's decode
-    # is Java, KwackEngine.java:516-585); at 100 TB ingest this is the
-    # difference that matters.
-    key_jvm_ok = (not want_rowkey) or (
-        k_conv is None and key_serde.kind in ("short", "int", "long", "string", "binary")
-    )
-    # fail-mode only: from_avro's PERMISSIVE mode maps a corrupt record to
-    # an all-null-FIELDS struct (not a NULL struct), which is
-    # indistinguishable from a legitimate all-null record — so 'skip'
-    # cannot drop poison here and keeps the Python path; FAILFAST raises
-    # exactly like the Python decoder's fail mode does.
-    if (
-        value_is_struct
-        and value_serde.kind == "avro"
-        and key_jvm_ok
-        and on_error == "fail"
-    ):
-        from kwack_spark.sources import avro_jvm
-
-        ok, _why = avro_jvm.eligible(value_serde, topic, registry)
-        if ok and avro_jvm.available(spark):
-            head = [_jvm_key_col(key_serde, skip_bytes)] if want_rowkey else []
-            meta = [rowinfo_col(info_attrs)] if info_attrs else []
-            dec = avro_jvm.decode_value_col(
-                payload_col("value", skip_bytes), value_serde.schema_str, on_error
-            )
-            out = df.select(*head, dec.alias("_v"), *meta)
-            order = (["rowkey"] if want_rowkey else []) + [
-                F.col(f"_v.{f.name}").alias(f.name) for f in v_st.fields
-            ] + (["rowinfo"] if info_attrs else [])
-            return out.select(*order)
-
-    # --- JVM from_protobuf fast path (single-message, local-type schemas) -----
-    # Mirrors the from_avro gate: jar availability (spark-protobuf — absent
-    # in this sandbox, so this branch can never activate here), exactly one
-    # top-level message (fixed 0x00 message-index prefix, stripped JVM-side
-    # with a raising guard), type-matrix compatibility, and no writer
-    # evolution — see sources/protobuf_jvm.py.
-    if (
-        value_is_struct
-        and value_serde.kind == "proto"
-        and key_jvm_ok
-        and on_error == "fail"
-    ):
-        from kwack_spark.sources import protobuf_jvm
-
-        ok, _why = protobuf_jvm.eligible(value_serde, topic, registry)
-        if ok and protobuf_jvm.available(spark):
-            head = [_jvm_key_col(key_serde, skip_bytes)] if want_rowkey else []
-            meta = [rowinfo_col(info_attrs)] if info_attrs else []
-            dec = protobuf_jvm.decode_value_col(
-                payload_col("value", skip_bytes), value_serde.schema_str, on_error
-            )
-            out = df.select(*head, dec.alias("_v"), *meta)
-            order = (["rowkey"] if want_rowkey else []) + [
-                F.col(f"_v.{f.name}").alias(f.name) for f in v_st.fields
-            ] + (["rowinfo"] if info_attrs else [])
-            return out.select(*order)
-
-    # --- JVM from_json fast path (plain-struct JSON-Schema topics) ------------
-    # Same shape as the from_avro path but jar-free: from_json is core
-    # Spark, so this is the JVM decode path that can execute anywhere.
-    # Gated on plain-struct schemas (no oneOf/anyOf, typed maps/arrays,
-    # string enums), no ;tag:, fail mode — see sources/jsonschema_jvm.py.
-    # No evolution gate: JSON decodes with the reader schema on BOTH paths.
+    # --- JVM from_json path (plain-struct JSON-Schema topics) -----------------
+    # from_json is core Spark, so this is the one JVM struct decode that runs
+    # without an extra module.  Gated on plain-struct schemas (no
+    # oneOf/anyOf, typed maps/arrays, string enums), no ;tag:, a JVM-
+    # decodable key and fail mode — see sources/jsonschema_jvm.py.  JSON
+    # decodes with the reader schema on both paths, so there is no
+    # evolution gate.
     if (
         value_is_struct
         and value_serde.kind == "jsonschema"
-        and key_jvm_ok
         and on_error == "fail"
+        and (
+            not want_rowkey
+            or (
+                k_conv is None
+                and key_serde.kind in ("short", "int", "long", "string", "binary")
+            )
+        )
     ):
         from kwack_spark.sources import jsonschema_jvm
 
@@ -541,7 +490,8 @@ def decode_topic(
                 True,
             )
         )
-    if on_error == "tag":
+    tag = on_error == "tag"
+    if tag:
         # quarantined rows null every data field, so schema-derived
         # non-nullability (e.g. required Avro fields) must relax — Arrow
         # rejects a null in a non-nullable vector
@@ -557,87 +507,14 @@ def decode_topic(
 
     k_flat = k_conv is not None and k_st.fieldNames() != ["rowval"]
 
-    def _decode_one(rec, value, writers, tag: bool = False) -> dict:
-        out: dict[str, Any] = {}
-        if tag:
-            # quarantine mode: decode key and value independently so a
-            # poison value keeps its (identifying) rowkey, and vice versa
-            out.update({f.name: None for f in out_fields})
-            out["corrupt"] = False
-            if want_rowkey:
-                try:
-                    out["rowkey"] = _decode_key(
-                        rec.key, k_conv, k_st, k_flat, writers, skip_bytes,
-                        key_serde.kind,
-                    )
-                except Exception:
-                    out["corrupt"] = True
-            try:
-                body = None if value is None else (
-                    value[skip_bytes:] if skip_bytes else value
-                )
-                if value is None:
-                    out["rowval"] = None  # non-struct tombstone (struct
-                    # tables filtered nulls before this stage)
-                elif v_conv is None:
-                    if value_serde.kind == "rawjson":
-                        out["rowval"] = split_frame(bytes(body))[1].decode("utf-8")
-                    else:
-                        out["rowval"] = _decode_primitive_py(
-                            bytes(body), value_serde.kind
-                        )
-                else:
-                    row = (
-                        v_conv(body, writers, rec.key)
-                        if value_serde.tag
-                        else v_conv(body, writers)
-                    )
-                    if value_is_struct:
-                        for f, v in zip(v_st.fields, row):
-                            out[f.name] = _dictify(v, f.dataType)
-                    else:
-                        out["rowval"] = _dictify(row[0], v_st.fields[0].dataType)
-            except Exception:
-                for f in v_st.fields if value_is_struct else ():
-                    out[f.name] = None
-                out["corrupt"] = True
-            out["ksi"] = None if rec.key is None else split_frame(bytes(rec.key))[0]
-            out["vsi"] = None if value is None else split_frame(bytes(value))[0]
-            for m in ("topic", "partition", "offset", "timestamp", "timestampType", "headers"):
-                out[m] = getattr(rec, m)
-            return out
-        if want_rowkey:
-            out["rowkey"] = _decode_key(
-                rec.key, k_conv, k_st, k_flat, writers, skip_bytes, key_serde.kind
-            )
-        if v_conv is None:
-            if value is None:
-                out["rowval"] = None
-            elif value_serde.kind == "rawjson":
-                body = bytes(value[skip_bytes:] if skip_bytes else value)
-                out["rowval"] = split_frame(body)[1].decode("utf-8")
-            else:
-                body = bytes(value[skip_bytes:] if skip_bytes else value)
-                out["rowval"] = _decode_primitive_py(body, value_serde.kind)
-        else:
-            body = value[skip_bytes:] if skip_bytes else value
-            if body is None:
-                out["rowval"] = None
-            else:
-                if value_serde.tag:
-                    row = v_conv(body, writers, rec.key)
-                else:
-                    row = v_conv(body, writers)
-                if value_is_struct:
-                    for f, v in zip(v_st.fields, row):
-                        out[f.name] = _dictify(v, f.dataType)
-                else:
-                    out["rowval"] = _dictify(row[0], v_st.fields[0].dataType)
-        out["ksi"] = None if rec.key is None else split_frame(bytes(rec.key))[0]
-        out["vsi"] = None if value is None else split_frame(bytes(value))[0]
-        for m in ("topic", "partition", "offset", "timestamp", "timestampType", "headers"):
-            out[m] = getattr(rec, m)
-        return out
+    tag_row = value_nulls = None
+    if tag:
+        # built once per plan: each tag-mode record starts from a copy
+        tag_row = {f.name: None for f in out_fields}
+        tag_row["corrupt"] = False
+        value_nulls = {f.name: None for f in v_st.fields} if value_is_struct else {}
+    columns = [f.name for f in out_schema.fields]
+    meta_names = [f.name for f in _frame_meta_fields()]
 
     def decode_batches(batches):
         import pandas as pd
@@ -649,18 +526,61 @@ def decode_topic(
                 value = rec.value
                 if value_is_struct and value is None:
                     continue
-                if on_error == "skip":
+                # on_error only decides what a raising key or value decode
+                # does: 'fail' re-raises, 'skip' drops the record, 'tag'
+                # nulls that part's data fields and sets corrupt (key and
+                # value decode independently, so a poison value keeps its
+                # identifying rowkey, and vice versa)
+                out: dict[str, Any] = dict(tag_row) if tag else {}
+                if want_rowkey:
                     try:
-                        rows.append(_decode_one(rec, value, writers))
+                        out["rowkey"] = _decode_key(
+                            rec.key, k_conv, k_st, k_flat, writers, skip_bytes,
+                            key_serde.kind,
+                        )
                     except Exception:
-                        continue  # poison record: drop, keep the job alive
-                elif on_error == "tag":
-                    rows.append(_decode_one(rec, value, writers, tag=True))
-                else:
-                    rows.append(_decode_one(rec, value, writers))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            ) if rows else pd.DataFrame(columns=[f.name for f in out_schema.fields])
+                        if on_error == "fail":
+                            raise
+                        if on_error == "skip":
+                            continue
+                        out["corrupt"] = True
+                try:
+                    if value is None:
+                        # non-struct tombstone (struct tables dropped theirs above)
+                        out["rowval"] = None
+                    elif v_conv is None:
+                        body = bytes(value[skip_bytes:] if skip_bytes else value)
+                        if value_serde.kind == "rawjson":
+                            out["rowval"] = split_frame(body)[1].decode("utf-8")
+                        else:
+                            out["rowval"] = _decode_primitive_py(
+                                body, value_serde.kind
+                            )
+                    else:
+                        body = value[skip_bytes:] if skip_bytes else value
+                        row = (
+                            v_conv(body, writers, rec.key)
+                            if value_serde.tag
+                            else v_conv(body, writers)
+                        )
+                        if value_is_struct:
+                            for f, v in zip(v_st.fields, row):
+                                out[f.name] = _dictify(v, f.dataType)
+                        else:
+                            out["rowval"] = _dictify(row[0], v_st.fields[0].dataType)
+                except Exception:
+                    if on_error == "fail":
+                        raise
+                    if on_error == "skip":
+                        continue
+                    out.update(value_nulls)
+                    out["corrupt"] = True
+                out["ksi"] = None if rec.key is None else split_frame(bytes(rec.key))[0]
+                out["vsi"] = None if value is None else split_frame(bytes(value))[0]
+                for m in meta_names:
+                    out[m] = getattr(rec, m)
+                rows.append(out)
+            yield pd.DataFrame(rows, columns=columns)
 
     decoded = df.mapInPandas(decode_batches, out_schema)
     data_cols = [f.name for f in out_fields]

@@ -7,7 +7,7 @@ fixture tests miss."""
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from kwack_spark.schema import avro as avro_schema
@@ -174,6 +174,7 @@ def test_jsonschema_convert_property(s, i, d, b, arr, attrs, iors, opt):
     ch=st.sampled_from([1, 3]),
     seed=st.integers(0, 2**31 - 1),
 )
+@example(w=2, h=2, ch=3, seed=1282564844)  # mean error 56.8, see the bound
 def test_jpeg_roundtrip_property(w, h, ch, seed):
     """For ANY size (incl. non-multiples of 8) and content, encode->decode
     returns the exact dimensions/channels and pixels within quantization
@@ -195,7 +196,20 @@ def test_jpeg_roundtrip_property(w, h, ch, seed):
     assert (dw, dh, dch) == (w, h, ch)
     assert pix.shape == (h, w * ch)
     err = np.abs(pix.astype(int) - px)
-    assert err.mean() <= 55
+    # The mean-error bound is sample-size-aware, like the lane tolerance
+    # below.  Sub-block noise images legitimately err a lot: an independent
+    # float model of the same pipeline (RGB->YCbCr, edge-replicated 8x8
+    # padding, orthonormal FDCT, Annex K quality-50 quantization, IDCT,
+    # YCbCr->RGB) gives 56.9 for w=h=2/ch=3/seed=1282564844, where the codec
+    # gives 56.8.  The image's mean error is an average over n = w*h pixels:
+    # over noise draws from 1x1 to 24x24, 1 or 3 channels, it centres at
+    # <= 36 and one pixel's error has sd <= 21, so the 6-sigma bound is
+    # 36 + 6*21/sqrt(n) — 99 at 2x2, 52 at 8x8, 41 at 24x24 (the largest
+    # draw seen in 1,500 per size was 72 at 2x2 and 68 at 3x2).  A
+    # misaligned decode errs ~85 (the mean |a - b| of two uniform bytes), so
+    # the bound catches it from 7 pixels up; below that, the dimensions and
+    # lane means are the check.
+    assert err.mean() <= 36 + 126 / math.sqrt(w * h)
     for c in range(ch):
         lane_o = px[:, c::ch].mean()
         lane_d = pix[:, c::ch].astype(int).mean()

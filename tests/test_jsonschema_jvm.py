@@ -1,11 +1,11 @@
 """Gates + execution for the JVM from_json fast path
 (sources/jsonschema_jvm.py).
 
-Unlike the from_avro path (jar absent here), from_json is core Spark — the
-fast path actually EXECUTES in this environment, so besides the pure gate
-logic these tests pin that (a) eligible plain-struct topics really decode
-through from_json (plan-checked), and (b) the results are identical to the
-Python decode stage on the same frames."""
+from_json is core Spark — the fast path EXECUTES without any extra module,
+so besides the pure gate logic these tests pin that (a) eligible
+plain-struct topics really decode through from_json (plan-checked), and
+(b) the results are identical to the Python decode stage on the same
+frames."""
 
 import json
 

@@ -452,3 +452,74 @@ def test_on_error_rejects_unknown_mode(spark):
     df = make_frames(spark, [b"x"])
     with _pt.raises(ValueError, match="'tag'"):
         ks.decode_topic(df, "t1", Serde(kind="string"), on_error="quarantine")
+
+
+AVRO_PLAIN = {
+    "type": "record",
+    "name": "E",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "name", "type": ["null", "string"], "default": None},
+        {"name": "tags", "type": {"type": "array", "items": "string"}},
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+    ],
+}
+
+JSON_PLAIN = {
+    "type": "object",
+    "properties": {"id": {"type": "integer"}, "name": {"type": "string"}},
+}
+
+
+@pytest.mark.parametrize("on_error", ["fail", "skip", "tag"])
+def test_on_error_modes_agree_on_clean_input(spark, on_error):
+    """On clean input every on_error mode yields the same rows — 'tag' only
+    adds corrupt=false — so the mode changes nothing but what a raising
+    decode does.  Avro (explicit schema, Python stage in every mode) and
+    plain-struct JSON Schema ('fail' takes the JVM from_json path, 'skip'
+    and 'tag' the Python stage)."""
+    tag = on_error == "tag"
+    avro_frames = [
+        ks.confluent_frame(
+            avro_schema.encode(
+                # unions encode as (branch_index, value): ["null","string"] -> 1
+                {"id": 7 + i, "name": (1, f"x{i}"), "tags": ["a"] * i,
+                 "ts": 1_700_000_000_000_000},
+                AVRO_PLAIN,
+            ),
+            3,
+        )
+        for i in range(2)
+    ]
+    out = ks.decode_topic(
+        make_frames(spark, avro_frames), "t1",
+        Serde(kind="avro", schema_str=json.dumps(AVRO_PLAIN)),
+        row_attributes=("vsi", "off"), on_error=on_error,
+    )
+    assert out.columns == ["id", "name", "tags", "ts"] + ["corrupt"] * tag + ["rowinfo"]
+    rows = sorted(out.collect(), key=lambda r: r.rowinfo.off)
+    assert [(r.id, r.name, r.tags, r.rowinfo.vsi, r.rowinfo.off) for r in rows] == [
+        (7, "x0", [], 3, 0),
+        (8, "x1", ["a"], 3, 1),
+    ]
+    assert rows[0].ts == rows[1].ts == datetime.datetime.fromtimestamp(1_700_000_000)
+    if tag:
+        assert [r.corrupt for r in rows] == [False, False]
+
+    json_frames = [
+        ks.confluent_frame(json.dumps({"id": i, "name": f"n{i}"}).encode(), 5)
+        for i in range(2)
+    ]
+    out = ks.decode_topic(
+        make_frames(spark, json_frames), "t1",
+        Serde(kind="jsonschema", schema_str=json.dumps(JSON_PLAIN)),
+        row_attributes=("vsi", "off"), on_error=on_error,
+    )
+    assert out.columns == ["id", "name"] + ["corrupt"] * tag + ["rowinfo"]
+    rows = sorted(out.collect(), key=lambda r: r.rowinfo.off)
+    assert [(r.id, r.name, r.rowinfo.vsi, r.rowinfo.off) for r in rows] == [
+        (0, "n0", 5, 0),
+        (1, "n1", 5, 1),
+    ]
+    if tag:
+        assert [r.corrupt for r in rows] == [False, False]

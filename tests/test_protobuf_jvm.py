@@ -1,19 +1,13 @@
-"""Gates for the JVM from_protobuf fast path (sources/protobuf_jvm.py).
+"""Registry-resolved Protobuf topics decode on the Python stage.
 
-The spark-protobuf module is absent in this environment (like spark-avro),
-so the fast path can never ACTIVATE here — these tests pin the gate logic
-(pure), the well-formedness of the binary FileDescriptorSet the module
-builds (round-tripped through this repo's OWN wire decoder against a
-descriptor.proto schema), and that decode_topic falls back to the Python
-stage with identical results."""
+There is no JVM from_protobuf path: Protobuf values always decode through
+decode_topic's Python per-record body, with repeated, enum and nested-message
+fields and rowinfo intact."""
 
-import pytest
-
-from kwack_spark.config import Serde, parse_serde
+from kwack_spark.config import parse_serde
 from kwack_spark.schema import protobuf as proto_schema
 from kwack_spark.schema.registry import MockSchemaRegistry
 from kwack_spark.sources import kafka as ks
-from kwack_spark.sources import protobuf_jvm
 
 DEMO = """
 syntax = "proto3";
@@ -30,174 +24,11 @@ message Event {
 """
 
 
-def _serde(schema: str, **kw) -> Serde:
-    # "proto" is the canonical kind resolve_serde produces for PROTOBUF —
-    # the gate must be tested with the kind real code paths emit (r05 ADVICE)
-    return Serde(kind="proto", schema_str=schema, **kw)
-
-
-def test_eligible_simple_message():
-    ok, why = protobuf_jvm.eligible(_serde(DEMO), "t", None)
-    assert ok, why
-
-
-@pytest.mark.parametrize(
-    "snippet,frag",
-    [
-        ("message A { int64 x = 1; } message B { int64 y = 1; }", "multiple top-level"),
-        ("message A { uint64 x = 1; }", "unsigned"),
-        ("message A { fixed32 x = 1; }", "unsigned"),
-        ("message A { map<string, int64> m = 1; }", "map"),
-        ("message A { oneof v { int64 i = 1; string s = 2; } }", "oneof"),
-        ("message A { optional int64 x = 1; }", "optional"),
-        (
-            "message A { google.protobuf.Timestamp t = 1; }",
-            "well-known",
-        ),
-        ("message A { Missing m = 1; }", "imported or undeclared"),
-        ("message A { A again = 1; }", "recursive"),
-    ],
-)
-def test_ineligible_shapes(snippet, frag):
-    ok, why = protobuf_jvm.eligible(
-        _serde(f'syntax = "proto3"; {snippet}'), "t", None
-    )
-    assert not ok and frag in why, why
-
-
-def test_ineligible_tag_and_refs():
-    ok, why = protobuf_jvm.eligible(_serde(DEMO, tag=("a", "b")), "t", None)
-    assert not ok and "tag" in why
-    ok, why = protobuf_jvm.eligible(
-        _serde(DEMO, refs=(("x.proto", "message X {}"),)), "t", None
-    )
-    assert not ok and "references" in why
-
-
-def test_evolution_gate_on_subject_versions():
-    reg = MockSchemaRegistry()
-    reg.register("t-value", DEMO, "PROTOBUF")
-    ok, why = protobuf_jvm.eligible(_serde(DEMO), "t", reg)
-    assert ok, why
-    evolved = DEMO.replace("string name = 2;", "string name = 2; int64 extra = 9;")
-    reg.register("t-value", evolved, "PROTOBUF")
-    ok, why = protobuf_jvm.eligible(_serde(DEMO), "t", reg)
-    assert not ok and "evolution" in why
-
-
-def test_eligible_registry_errors_fall_back():
-    class BoomRegistry:
-        def subject_versions(self, subject):
-            raise OSError("connection refused")
-
-    ok, why = protobuf_jvm.eligible(_serde(DEMO), "t", BoomRegistry())
-    assert not ok and "registry check failed" in why
-
-
-# descriptor.proto subset, expressed non-recursively (this repo's resolver
-# rejects recursive messages; one nesting level is all the fixture needs)
-_DESCRIPTOR_PROTO = """
-syntax = "proto3";
-message FieldDescriptorProto {
-  string name = 1;
-  int32 number = 3;
-  int32 label = 4;
-  int32 type = 5;
-  string type_name = 6;
-}
-message EnumValueDescriptorProto { string name = 1; int32 number = 2; }
-message EnumDescriptorProto {
-  string name = 1;
-  repeated EnumValueDescriptorProto value = 2;
-}
-message InnerDescriptorProto {
-  string name = 1;
-  repeated FieldDescriptorProto field = 2;
-  repeated EnumDescriptorProto enum_type = 4;
-}
-message DescriptorProto {
-  string name = 1;
-  repeated FieldDescriptorProto field = 2;
-  repeated InnerDescriptorProto nested_type = 3;
-  repeated EnumDescriptorProto enum_type = 4;
-}
-message FileDescriptorProto {
-  string name = 1;
-  string package = 2;
-  repeated DescriptorProto message_type = 4;
-  repeated EnumDescriptorProto enum_type = 5;
-  string syntax = 12;
-}
-message FileDescriptorSet { repeated FileDescriptorProto file = 1; }
-"""
-
-
-def test_descriptor_set_roundtrips_through_own_wire_decoder():
-    """The FileDescriptorSet bytes handed to from_protobuf decode back (via
-    this repo's wire codec + a descriptor.proto schema) to exactly the
-    declared structure — names, numbers, descriptor type enums, fully
-    qualified type_names."""
-    root = proto_schema.parse_proto(DEMO)
-    ds = protobuf_jvm.build_descriptor_set(root)
-    droot = proto_schema.parse_proto(_DESCRIPTOR_PROTO)
-    fds = proto_schema.decode_message(
-        ds, proto_schema.resolve(droot, "FileDescriptorSet")
-    )
-    (file,) = fds["file"]
-    assert file["name"] == "kwack_topic.proto"
-    assert file["package"] == "demo"
-    assert file["syntax"] == "proto3"
-    (msg,) = file["message_type"]
-    assert msg["name"] == "Event"
-    by_name = {f["name"]: f for f in msg["field"]}
-    assert by_name["id"]["number"] == 1 and by_name["id"]["type"] == 3  # INT64
-    assert by_name["name"]["type"] == 9  # STRING
-    assert by_name["ns"]["type"] == 5 and by_name["ns"]["label"] == 3  # rep INT32
-    assert by_name["color"]["type"] == 14  # ENUM
-    assert by_name["color"]["type_name"] == ".demo.Event.Color"
-    assert by_name["inner"]["type"] == 11  # MESSAGE
-    assert by_name["inner"]["type_name"] == ".demo.Event.Inner"
-    (nested,) = msg["nested_type"]
-    assert nested["name"] == "Inner"
-    assert nested["field"][0]["name"] == "s" and nested["field"][0]["type"] == 9
-    (enum,) = msg["enum_type"]
-    assert enum["name"] == "Color"
-    assert [(v["name"], v["number"]) for v in enum["value"]] == [
-        ("RED", 0),
-        ("BLUE", 1),
-    ]
-
-
-def test_default_message_name_qualifies_package():
-    assert (
-        protobuf_jvm.default_message_name(proto_schema.parse_proto(DEMO))
-        == "demo.Event"
-    )
-    assert (
-        protobuf_jvm.default_message_name(
-            proto_schema.parse_proto("message M { int64 x = 1; }")
-        )
-        == "M"
-    )
-
-
-def test_available_probe_is_false_and_memoized_here(spark):
-    """No spark-protobuf jar in this environment: the probe must come back
-    False (not raise), and memoize per session."""
-    assert protobuf_jvm.available(spark) is False
-    assert protobuf_jvm._AVAILABLE[spark] is False
-    assert protobuf_jvm.available(spark) is False
-
-
 def test_decode_topic_falls_back_to_python_path(spark):
-    """With the jar absent, an ELIGIBLE schema still decodes correctly via
-    the Python stage — gate failure changes the physical plan, never the
-    result."""
     from tests.test_kafka_decode import make_frames
 
     reg = MockSchemaRegistry()
     sid = reg.register("tp1-value", DEMO, "PROTOBUF")
-    assert protobuf_jvm.eligible(_serde(DEMO), "tp1", reg)[0]
     desc = proto_schema.resolve(proto_schema.parse_proto(DEMO))
     payload = b"\x00" + proto_schema.encode_message(
         {"id": 7, "name": "x", "ns": [1, 2], "color": "BLUE", "inner": {"s": "y"}},
@@ -214,26 +45,3 @@ def test_decode_topic_falls_back_to_python_path(spark):
     assert row.id == 7 and row.name == "x" and list(row.ns) == [1, 2]
     assert row.color == "BLUE" and row.inner.s == "y"
     assert row.rowinfo.vsi == sid and row.rowinfo.off == 0
-
-
-def test_decode_value_col_rejects_skip():
-    with pytest.raises(ValueError, match="fail"):
-        protobuf_jvm.decode_value_col(None, DEMO, "skip")
-
-
-def test_eligible_accepts_parse_serde_kind():
-    """The gate must accept exactly what parse_serde/resolve_serde produce
-    (kind 'proto') — r05 ADVICE: a 'protobuf' literal made the JVM fast
-    path unreachable for every real serde while tests masked it with a
-    hand-built kind no production path emits."""
-    s = parse_serde(f"proto:{DEMO}")
-    assert s.kind == "proto"
-    ok, why = protobuf_jvm.eligible(s, "t", None)
-    assert ok, why
-
-
-def test_eligible_rejects_legacy_protobuf_kind():
-    ok, why = protobuf_jvm.eligible(
-        Serde(kind="protobuf", schema_str=DEMO), "t", None
-    )
-    assert not ok and "serde kind" in why

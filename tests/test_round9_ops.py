@@ -1,8 +1,8 @@
 """Round-9 operator pins.
 
 - _persist_rotating eviction reorder: after an EXTERNAL cache eviction
-  (spark.catalog.clearCache(), as bench.py and tools/scale_stress.py do
-  between reps), re-rotating the SAME plan must leave the returned frame
+  (spark.catalog.clearCache(), as tools/scale_stress.py does between
+  reps), re-rotating the SAME plan must leave the returned frame
   cached.  The r08 ordering (persist new, then unpersist prev) destroyed
   the fresh entry because Spark's CacheManager uncaches by plan equality
   — the SimHash64 family then ran cacheless (2.3 s/rep -> 8.3 s/rep).

@@ -31,7 +31,7 @@ def main() -> None:
     qmap = query_map()
     sf_dir = "/root/testdata/sf0.1"
 
-    # warmup as bench.py
+    # warmup: one parquet scan + aggregate, then a Python-worker stage
     warm = load_table(spark, sf_dir, "lineitem").limit(10000)
     warm.groupBy("l_returnflag").agg(
         F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("s")
