@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+value-hash).
 
 All real implementations live in ``kwack_spark/``; this file is a thin shim
 over the query registry (kwack_spark/plans/registry.py).

@@ -1,10 +1,10 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Beyond-parity operators for a training-data pipeline: media are opaque
-``binary`` payload columns with typed metadata, processed by Arrow-batched
-mapInPandas stages.  The container has no media libraries, but two decode
-kernels are REAL anyway because their formats are pure byte arithmetic +
-stdlib compression: WAV/PCM16 (``decode_wav_features``) and PNG
+``binary`` payload columns with typed metadata, processed by one per-row
+``mapInArrow`` stage (``_per_row``).  No media library is used, but two
+decode kernels are REAL anyway because their formats are pure byte
+arithmetic + stdlib compression: WAV/PCM16 (``decode_wav_features``) and PNG
 (``decode_png_features`` / ``decode_image`` — zlib inflate, CRC-checked
 chunk walk, all five scanline unfilters).  Formats that genuinely need a
 codec library (JPEG's DCT, video) are sniffed and emit NULL features with
@@ -27,11 +27,43 @@ pattern: project metadata/features first, never shuffle raw bytes.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
+
+
+def _per_row(df: DataFrame, in_cols, row_fn, out_schema: ST.StructType) -> DataFrame:
+    """The one Python stage every media kernel here runs in: a narrow
+    ``mapInArrow`` pass over ``df.select(*in_cols)``.  ``row_fn(*values)``
+    gets each row's Python values (binary columns arrive as ``bytes``) and
+    yields zero or more output tuples in ``out_schema`` order, so one
+    contract covers 1->1 kernels, skipping a malformed row and fanning a
+    video out to its keyframes.  Output batches are built against the Arrow
+    form of ``out_schema``, so NULLs survive in any column type.
+
+    ``row_fn`` and everything it closes over are pickled with the stage and
+    unpickled once per task: a closed-over ``DecodeMemo`` or cache is
+    per-task state that starts empty in each task and dies with it."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(out_schema)
+
+    def stage(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            cols = [[] for _ in schema]
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
+                for out in row_fn(*values):
+                    for col, v in zip(cols, out, strict=True):
+                        col.append(v)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                schema=schema,
+            )
+
+    return df.select(*in_cols).mapInArrow(stage, out_schema)
+
 
 IMAGE_META_SCHEMA = ST.StructType(
     [
@@ -109,39 +141,23 @@ def decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     explicitly undecoded.  For the full per-channel feature pass over PNGs
     use ``decode_png_features``."""
 
-    def kernel(batches) -> Iterator:
-        import pandas as pd
-
-        cols = [id_col, "width", "height", "channels", "format"]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(getattr(rec, payload_col))
-                if payload.startswith(_PNG_SIG):
-                    parsed = _png_decode(payload)
-                    vals = (
-                        (parsed[0], parsed[1], parsed[2], "png")
-                        if parsed is not None
-                        else (None, None, None, "png")
-                    )
-                elif payload[:3] == b"\xff\xd8\xff":
-                    dims = _jpeg_dimensions(payload)
-                    vals = (
-                        (dims[0], dims[1], dims[2], "jpeg")
-                        if dims is not None
-                        else (None, None, None, "jpeg")
-                    )
-                elif payload[:4] == b"RIFF":
-                    vals = (None, None, None, "riff")
-                else:
-                    vals = (None, None, None, "unknown")
-                rows.append((getattr(rec, id_col),) + vals)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(i, payload):
+        dims = None
+        if payload.startswith(_PNG_SIG):
+            fmt, parsed = "png", _png_decode(payload)
+            dims = parsed[:3] if parsed is not None else None
+        elif payload[:3] == b"\xff\xd8\xff":
+            fmt, dims = "jpeg", _jpeg_dimensions(payload)
+        elif payload[:4] == b"RIFF":
+            fmt = "riff"
+        else:
+            fmt = "unknown"
+        yield (i, *(dims or (None, None, None)), fmt)
 
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(IMAGE_META_SCHEMA.fields)
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def fake_decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
@@ -149,31 +165,14 @@ def fake_decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame
     payload's first bytes (b0*256+b1, b2*256+b3, 1+b4%4).  Arithmetic only —
     reproducible in any engine, so the pipeline is oracle-checkable."""
 
-    def kernel(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(getattr(rec, payload_col))
-                b = payload[:5].ljust(5, b"\x00")
-                rows.append(
-                    {
-                        id_col: getattr(rec, id_col),
-                        "width": b[0] * 256 + b[1],
-                        "height": b[2] * 256 + b[3],
-                        "channels": 1 + b[4] % 4,
-                        "format": "fake",
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "channels", "format"]
-            )
+    def row(i, payload):
+        b = payload[:5].ljust(5, b"\x00")
+        yield i, b[0] * 256 + b[1], b[2] * 256 + b[3], 1 + b[4] % 4, "fake"
 
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(IMAGE_META_SCHEMA.fields)
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def sample_frames(
@@ -212,24 +211,14 @@ def resize_bytes(
     shape — vectorized numpy over Arrow batches, narrow, no payload shuffle —
     is what this pins down.  Output: (id, orig_len, resized binary)."""
     import numpy as np
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, lens, outs = [], [], []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(getattr(rec, payload_col))
-                n = len(payload)
-                if n == 0:
-                    out = b""
-                else:
-                    arr = np.frombuffer(payload, dtype=np.uint8)
-                    idx = (np.arange(target, dtype=np.int64) * n) // target
-                    out = arr[idx].tobytes()
-                ids.append(getattr(rec, id_col))
-                lens.append(n)
-                outs.append(out)
-            yield pd.DataFrame({id_col: ids, "orig_len": lens, "resized": outs})
+    def row(i, payload):
+        n = len(payload)
+        if n == 0:
+            yield i, n, b""
+            return
+        idx = (np.arange(target, dtype=np.int64) * n) // target
+        yield i, n, np.frombuffer(payload, dtype=np.uint8)[idx].tobytes()
 
     out_schema = ST.StructType(
         [
@@ -238,7 +227,7 @@ def resize_bytes(
             ST.StructField("resized", ST.BinaryType()),
         ]
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def byte_histogram_features(
@@ -250,25 +239,15 @@ def byte_histogram_features(
     numpy (np.bincount) per Arrow batch — the stand-in for an embedding or
     perceptual-feature kernel with the same narrow plan shape."""
     import numpy as np
-    import pandas as pd
 
     width = 256 // bins
 
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, nb, mean, hist = [], [], [], []
-            for rec in pdf.itertuples(index=False):
-                payload = bytes(getattr(rec, payload_col))
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                n = len(arr)
-                ids.append(getattr(rec, id_col))
-                nb.append(n)
-                mean.append(float(int(arr.sum(dtype=np.int64))) / n if n else 0.0)
-                counts = np.bincount(arr // width, minlength=bins)[:bins]
-                hist.append("[" + ",".join(str(int(c)) for c in counts) + "]")
-            yield pd.DataFrame(
-                {id_col: ids, "n_bytes": nb, "mean_byte": mean, "hist": hist}
-            )
+    def row(i, payload):
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        n = len(arr)
+        mean = float(int(arr.sum(dtype=np.int64))) / n if n else 0.0
+        counts = np.bincount(arr // width, minlength=bins)[:bins]
+        yield i, n, mean, "[" + ",".join(str(int(c)) for c in counts) + "]"
 
     out_schema = ST.StructType(
         [
@@ -278,7 +257,7 @@ def byte_histogram_features(
             ST.StructField("hist", ST.StringType()),
         ]
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 WAV_FEATURES_SCHEMA = ST.StructType(
@@ -310,33 +289,14 @@ def synth_wav_pcm16(
     square wave itself is never 0), the fixture for the trim kernel."""
     import struct
 
-    import pandas as pd
-
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, outs = [], []
-            for rec in pdf.itertuples(index=False):
-                i = int(getattr(rec, id_col))
-                amp = i % 1000 + 1
-                frames = b"".join(
-                    struct.pack("<h", amp if k % 2 == 0 else -amp)
-                    for k in range(n_samples)
-                )
-                if silence:
-                    frames = (
-                        b"\x00\x00" * (i % 97) + frames + b"\x00\x00" * (i % 53)
-                    )
-                fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-                junk = b"JUNKJUNK"  # LIST chunk body a parser must skip
-                chunks = (
-                    b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"LIST" + struct.pack("<I", len(junk)) + junk
-                    + b"data" + struct.pack("<I", len(frames)) + frames
-                )
-                payload = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                ids.append(i)
-                outs.append(payload)
-            yield pd.DataFrame({id_col: ids, "payload": outs})
+    def row(i):
+        amp = i % 1000 + 1
+        frames = b"".join(
+            struct.pack("<h", amp if k % 2 == 0 else -amp) for k in range(n_samples)
+        )
+        if silence:
+            frames = b"\x00\x00" * (i % 97) + frames + b"\x00\x00" * (i % 53)
+        yield i, _wav_pcm16_bytes(frames, rate)
 
     out_schema = ST.StructType(
         [
@@ -344,7 +304,23 @@ def synth_wav_pcm16(
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return df.select(id_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col], row, out_schema)
+
+
+def _wav_pcm16_bytes(frames: bytes, rate: int) -> bytes:
+    """The one RIFF/WAVE writer behind the WAV fixtures: mono PCM16
+    ``fmt ``, then a junk ``LIST`` chunk a parser must skip, then ``data``
+    holding ``frames`` (little-endian int16 samples)."""
+    import struct
+
+    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+    junk = b"JUNKJUNK"
+    chunks = (
+        b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"LIST" + struct.pack("<I", len(junk)) + junk
+        + b"data" + struct.pack("<I", len(frames)) + frames
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 def _riff_chunks(buf: bytes, pos: int, end: int):
@@ -369,8 +345,8 @@ def _riff_chunks(buf: bytes, pos: int, end: int):
 def _wav_pcm16_parse(payload: bytes):
     """Chunk-walk a RIFF/WAVE payload and return ``(rate, channels,
     samples)`` with samples the raw interleaved int16 array, or None for
-    anything malformed / non-PCM16.  Shared by the feature and fingerprint
-    kernels — one copy of the byte-level parser."""
+    anything malformed / non-PCM16.  The one copy of the byte-level parser:
+    the feature, fingerprint, trim and window kernels all read through it."""
     import struct
 
     import numpy as np
@@ -405,12 +381,11 @@ def decode_wav_features(df: DataFrame, payload_col: str, id_col: str) -> DataFra
     batch (the multimodal analogue of decode_topic's on_error='skip').
     Same narrow Arrow-batched plan shape as every kernel in this module."""
     import numpy as np
-    import pandas as pd
 
     def parse(payload: bytes):
         parsed = _wav_pcm16_parse(payload)
         if parsed is None:
-            return None
+            return (None,) * 6
         rate, ch, s = parsed
         n = len(s) // ch
         x = s.astype(np.float64)
@@ -418,20 +393,13 @@ def decode_wav_features(df: DataFrame, payload_col: str, id_col: str) -> DataFra
         peak = int(np.max(np.abs(x))) if len(s) else 0
         return (rate, ch, n, float(n) / rate * 1000.0, rms, peak)
 
-    def kernel(batches) -> Iterator:
-        cols = [id_col] + [f.name for f in WAV_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                parsed = parse(bytes(getattr(rec, payload_col)))
-                vals = parsed if parsed is not None else (None,) * 6
-                rows.append((getattr(rec, id_col),) + vals)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(i, payload):
+        yield (i, *parse(payload))
 
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(WAV_FEATURES_SCHEMA.fields)
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def synth_wav_am(
@@ -456,47 +424,20 @@ def synth_wav_am(
     nonzero variants in exactly 2.  A per-(id, window) jitter of
     0..7 < step/2 keeps every payload distinct without ever flipping a
     delta sign."""
-    import struct
-
     import numpy as np
-    import pandas as pd
 
-    signs = None  # built once per executor below (length depends on args)
-
-    def kernel(batches) -> Iterator:
-        nonlocal signs
-        total = n_windows * window
-        if signs is None:
-            signs = np.tile(np.array([1, -1], np.int64), total // 2 + 1)[:total]
-        fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-        junk = b"JUNKJUNK"
-        for pdf in batches:
-            ids, outs = [], []
-            for rec in pdf.itertuples(index=False):
-                d = int(getattr(rec, id_col))
-                g, v = d % 128, (d // 128) % 4
-                bits = np.array(
-                    [(g >> (j % 7)) & 1 for j in range(n_windows - 1)], np.int64
-                )
-                if v > 0:
-                    bits[v - 1] ^= 1
-                steps = np.concatenate(([0], np.where(bits == 1, 1, -1)))
-                walk = np.cumsum(steps)  # s_w, |s_w| <= 64
-                jitter = (d * (np.arange(n_windows, dtype=np.int64) + 1)) % 8
-                amps = 2000 + 24 * walk + jitter  # 464..3543, fits int16
-                samples = (np.repeat(amps, window) * signs).astype("<i2")
-                frames = samples.tobytes()
-                chunks = (
-                    b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"LIST" + struct.pack("<I", len(junk)) + junk
-                    + b"data" + struct.pack("<I", len(frames)) + frames
-                )
-                payload = (
-                    b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                )
-                ids.append(d)
-                outs.append(payload)
-            yield pd.DataFrame({id_col: ids, "payload": outs})
+    def row(d):
+        g, v = d % 128, (d // 128) % 4
+        bits = np.array([(g >> (j % 7)) & 1 for j in range(n_windows - 1)], np.int64)
+        if v > 0:
+            bits[v - 1] ^= 1
+        steps = np.concatenate(([0], np.where(bits == 1, 1, -1)))
+        walk = np.cumsum(steps)  # s_w, |s_w| <= 64
+        jitter = (d * (np.arange(n_windows, dtype=np.int64) + 1)) % 8
+        amps = 2000 + 24 * walk + jitter  # 464..3543, fits int16
+        samples = np.repeat(amps, window)
+        samples[1::2] *= -1  # square wave: the sign flips every sample
+        yield d, _wav_pcm16_bytes(samples.astype("<i2").tobytes(), rate)
 
     out_schema = ST.StructType(
         [
@@ -504,7 +445,7 @@ def synth_wav_am(
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return df.select(id_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col], row, out_schema)
 
 
 def audio_fingerprint64(
@@ -527,34 +468,29 @@ def audio_fingerprint64(
     ``dedup.fingerprint_hamming_pairs``.  Scale shape: one narrow
     Arrow-batched pass, 8 bytes/clip leave it — payloads never shuffle."""
     import numpy as np
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, fps = [], []
-            for rec in pdf.itertuples(index=False):
-                parsed = _wav_pcm16_parse(bytes(getattr(rec, payload_col)))
-                ids.append(getattr(rec, id_col))
-                if parsed is None:
-                    fps.append(None)
-                    continue
-                _rate, ch, s = parsed
-                if ch != 1 or len(s) < 65 * window:
-                    fps.append(None)
-                    continue
-                x = s[: 65 * window].astype(np.float64)
-                # RMS per window: the fixture's per-window square wave makes
-                # each value an exact integer (sqrt of a perfect square);
-                # real audio just gets honest floats
-                e = np.sqrt(np.mean(x.reshape(65, window) ** 2, axis=1))
-                fp = 0
-                for j in range(64):
-                    if e[j + 1] > e[j]:
-                        fp |= 1 << j
-                if fp >= 1 << 63:
-                    fp -= 1 << 64
-                fps.append(fp)
-            yield pd.DataFrame({id_col: ids, "fp": pd.array(fps, dtype="Int64")})
+    def fingerprint(payload: bytes):
+        parsed = _wav_pcm16_parse(payload)
+        if parsed is None:
+            return None
+        _rate, ch, s = parsed
+        if ch != 1 or len(s) < 65 * window:
+            return None
+        x = s[: 65 * window].astype(np.float64)
+        # RMS per window: the fixture's per-window square wave makes each
+        # value an exact integer (sqrt of a perfect square); real audio just
+        # gets honest floats
+        e = np.sqrt(np.mean(x.reshape(65, window) ** 2, axis=1))
+        fp = 0
+        for j in range(64):
+            if e[j + 1] > e[j]:
+                fp |= 1 << j
+        if fp >= 1 << 63:
+            fp -= 1 << 64
+        return fp
+
+    def row(i, payload):
+        yield i, fingerprint(payload)
 
     out_schema = ST.StructType(
         [
@@ -562,7 +498,7 @@ def audio_fingerprint64(
             ST.StructField("fp", ST.LongType(), True),
         ]
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 PNG_FEATURES_SCHEMA = ST.StructType(
@@ -579,6 +515,19 @@ PNG_FEATURES_SCHEMA = ST.StructType(
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type -> samples per pixel
+
+
+def _rgb_means(w: int, h: int, ch: int, px):
+    """Per-channel (R, G, B) means of a decoded (h, w*ch) pixel matrix by
+    exact integer sum / count (bit-stable); gray and gray+alpha report
+    their one luminance lane as all three.  Shared by the PNG and JPEG
+    feature kernels."""
+    n = w * h
+    means = tuple(
+        float(int(px[:, c::ch].sum(dtype="int64"))) / n
+        for c in range(1 if ch <= 2 else 3)
+    )
+    return means * 3 if ch <= 2 else means
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -741,27 +690,20 @@ def synth_png(df: DataFrame, id_col: str) -> DataFrame:
     images are the constant d%256.  Filter type cycles y%5, so decoding
     exercises every unfilter branch."""
     import numpy as np
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, outs = [], []
-            for rec in pdf.itertuples(index=False):
-                d = int(getattr(rec, id_col))
-                w = 16 if d % 2 == 0 else 6
-                h = 8 if d % 3 == 0 else 16
-                if d % 7 == 0:
-                    px = np.full((h, w), d % 256, np.int32)
-                    ch = 1
-                else:
-                    ch = 3
-                    px = np.zeros((h, w * 3), np.int32)
-                    px[:, 0::3] = d % 256
-                    px[:, 1::3] = (np.arange(w) * 255) // (w - 1)
-                    px[:, 2::3] = ((np.arange(h) * 255) // (h - 1))[:, None]
-                ids.append(d)
-                outs.append(_png_encode(px, ch, split_idat=(d % 11 == 0)))
-            yield pd.DataFrame({id_col: ids, "payload": outs})
+    def row(d):
+        w = 16 if d % 2 == 0 else 6
+        h = 8 if d % 3 == 0 else 16
+        if d % 7 == 0:
+            px = np.full((h, w), d % 256, np.int32)
+            ch = 1
+        else:
+            ch = 3
+            px = np.zeros((h, w * 3), np.int32)
+            px[:, 0::3] = d % 256
+            px[:, 1::3] = (np.arange(w) * 255) // (w - 1)
+            px[:, 2::3] = ((np.arange(h) * 255) // (h - 1))[:, None]
+        yield d, _png_encode(px, ch, split_idat=(d % 11 == 0))
 
     out_schema = ST.StructType(
         [
@@ -769,7 +711,7 @@ def synth_png(df: DataFrame, id_col: str) -> DataFrame:
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return df.select(id_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col], row, out_schema)
 
 
 def decode_png_features(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
@@ -781,37 +723,19 @@ def decode_png_features(df: DataFrame, payload_col: str, id_col: str) -> DataFra
     integer sum / count (bit-stable).  Malformed payloads yield NULL
     features instead of failing the batch.  Same narrow Arrow-batched
     plan as every kernel here; payloads never shuffle."""
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        cols = [id_col] + [f.name for f in PNG_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                parsed = _png_decode(bytes(getattr(rec, payload_col)))
-                if parsed is None:
-                    vals = (None,) * 7
-                else:
-                    w, h, ch, depth, px = parsed
-                    n = w * h
-
-                    def mean_of(c: int) -> float:
-                        lane = px[:, c::ch]
-                        return float(int(lane.sum(dtype="int64"))) / n
-
-                    if ch <= 2:  # gray / gray+alpha: one luminance channel
-                        m = mean_of(0)
-                        means = (m, m, m)
-                    else:
-                        means = (mean_of(0), mean_of(1), mean_of(2))
-                    vals = (w, h, ch, depth) + means
-                rows.append((getattr(rec, id_col),) + vals)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(i, payload):
+        parsed = _png_decode(payload)
+        if parsed is None:
+            yield (i,) + (None,) * 7
+            return
+        w, h, ch, depth, px = parsed
+        yield (i, w, h, ch, depth, *_rgb_means(w, h, ch, px))
 
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(PNG_FEATURES_SCHEMA.fields)
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def _blocky_grid(g: int, v: int):
@@ -849,25 +773,16 @@ def synth_png_blocky(df: DataFrame, id_col: str) -> DataFrame:
     its row's first comparison) — real near-duplicates for the Hamming
     blocking to find, never an all-pairs explosion."""
     import numpy as np
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        cache: dict = {}
-        for pdf in batches:
-            ids, outs = [], []
-            for rec in pdf.itertuples(index=False):
-                d = int(getattr(rec, id_col))
-                g, v = d % 128, (d // 128) % 4
-                png = cache.get((g, v))
-                if png is None:
-                    px = np.repeat(
-                        np.repeat(_blocky_grid(g, v), 2, axis=0), 2, axis=1
-                    )
-                    png = _png_encode(px.astype(np.int32), 1)
-                    cache[(g, v)] = png
-                ids.append(d)
-                outs.append(png)
-            yield pd.DataFrame({id_col: ids, "payload": outs})
+    cache: dict = {}  # per task (see _per_row)
+
+    def row(d):
+        g, v = d % 128, (d // 128) % 4
+        png = cache.get((g, v))
+        if png is None:
+            px = np.repeat(np.repeat(_blocky_grid(g, v), 2, axis=0), 2, axis=1)
+            png = cache[(g, v)] = _png_encode(px.astype(np.int32), 1)
+        yield d, png
 
     out_schema = ST.StructType(
         [
@@ -875,7 +790,7 @@ def synth_png_blocky(df: DataFrame, id_col: str) -> DataFrame:
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return df.select(id_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col], row, out_schema)
 
 
 def _dhash64_from_px(w: int, h: int, ch: int, px):
@@ -957,7 +872,6 @@ def dhash64(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     or wrongly-shaped payloads yield NULL, never a wrong fingerprint.
     Scale shape: one narrow Arrow-batched pass; only 8 bytes/image leave
     it (the payload never shuffles)."""
-    import pandas as pd
 
     def _png_fp(payload: bytes):
         parsed = _png_decode(payload)
@@ -965,17 +879,13 @@ def dhash64(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
             return None
         return _dhash64_from_px(parsed[0], parsed[1], parsed[2], parsed[4])
 
-    def kernel(batches) -> Iterator:
-        # per-task memo on the payload BYTES: dHash is a pure function of
-        # the payload, and duplicate-heavy corpora (the detection target)
-        # re-decode identical images otherwise
-        _fp = DecodeMemo(_png_fp)
-        for pdf in batches:
-            ids, fps = [], []
-            for rec in pdf.itertuples(index=False):
-                ids.append(getattr(rec, id_col))
-                fps.append(_fp(bytes(getattr(rec, payload_col))))
-            yield pd.DataFrame({id_col: ids, "fp": pd.array(fps, dtype="Int64")})
+    # per-task memo on the payload BYTES: dHash is a pure function of the
+    # payload, and duplicate-heavy corpora (the detection target) re-decode
+    # identical images otherwise
+    fp = DecodeMemo(_png_fp)
+
+    def row(i, payload):
+        yield i, fp(payload)
 
     out_schema = ST.StructType(
         [
@@ -983,7 +893,7 @@ def dhash64(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
             ST.StructField("fp", ST.LongType(), True),
         ]
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def drop_payload_early(df: DataFrame, payload_col: str, feature_cols: list[str]) -> DataFrame:
@@ -1718,34 +1628,27 @@ def synth_jpeg(df: DataFrame, id_col: str) -> DataFrame:
     multimodal_jpeg_decode oracle states (constant-block FDCT/IDCT are
     exact; see the codec header comment)."""
     import numpy as np
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, outs = [], []
-            for rec in pdf.itertuples(index=False):
-                d = int(getattr(rec, id_col))
-                w = 16 if d % 2 == 0 else 8
-                h = 8 if d % 3 == 0 else 16
-                if d % 5 == 0:
-                    ch = 1
-                    a = d % 256
-                    b = (9 * d + 77) % 256
-                    px = np.full((h, w), a, np.int32)
-                    if w == 16:
-                        px[:, 8:] = b
-                else:
-                    ch = 3
-                    ca = (d % 256, (3 * d + 17) % 256, (7 * d + 31) % 256)
-                    cb_ = ((5 * d + 101) % 256, (13 * d + 7) % 256, (11 * d + 29) % 256)
-                    px = np.zeros((h, w * 3), np.int32)
-                    for i in range(3):
-                        px[:, i::3] = ca[i]
-                        if w == 16:
-                            px[:, 24 + i :: 3] = cb_[i]
-                ids.append(d)
-                outs.append(_jpeg_encode(px, ch))
-            yield pd.DataFrame({id_col: ids, "payload": outs})
+    def row(d):
+        w = 16 if d % 2 == 0 else 8
+        h = 8 if d % 3 == 0 else 16
+        if d % 5 == 0:
+            ch = 1
+            a = d % 256
+            b = (9 * d + 77) % 256
+            px = np.full((h, w), a, np.int32)
+            if w == 16:
+                px[:, 8:] = b
+        else:
+            ch = 3
+            ca = (d % 256, (3 * d + 17) % 256, (7 * d + 31) % 256)
+            cb_ = ((5 * d + 101) % 256, (13 * d + 7) % 256, (11 * d + 29) % 256)
+            px = np.zeros((h, w * 3), np.int32)
+            for i in range(3):
+                px[:, i::3] = ca[i]
+                if w == 16:
+                    px[:, 24 + i :: 3] = cb_[i]
+        yield d, _jpeg_encode(px, ch)
 
     out_schema = ST.StructType(
         [
@@ -1753,7 +1656,7 @@ def synth_jpeg(df: DataFrame, id_col: str) -> DataFrame:
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return df.select(id_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col], row, out_schema)
 
 
 def synth_mjpeg(
@@ -1816,24 +1719,16 @@ def _synth_video(df, id_col, n_frames, every_n, container):
     """Shared synth kernel for the video fixtures: per (class, variant) the
     frame JPEGs are generated once and wrapped by ``container`` (bare
     concatenation for MJPEG, the RIFF/AVI writer for AVI)."""
-    import pandas as pd
+    cache: dict = {}  # per task (see _per_row)
 
-    def kernel(batches) -> Iterator:
-        cache: dict = {}
-        for pdf in batches:
-            ids, outs = [], []
-            for rec in pdf.itertuples(index=False):
-                d = int(getattr(rec, id_col))
-                g, v = d % 64, (d // 64) % 4
-                payload = cache.get((g, v))
-                if payload is None:
-                    payload = container(
-                        _video_frame_jpegs(g, v, n_frames, every_n)
-                    )
-                    cache[(g, v)] = payload
-                ids.append(d)
-                outs.append(payload)
-            yield pd.DataFrame({id_col: ids, "payload": outs})
+    def row(d):
+        g, v = d % 64, (d // 64) % 4
+        payload = cache.get((g, v))
+        if payload is None:
+            payload = cache[(g, v)] = container(
+                _video_frame_jpegs(g, v, n_frames, every_n)
+            )
+        yield d, payload
 
     out_schema = ST.StructType(
         [
@@ -1841,7 +1736,7 @@ def _synth_video(df, id_col, n_frames, every_n, container):
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return df.select(id_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col], row, out_schema)
 
 
 def _avi_container(frames, w: int = 72, h: int = 64, fps: int = 8) -> bytes:
@@ -2011,35 +1906,20 @@ def _codec_keyframes(df, payload_col, id_col, every_n, splitter):
     (``DecodeMemo``; worst case a corpus of all-distinct frames just
     misses), keyed on the exact bytes (no hash collisions), and scoped to
     the task — nothing persists across runs."""
-    import pandas as pd
 
     def _jpeg_fp(frame: bytes):
         parsed = _jpeg_decode(frame)
         return _dhash64_from_px(*parsed) if parsed is not None else None
 
-    def kernel(batches) -> Iterator:
-        _fp = DecodeMemo(_jpeg_fp)
-        for pdf in batches:
-            ids, nos, fps = [], [], []
-            for rec in pdf.itertuples(index=False):
-                did = getattr(rec, id_col)
-                frames = splitter(bytes(getattr(rec, payload_col)))
-                if frames is None:
-                    ids.append(did)
-                    nos.append(None)
-                    fps.append(None)
-                    continue
-                for t in range(0, len(frames), every_n):
-                    ids.append(did)
-                    nos.append(t)
-                    fps.append(_fp(bytes(frames[t])))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_no": pd.array(nos, dtype="Int32"),
-                    "fp": pd.array(fps, dtype="Int64"),
-                }
-            )
+    fp = DecodeMemo(_jpeg_fp)
+
+    def row(i, payload):
+        frames = splitter(payload)
+        if frames is None:
+            yield i, None, None
+            return
+        for t in range(0, len(frames), every_n):
+            yield i, t, fp(frames[t])
 
     out_schema = ST.StructType(
         [
@@ -2048,7 +1928,7 @@ def _codec_keyframes(df, payload_col, id_col, every_n, splitter):
             ST.StructField("fp", ST.LongType(), True),
         ]
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def decode_jpeg_features(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
@@ -2059,37 +1939,19 @@ def decode_jpeg_features(df: DataFrame, payload_col: str, id_col: str) -> DataFr
     (progressive, subsampled) yield NULL features, never wrong ones.  Same
     narrow Arrow-batched plan as the PNG/WAV kernels; payloads never
     shuffle."""
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        cols = [id_col] + [f.name for f in PNG_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                parsed = _jpeg_decode(bytes(getattr(rec, payload_col)))
-                if parsed is None:
-                    vals = (None,) * 7
-                else:
-                    w, h, ch, px = parsed
-                    n = w * h
-
-                    def mean_of(c: int) -> float:
-                        lane = px[:, c::ch]
-                        return float(int(lane.sum(dtype="int64"))) / n
-
-                    if ch == 1:
-                        m = mean_of(0)
-                        means = (m, m, m)
-                    else:
-                        means = (mean_of(0), mean_of(1), mean_of(2))
-                    vals = (w, h, ch, 8) + means
-                rows.append((getattr(rec, id_col),) + vals)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(i, payload):
+        parsed = _jpeg_decode(payload)
+        if parsed is None:
+            yield (i,) + (None,) * 7
+            return
+        w, h, ch, px = parsed
+        yield (i, w, h, ch, 8, *_rgb_means(w, h, ch, px))
 
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(PNG_FEATURES_SCHEMA.fields)
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 WAV_TRIM_SCHEMA = ST.StructType(
@@ -2109,35 +1971,13 @@ def trim_wav_silence(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     fixture's wave is never zero, so the boundary is unambiguous) and
     reports the trimmed duration.  Same parse as decode_wav_features;
     malformed payloads yield NULLs."""
-    import struct
-
     import numpy as np
-    import pandas as pd
 
     def parse(payload: bytes):
-        if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            return None
-        pos, fmt_info, data = 12, None, None
-        while pos + 8 <= len(payload):
-            cid = payload[pos:pos + 4]
-            (size,) = struct.unpack_from("<I", payload, pos + 4)
-            body = payload[pos + 8:pos + 8 + size]
-            if cid == b"fmt " and len(body) >= 16:
-                # len(body), not the declared size: a truncated payload can
-                # end mid-chunk, and unpack_from on a short slice would
-                # raise struct.error inside the Arrow kernel instead of
-                # degrading this frame to NULLs (r05 ADVICE)
-                audio_fmt, ch, rate, _br, _ba, bits = struct.unpack_from("<HHIIHH", body)
-                fmt_info = (audio_fmt, ch, rate, bits)
-            elif cid == b"data":
-                data = body
-            pos += 8 + size + (size & 1)
-        if fmt_info is None or data is None:
-            return None
-        audio_fmt, ch, rate, bits = fmt_info
-        if audio_fmt != 1 or bits != 16 or ch != 1 or rate == 0:
-            return None
-        s = np.frombuffer(data[: (len(data) // 2) * 2], dtype="<i2")
+        parsed = _wav_pcm16_parse(payload)
+        if parsed is None or parsed[1] != 1:
+            return (None,) * 4
+        rate, _ch, s = parsed
         n = len(s)
         nz = np.nonzero(s)[0]
         if len(nz) == 0:
@@ -2148,20 +1988,13 @@ def trim_wav_silence(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
         kept = n - lead - trail
         return (n, lead, trail, float(kept) / rate * 1000.0)
 
-    def kernel(batches) -> Iterator:
-        cols = [id_col] + [f.name for f in WAV_TRIM_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                parsed = parse(bytes(getattr(rec, payload_col)))
-                vals = parsed if parsed is not None else (None,) * 4
-                rows.append((getattr(rec, id_col),) + vals)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(i, payload):
+        yield (i, *parse(payload))
 
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(WAV_TRIM_SCHEMA.fields)
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def synth_wav_stepped(
@@ -2179,35 +2012,14 @@ def synth_wav_stepped(
     including the junk LIST chunk a parser must skip."""
     import struct
 
-    import pandas as pd
-
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, outs = [], []
-            for rec in pdf.itertuples(index=False):
-                i = int(getattr(rec, id_col))
-                base = i % 500 + 1
-                frames = b"".join(
-                    struct.pack(
-                        "<h",
-                        (base + w) if k % 2 == 0 else -(base + w),
-                    )
-                    for w in range(n_windows)
-                    for k in range(win)
-                )
-                fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-                junk = b"JUNKJUNK"
-                chunks = (
-                    b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"LIST" + struct.pack("<I", len(junk)) + junk
-                    + b"data" + struct.pack("<I", len(frames)) + frames
-                )
-                payload = (
-                    b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-                )
-                ids.append(i)
-                outs.append(payload)
-            yield pd.DataFrame({id_col: ids, "payload": outs})
+    def row(i):
+        base = i % 500 + 1
+        frames = b"".join(
+            struct.pack("<h", (base + w) if k % 2 == 0 else -(base + w))
+            for w in range(n_windows)
+            for k in range(win)
+        )
+        yield i, _wav_pcm16_bytes(frames, rate)
 
     out_schema = ST.StructType(
         [
@@ -2215,38 +2027,7 @@ def synth_wav_stepped(
             ST.StructField("payload", ST.BinaryType(), False),
         ]
     )
-    return df.select(id_col).mapInPandas(kernel, out_schema)
-
-
-def _pcm16_samples(payload: bytes):
-    """Chunk-walk a RIFF/WAVE payload to (rate, channels, int16 samples);
-    None on any malformation — the same guarded parse discipline as
-    decode_wav_features (truncated fmt bodies degrade to None, odd chunk
-    sizes honor the pad byte)."""
-    import struct
-
-    import numpy as np
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    pos, fmt_info, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8:pos + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            audio_fmt, ch, rate, _br, _ba, bits = struct.unpack_from("<HHIIHH", body)
-            fmt_info = (audio_fmt, ch, rate, bits)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if fmt_info is None or data is None:
-        return None
-    audio_fmt, ch, rate, bits = fmt_info
-    if audio_fmt != 1 or bits != 16 or ch < 1 or rate == 0:
-        return None
-    s = np.frombuffer(data[: (len(data) // (2 * ch)) * 2 * ch], dtype="<i2")
-    return (rate, ch, s)
+    return _per_row(df, [id_col], row, out_schema)
 
 
 def wav_rms_windows(
@@ -2259,36 +2040,15 @@ def wav_rms_windows(
     perfect square is exact), so the closed-form oracle holds bit-for-bit.
     Malformed payloads yield no rows for that id (skip quarantine)."""
     import numpy as np
-    import pandas as pd
 
-    def kernel(batches) -> Iterator:
-        for pdf in batches:
-            ids, wids, ns, rmss, peaks = [], [], [], [], []
-            for rec in pdf.itertuples(index=False):
-                parsed = _pcm16_samples(bytes(getattr(rec, payload_col)))
-                if parsed is None:
-                    continue
-                _rate, ch, s = parsed
-                if ch != 1:
-                    continue
-                i = int(getattr(rec, id_col))
-                n_win = len(s) // win
-                for w in range(n_win):
-                    x = s[w * win:(w + 1) * win].astype(np.float64)
-                    ids.append(i)
-                    wids.append(w)
-                    ns.append(win)
-                    rmss.append(float(np.sqrt(np.mean(x * x))))
-                    peaks.append(int(np.max(np.abs(x))))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "window_id": wids,
-                    "n_samples": ns,
-                    "rms": rmss,
-                    "peak": peaks,
-                }
-            )
+    def row(i, payload):
+        parsed = _wav_pcm16_parse(payload)
+        if parsed is None or parsed[1] != 1:
+            return
+        s = parsed[2]
+        for w in range(len(s) // win):
+            x = s[w * win:(w + 1) * win].astype(np.float64)
+            yield i, w, win, float(np.sqrt(np.mean(x * x))), int(np.max(np.abs(x)))
 
     out_schema = ST.StructType(
         [
@@ -2299,4 +2059,4 @@ def wav_rms_windows(
             ST.StructField("peak", ST.IntegerType(), False),
         ]
     )
-    return df.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return _per_row(df, [id_col, payload_col], row, out_schema)

@@ -63,10 +63,10 @@ def multimodal_binary_meta(spark, sf_dir):
     tags=("multimodal", "decode"),
 )
 def multimodal_fake_decode(spark, sf_dir):
-    """The full multimodal decode pipeline (Arrow-batched mapInPandas over a
-    binary payload column) with the deterministic stand-in kernel — the real
-    kernel (operators/multimodal.py:decode_image) swaps in with an identical
-    signature and plan shape."""
+    """The full multimodal decode pipeline (operators/multimodal.py's one
+    per-row mapInArrow stage over a binary payload column) with the
+    deterministic stand-in kernel — the real kernel (decode_image) swaps in
+    with an identical signature and plan shape."""
     from kwack_spark.operators import multimodal as mm
 
     d = T(spark, sf_dir, "documents").select(
@@ -928,7 +928,7 @@ def multimodal_jpeg_decode(spark, sf_dir):
     "multimodal_resize",
     # nearest-neighbor byte resample to 32 bytes: out[i] = in[(i*n)//32].
     # hex() of single-byte blob slices rebuilds the resized payload's hex in
-    # SQL, so the whole mapInPandas kernel is hash-checked byte for byte.
+    # SQL, so the whole Python kernel is hash-checked byte for byte.
     oracle="""
         WITH p AS (
             SELECT doc_id, hex(encode(text)) AS h, octet_length(encode(text)) AS n

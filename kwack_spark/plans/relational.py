@@ -326,8 +326,8 @@ def approx_count_distinct(spark, sf_dir):
 @register(
     "collect_list_sorted",
     # Array outputs are serialized to a delimited string on both sides: the
-    # driver's value-hasher needs hashable scalars (unhashable-list errors in
-    # CORRECTNESS_r01); '|'.join of sorted names is engine-agnostic.
+    # oracle comparison's value hash needs hashable scalars (a list column
+    # fails to hash); '|'.join of sorted names is engine-agnostic.
     oracle="""
         SELECT n_regionkey,
                array_to_string(list_sort(list(n_name)), '|') AS nations

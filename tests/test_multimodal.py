@@ -462,3 +462,69 @@ def test_decode_memo_bounds_bytes_not_entries():
     big(payloads[0])
     assert len(decodes) == n + 2 and big.held == 0
     assert mm.DECODE_MEMO_BYTES <= 128 << 20
+
+
+def test_per_row_contract(spark):
+    """The one media stage: a row function yields zero, one or many rows
+    per input, NULLs survive in nullable long and int columns, and the
+    output schema is exactly the one asked for — over two partitions, one
+    of them empty."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as ST
+
+    # ids 0..2 land in the first partition; the filter empties the second
+    df = spark.range(0, 6, numPartitions=2).where("id < 3").select(
+        F.col("id").alias("doc_id"),
+        F.expr("substring(cast('abc' AS binary), 1, cast(id * (id + 1) / 2 AS int))")
+        .alias("payload"),
+    )
+    assert df.rdd.getNumPartitions() == 2
+
+    def row(i, payload):
+        for k in range(len(payload)):  # 0, 1 and 3 rows
+            yield i, k, None if k == 0 else 10 * k, None if k == 1 else k
+
+    out_schema = ST.StructType(
+        [
+            ST.StructField("doc_id", ST.LongType(), False),
+            ST.StructField("k", ST.IntegerType(), False),
+            ST.StructField("big", ST.LongType(), True),
+            ST.StructField("small", ST.IntegerType(), True),
+        ]
+    )
+    out = mm._per_row(df, ["doc_id", "payload"], row, out_schema)
+    assert out.schema == out_schema
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 0, None, 0),
+        (2, 0, None, 0),
+        (2, 1, 10, None),
+        (2, 2, 20, 2),
+    ]
+
+
+def test_per_row_memo_starts_empty_in_each_task(spark):
+    """A DecodeMemo the row function closes over is per-task state: the
+    stage is unpickled once per task, so each task's first row sees an
+    empty memo — also on a second job, when Python workers are reused."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as ST
+
+    df = spark.range(0, 12, numPartitions=3).select(
+        F.col("id").alias("doc_id"), F.lit(bytearray(b"same")).alias("payload")
+    )
+    memo = mm.DecodeMemo(len)
+
+    def row(i, payload):
+        held = memo.held
+        memo(payload)
+        yield i, held
+
+    out_schema = ST.StructType(
+        [ST.StructField("doc_id", ST.LongType()), ST.StructField("held", ST.LongType())]
+    )
+    out = mm._per_row(df, ["doc_id", "payload"], row, out_schema)
+    for _ in range(2):
+        helds = [r.held for r in out.collect()]
+        assert len(helds) == 12
+        assert helds.count(0) == 3  # one empty memo per task
+        assert set(helds) == {0, len(b"same") + 8}
