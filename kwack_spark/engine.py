@@ -133,13 +133,17 @@ class KwackSpark:
         it on ``stop()``.
 
         ``durable_path`` switches the sink from the in-memory table to the
-        exactly-once parquet landing (streaming/sink.py): micro-batches
-        land under ``durable_path/batch_id=<id>/`` with overwrite-on-replay
-        semantics, the checkpoint (``checkpoint`` or
-        ``<durable_path>/_checkpoint``) makes restarts resume instead of
-        reprocess, and table ``<topic>`` is registered as a view over the
-        landed files — the production shape for sessions that outlive the
-        driver.
+        exactly-once parquet landing (streaming/sink.py): each micro-batch
+        lands in a fresh, immutable directory under
+        ``durable_path/_attempts/`` and commits by one atomic swap of
+        ``durable_path/_kwack_manifest.json``; a replayed batch lands a new
+        attempt and repoints its manifest entry.  The checkpoint
+        (``checkpoint`` or ``<durable_path>/_checkpoint``) makes restarts
+        resume instead of reprocess.  Table ``<topic>`` is a view over the
+        manifest's committed attempt directories, re-registered after every
+        commit, so it never shows a torn replay or a crash orphan — the
+        production shape for sessions that outlive the driver.  Superseded
+        attempts stay on disk until ``streaming.sink.vacuum_sink``.
 
         Either way the query fires one micro-batch every 250 ms
         (``streaming.trigger.LIVE_PROCESSING_TIME``), not Spark's ASAP
@@ -175,39 +179,32 @@ class KwackSpark:
             from kwack_spark.streaming import sink as sk
 
             view = safe_identifier(topic, prefix="_kw_live_")
-            # the landed schema is the decoded stream's schema minus nothing
-            # (partition col is appended by the reader, dropped by read_sink)
-            # — pin it so per-batch re-registration skips footer inference
+            # pin the decoded schema: re-registration skips footer
+            # inference, and an empty manifest still gives a typed table
             landed_schema = decoded.schema
 
-            # a temp view over a parquet path snapshots its file listing at
-            # registration, so the view is RE-registered after every landed
-            # batch (driver-side foreachBatch hook) — late records appear on
-            # re-query exactly like the memory sink.  Listing cost grows
-            # with the batch-directory count; compact_sink bounds it.
+            # a temp view over parquet paths snapshots them at registration,
+            # so the view is RE-registered over the new manifest after every
+            # commit (driver-side foreachBatch hook) — late records appear
+            # on re-query exactly like the memory sink.  Registration lists
+            # every committed attempt directory, so its cost grows with the
+            # batch count; compact_sink writes a compacted copy elsewhere
+            # and does not repoint a running topic.
             def _register_landed_view(_batch_id: int | None = None) -> None:
-                from kwack_spark.streaming.sink import PARTITION_COL
-
                 (
                     self.spark.read.schema(landed_schema)
-                    .parquet(durable_path)
-                    .drop(PARTITION_COL)
+                    .parquet(*sk.committed_paths(durable_path))
                     .createOrReplaceTempView(view)
                 )
                 if view != topic:
                     alias_view(self.spark, topic, view)
 
-            # register EAGERLY too: on a restart against an already-landed
-            # dataset with no new input, no batch ever fires the hook, and
-            # an empty topic must still present an (empty) queryable table —
-            # the explicit schema makes both cases resolvable with zero or
-            # many files on disk (the dir must exist for path resolution)
-            import os
-
-            os.makedirs(durable_path, exist_ok=True)
+            # register EAGERLY too: on a restart with no new input no batch
+            # ever fires the hook, and an empty topic must still present an
+            # (empty) queryable table
             _register_landed_view()
 
-            q = sk.to_idempotent_parquet_sink(
+            q = sk.to_manifest_parquet_sink(
                 decoded,
                 durable_path,
                 checkpoint or f"{durable_path}/_checkpoint",

@@ -39,7 +39,9 @@ def _per_row(df: DataFrame, in_cols, row_fn, out_schema: ST.StructType) -> DataF
     yields zero or more output tuples in ``out_schema`` order, so one
     contract covers 1->1 kernels, skipping a malformed row and fanning a
     video out to its keyframes.  Output batches are built against the Arrow
-    form of ``out_schema``, so NULLs survive in any column type.
+    form of ``out_schema``, so NULLs survive in any column type.  A NULL
+    payload reaches ``row_fn`` as None; every payload kernel here treats it
+    as malformed (NULL features, or no row where it skips malformed input).
 
     ``row_fn`` and everything it closes over are pickled with the stage and
     unpickled once per task: a closed-over ``DecodeMemo`` or cache is
@@ -142,6 +144,9 @@ def decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     use ``decode_png_features``."""
 
     def row(i, payload):
+        if payload is None:
+            yield i, None, None, None, None
+            return
         dims = None
         if payload.startswith(_PNG_SIG):
             fmt, parsed = "png", _png_decode(payload)
@@ -166,6 +171,9 @@ def fake_decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame
     reproducible in any engine, so the pipeline is oracle-checkable."""
 
     def row(i, payload):
+        if payload is None:
+            yield i, None, None, None, None
+            return
         b = payload[:5].ljust(5, b"\x00")
         yield i, b[0] * 256 + b[1], b[2] * 256 + b[3], 1 + b[4] % 4, "fake"
 
@@ -213,6 +221,9 @@ def resize_bytes(
     import numpy as np
 
     def row(i, payload):
+        if payload is None:
+            yield i, None, None
+            return
         n = len(payload)
         if n == 0:
             yield i, n, b""
@@ -243,6 +254,9 @@ def byte_histogram_features(
     width = 256 // bins
 
     def row(i, payload):
+        if payload is None:
+            yield i, None, None, None
+            return
         arr = np.frombuffer(payload, dtype=np.uint8)
         n = len(arr)
         mean = float(int(arr.sum(dtype=np.int64))) / n if n else 0.0
@@ -351,7 +365,9 @@ def _wav_pcm16_parse(payload: bytes):
 
     import numpy as np
 
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+    if payload is None or len(payload) < 12:
+        return None
+    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         return None
     fmt_info, data = None, None
     for cid, off, n in _riff_chunks(payload, 12, len(payload)):
@@ -610,7 +626,7 @@ def _png_decode(payload: bytes):
 
     import numpy as np
 
-    if not payload.startswith(_PNG_SIG):
+    if payload is None or not payload.startswith(_PNG_SIG):
         return None
     pos, ihdr, idat, ended = len(_PNG_SIG), None, bytearray(), False
     while pos + 12 <= len(payload):
@@ -885,7 +901,7 @@ def dhash64(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     fp = DecodeMemo(_png_fp)
 
     def row(i, payload):
-        yield i, fp(payload)
+        yield i, None if payload is None else fp(payload)
 
     out_schema = ST.StructType(
         [
@@ -1439,7 +1455,7 @@ def _jpeg_decode(payload: bytes):
 
     import numpy as np
 
-    if payload[:2] != b"\xff\xd8":
+    if payload is None or payload[:2] != b"\xff\xd8":
         return None
     qtabs: dict = {}
     htabs: dict = {}
@@ -1914,7 +1930,7 @@ def _codec_keyframes(df, payload_col, id_col, every_n, splitter):
     fp = DecodeMemo(_jpeg_fp)
 
     def row(i, payload):
-        frames = splitter(payload)
+        frames = None if payload is None else splitter(payload)
         if frames is None:
             yield i, None, None
             return

@@ -230,7 +230,7 @@ def streaming_stateful_running_counts(spark, sf_dir):
 @register(
     "streaming_exactly_once_sink",
     # the durable landing path under the correctness gate: events replay as
-    # 4 micro-batches through the idempotent parquet sink; batch 0 is then
+    # 4 micro-batches through the manifest sink; batch 0 is then
     # RE-DELIVERED (the crash-replay case) and a second availableNow run on
     # the same checkpoint proves resume-without-reprocessing; the landed
     # dataset must STILL equal the plain batch aggregate — any duplication
@@ -244,14 +244,13 @@ def streaming_stateful_running_counts(spark, sf_dir):
 )
 def streaming_exactly_once_sink(spark, sf_dir):
     """Exactly-once durable ingest (streaming/sink.py): decoded rows land
-    under per-batch-id directories with overwrite semantics, so micro-batch
-    re-delivery after a crash rewrites its own directory instead of
-    appending duplicates, and the output is plain partitioned parquet any
-    engine can read (no _spark_metadata dependency).  The query simulates
-    the full failure sequence — ingest, crash-replay of batch 0, resumed
-    run on the same checkpoint — and returns the landed aggregate."""
-    import uuid  # noqa: F401  (parity with sibling streaming queries)
-
+    as immutable per-batch attempt directories committed by an atomic
+    manifest swap, so micro-batch re-delivery after a crash repoints its
+    own batch instead of appending duplicates, and the committed files are
+    plain parquet any engine can read (no _spark_metadata dependency).
+    The query simulates the full failure sequence — ingest, crash-replay
+    of batch 0, resumed run on the same checkpoint — and returns the
+    landed aggregate."""
     from kwack_spark.streaming import sink as sk
 
     e = T(spark, sf_dir, "events").select("event_id", "event_type", "value")
@@ -260,44 +259,34 @@ def streaming_exactly_once_sink(spark, sf_dir):
     land = scratch.scratch_dir(spark, "sink_land")
     ckpt = scratch.scratch_dir(spark, "sink_ckpt")
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
-    with _few_shuffle_partitions(spark):
-        q = sk.to_idempotent_parquet_sink(stream, land, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("exactly-once sink did not drain in 300s")
-        # crash-replay: re-deliver batch 0's payload under its original id —
-        # the overwrite must leave the landed row set unchanged.
-        # localCheckpoint materializes the rows BEFORE the overwrite deletes
-        # the directory being re-read (the real replay re-reads the source).
-        b0 = spark.read.parquet(f"{land}/kw_batch_id=0").localCheckpoint(eager=True)
-        sk.idempotent_batch_writer(land)(b0, 0)
-        b0.unpersist()
-        # resume: same checkpoint, no new input -> no batches re-processed.
-        # Asserted on the DIRECTORY SET, not just the final aggregate — a
-        # broken checkpoint that reprocessed everything could land the same
-        # row union under new batch ids and the aggregate alone would pass.
-        import glob
-
-        dirs_before = sorted(glob.glob(f"{land}/kw_batch_id=*"))
-        q2 = sk.to_idempotent_parquet_sink(
+    def drain(what):
+        stream = (
             spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(replay_dir),
-            land,
-            ckpt,
+            .parquet(replay_dir)
         )
-        if not q2.awaitTermination(300):
-            q2.stop()
-            raise TimeoutError("exactly-once sink resume did not drain in 300s")
-        dirs_after = sorted(glob.glob(f"{land}/kw_batch_id=*"))
-        if dirs_after != dirs_before:
+        q = sk.to_manifest_parquet_sink(stream, land, ckpt)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"exactly-once sink {what} did not drain in 300s")
+
+    with _few_shuffle_partitions(spark):
+        drain("run")
+        # crash-replay: re-deliver batch 0's payload under its original id —
+        # a fresh attempt repoints the manifest, the row set stays the same
+        b0 = spark.read.parquet(sk.read_manifest(land)["0"])
+        sk.manifest_batch_writer(land)(b0, 0)
+        # resume: same checkpoint, no new input -> no batches re-processed.
+        # Asserted on the MANIFEST, not just the final aggregate — a broken
+        # checkpoint that reprocessed everything could land the same row
+        # union under new batch ids and the aggregate alone would pass.
+        before = sk.read_manifest(land)
+        drain("resume")
+        after = sk.read_manifest(land)
+        if after != before:
             raise AssertionError(
-                f"resume reprocessed input: batch dirs {dirs_before} -> {dirs_after}"
+                f"resume reprocessed input: batch ids {sorted(before, key=int)}"
+                f" -> {sorted(after, key=int)}"
             )
     return (
         sk.read_sink(spark, land)
@@ -326,7 +315,7 @@ def streaming_exactly_once_sink(spark, sf_dir):
 )
 def sink_manifest_snapshot_read(spark, sf_dir):
     """Manifest-snapshot sink round trip (streaming/sink.py:
-    to_manifest_parquet_sink / read_sink_snapshot): bounded replay lands
+    to_manifest_parquet_sink / read_sink): bounded replay lands
     every micro-batch as an immutable attempt directory, a redelivered
     batch writes a fresh attempt and atomically repoints the manifest, and
     readers see exactly one committed copy of every row — the aggregate
@@ -358,7 +347,7 @@ def sink_manifest_snapshot_read(spark, sf_dir):
         redelivered = spark.read.parquet(manifest[last])
         sk.manifest_batch_writer(land)(redelivered, int(last))
     return (
-        sk.read_sink_snapshot(spark, land)
+        sk.read_sink(spark, land)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -370,7 +359,7 @@ def sink_manifest_snapshot_read(spark, sf_dir):
 @register(
     "sink_compaction_roundtrip",
     # the maintenance path under the correctness gate: events land through
-    # the exactly-once sink (one dir per micro-batch — the small-file
+    # the manifest sink (one dir per micro-batch — the small-file
     # shape), compact_sink rewrites them into size-bounded balanced files,
     # and the compacted dataset must still equal the batch aggregate —
     # compaction is a layout change, never a data change
@@ -384,9 +373,8 @@ def sink_manifest_snapshot_read(spark, sf_dir):
 def sink_compaction_roundtrip(spark, sf_dir):
     """Sink-compaction round trip (streaming/sink.py:compact_sink): the
     per-batch directories a live topic accumulates are rewritten into
-    ceil(n/target) balanced files at a new location; row set preserved,
-    lineage (kw_batch_id) dropped.  The aggregate over the COMPACTED
-    output is what gets oracle-checked."""
+    ceil(n/target) balanced files at a new location; row set preserved.
+    The aggregate over the COMPACTED output is what gets oracle-checked."""
     import math
 
     from kwack_spark.streaming import sink as sk
@@ -399,7 +387,7 @@ def sink_compaction_roundtrip(spark, sf_dir):
     out = scratch.scratch_dir(spark, "cmp_out")
 
     with _few_shuffle_partitions(spark):
-        q = sk.to_idempotent_parquet_sink(
+        q = sk.to_manifest_parquet_sink(
             spark.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(replay_dir),

@@ -5,6 +5,8 @@ closed-form oracle query (multimodal_wav_decode) pins."""
 
 import struct
 
+import pytest
+
 from kwack_spark.operators import multimodal as mm
 
 
@@ -528,3 +530,34 @@ def test_per_row_memo_starts_empty_in_each_task(spark):
         assert len(helds) == 12
         assert helds.count(0) == 3  # one empty memo per task
         assert set(helds) == {0, len(b"same") + 8}
+
+
+_PAYLOAD_KERNELS = [
+    "decode_image",
+    "fake_decode_image",
+    "resize_bytes",
+    "byte_histogram_features",
+    "decode_wav_features",
+    "audio_fingerprint64",
+    "decode_png_features",
+    "dhash64",
+    "mjpeg_keyframes",
+    "avi_keyframes",
+    "decode_jpeg_features",
+    "trim_wav_silence",
+    "wav_rms_windows",
+]
+
+
+@pytest.mark.parametrize("kernel", _PAYLOAD_KERNELS)
+def test_payload_kernels_treat_null_as_malformed(spark, kernel):
+    """A NULL payload degrades like a malformed one instead of failing the
+    job: its id comes back with NULL features, or with no row where the
+    kernel skips malformed input (wav_rms_windows)."""
+    df = spark.createDataFrame([(1, None), (2, b"RIFF")], "doc_id long, payload binary")
+    rows = getattr(mm, kernel)(df, "payload", "doc_id").collect()
+    if kernel == "wav_rms_windows":
+        assert rows == []
+        return
+    (null_row,) = [r for r in rows if r.doc_id == 1]
+    assert all(v is None for v in null_row[1:])

@@ -359,9 +359,10 @@ def test_idempotent_sink_batch_redelivery(spark, tmp_path):
 
     land = str(tmp_path / "land")
     d = spark.range(10).selectExpr("id", "id * 2 AS v")
-    write = sk.idempotent_batch_writer(land)
+    write = sk.manifest_batch_writer(land)
     write(d, 0)
     write(d, 0)  # re-delivery
+    assert list(sk.read_manifest(land)) == ["0"]
     got = sk.read_sink(spark, land)
     assert got.count() == 10
     assert {r.id for r in got.collect()} == set(range(10))
@@ -382,48 +383,41 @@ def test_idempotent_sink_resume_processes_only_new_input(spark, tmp_path):
 
     def drain():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = sk.to_idempotent_parquet_sink(stream, land, ckpt)
+        q = sk.to_manifest_parquet_sink(stream, land, ckpt)
         assert q.awaitTermination(120), "sink did not drain"
-
-    def batch_dirs():
-        import glob as g
-
-        return sorted(
-            int(p.rsplit("=", 1)[1])
-            for p in g.glob(f"{land}/{sk.PARTITION_COL}=*")
-        )
 
     drain()
     assert sk.read_sink(spark, land).count() == 50
-    first_dirs = batch_dirs()
+    first = sk.read_manifest(land)
     # new arrivals between runs
     spark.range(50, 80).selectExpr("id").coalesce(1).write.mode("append").parquet(src)
     drain()
     got = sk.read_sink(spark, land)
     assert got.count() == 80
     assert {r.id for r in got.collect()} == set(range(80))
-    # resume really resumed: the first run's batch dirs are untouched and
-    # the new rows landed ONLY in new batch ids.  (Without this check a
+    # resume really resumed: the first run's manifest entries are untouched
+    # and the new rows landed ONLY in new batch ids.  (Without this check a
     # broken checkpoint that reprocesses everything into batch 0 would
     # still produce the right 80-row union and the count asserts above
     # would pass vacuously.)
-    assert batch_dirs()[: len(first_dirs)] == first_dirs
-    assert len(batch_dirs()) > len(first_dirs)
-    old_rows = spark.read.parquet(
-        *[f"{land}/{sk.PARTITION_COL}={b}" for b in first_dirs]
-    )
+    second = sk.read_manifest(land)
+    assert {k: second[k] for k in first} == first
+    added = sorted(map(int, second.keys() - first.keys()))
+    assert added and added[0] > max(map(int, first))
+    old_rows = sk.read_sink(spark, land, manifest=first)
     assert {r.id for r in old_rows.collect()} == set(range(50))
 
 
 def test_engine_live_topic_durable_sink(spark, tmp_path):
     """Live-table mode with durable landing: table <topic> is a view over
     the exactly-once parquet sink, late rows appear on re-query, and the
-    landed dataset is readable by an external engine (DuckDB) without
-    Spark's _spark_metadata log."""
+    committed files the manifest lists are readable by an external engine
+    (DuckDB) without Spark's _spark_metadata log."""
     import duckdb
 
     from kwack_spark.config import KwackConfig
     from kwack_spark.engine import KwackSpark
+    from kwack_spark.streaming import sink as sk
 
     path = str(tmp_path / "frames")
     land = str(tmp_path / "land")
@@ -465,9 +459,11 @@ def test_engine_live_topic_durable_sink(spark, tmp_path):
     finally:
         q.stop()
 
-    # cross-engine readability: plain partitioned parquet, no metadata log
+    # cross-engine readability: plain parquet at the paths the manifest
+    # lists, no metadata log
+    globs = [f"{p}/*.parquet" for p in sk.committed_paths(land)]
     n = duckdb.connect().execute(
-        f"SELECT count(*) FROM read_parquet('{land}/kw_batch_id=*/*.parquet')"
+        "SELECT count(*) FROM read_parquet(?)", [globs]
     ).fetchone()[0]
     assert n == 8
 
@@ -481,7 +477,7 @@ def test_compact_sink_preserves_rows(spark, tmp_path):
 
     land = str(tmp_path / "land")
     out = str(tmp_path / "compacted")
-    write = sk.idempotent_batch_writer(land)
+    write = sk.manifest_batch_writer(land)
     for b in range(5):
         write(spark.range(b * 10, b * 10 + 10).selectExpr("id"), b)
 
@@ -489,18 +485,8 @@ def test_compact_sink_preserves_rows(spark, tmp_path):
     assert files == 3  # ceil(50 / 20)
     assert len(glob.glob(f"{out}/part-*.parquet")) == 3
     got = spark.read.parquet(out)
-    assert sk.PARTITION_COL not in got.columns
+    assert got.columns == ["id"]
     assert {r.id for r in got.collect()} == set(range(50))
-
-
-def test_sink_rejects_colliding_column(spark, tmp_path):
-    from kwack_spark.streaming import sink as sk
-
-    d = spark.range(3).selectExpr("id", f"id AS {sk.PARTITION_COL}")
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="collides"):
-        sk.idempotent_batch_writer(str(tmp_path / "land"))(d, 0)
 
 
 def test_engine_live_topic_durable_restart_no_new_input(spark, tmp_path):
@@ -567,7 +553,7 @@ def test_compact_sink_rejects_in_place_and_nested(spark, tmp_path):
     from kwack_spark.streaming import sink as sk
 
     land = str(tmp_path / "land")
-    sk.idempotent_batch_writer(land)(spark.range(5).selectExpr("id"), 0)
+    sk.manifest_batch_writer(land)(spark.range(5).selectExpr("id"), 0)
 
     for bad in (land, land + "/", f"{land}/sub", str(tmp_path)):
         with _pt.raises(ValueError, match="overlaps"):
@@ -576,14 +562,16 @@ def test_compact_sink_rejects_in_place_and_nested(spark, tmp_path):
     with _pt.raises(ValueError, match="overlaps"):
         sk.compact_sink(spark, "hdfs://nn/sink", "hdfs://nn/sink/out")
     # and the original batch dirs are untouched
-    assert spark.read.parquet(land).count() == 5
+    assert sk.read_sink(spark, land).count() == 5
 
 
 def test_compact_sink_plans_from_footers_without_count(spark, tmp_path, monkeypatch):
-    """Sizing is metadata-only: the plan comes from parquet footers, so the
-    one and only data pass is the rewrite itself.  count() is poisoned to
-    prove the planner never scans."""
+    """Sizing is metadata-only: the plan comes from the parquet footers of
+    the files the manifest commits, so the one and only data pass is the
+    rewrite itself.  count() is poisoned to prove the planner never scans;
+    a superseded attempt and a crash orphan must not be counted."""
     import glob
+    import shutil
 
     from pyspark.sql import DataFrame
 
@@ -591,9 +579,12 @@ def test_compact_sink_plans_from_footers_without_count(spark, tmp_path, monkeypa
 
     land = str(tmp_path / "land")
     out = str(tmp_path / "compacted")
-    write = sk.idempotent_batch_writer(land)
+    write = sk.manifest_batch_writer(land)
     for b in range(4):
         write(spark.range(b * 10, b * 10 + 10).selectExpr("id"), b)
+    superseded = sk.read_manifest(land)["3"]
+    write(spark.range(30, 40).selectExpr("id"), 3)  # replay: batch 3 repoints
+    shutil.copytree(superseded, f"{land}/_attempts/batch=4/attempt=orphan01")
 
     assert sk._footer_row_count(land) == 40
 
@@ -656,25 +647,25 @@ def test_manifest_sink_snapshot_isolation_and_vacuum(spark, tmp_path):
 
     snap1 = sk.read_manifest(base)
     assert set(snap1) == {"0", "1"}
-    assert {r.id for r in sk.read_sink_snapshot(spark, base).collect()} == set(range(20))
+    assert {r.id for r in sk.read_sink(spark, base).collect()} == set(range(20))
 
     # crash-replay of batch 1 with (recomputed) different rows: new attempt,
     # manifest repoints, the OLD snapshot still reads the OLD files intact
     write(spark.range(100, 110).selectExpr("id"), 1)
-    new = {r.id for r in sk.read_sink_snapshot(spark, base).collect()}
+    new = {r.id for r in sk.read_sink(spark, base).collect()}
     assert new == set(range(10)) | set(range(100, 110))
-    old = {r.id for r in sk.read_sink_snapshot(spark, base, manifest=snap1).collect()}
+    old = {r.id for r in sk.read_sink(spark, base, manifest=snap1).collect()}
     assert old == set(range(20))  # time travel across the replay
 
     # a crash orphan (attempt written, manifest never updated) is invisible
     orphan = f"{base}/_attempts/batch=2/attempt=deadbeef"
     spark.range(500, 505).selectExpr("id").write.parquet(orphan)
-    assert {r.id for r in sk.read_sink_snapshot(spark, base).collect()} == new
+    assert {r.id for r in sk.read_sink(spark, base).collect()} == new
 
     # vacuum removes the superseded batch-1 attempt and the orphan, keeps
     # everything the current manifest references
     assert sk.vacuum_sink(base) == 2
-    assert {r.id for r in sk.read_sink_snapshot(spark, base).collect()} == new
+    assert {r.id for r in sk.read_sink(spark, base).collect()} == new
     assert len(glob.glob(f"{base}/_attempts/batch=*/attempt=*")) == 2
 
 
@@ -693,7 +684,7 @@ def test_manifest_sink_streaming_end_to_end(spark, tmp_path):
     )
     q = sk.to_manifest_parquet_sink(stream, base, ckpt)
     assert q.awaitTermination(300)
-    got = sk.read_sink_snapshot(spark, base)
+    got = sk.read_sink(spark, base)
     assert got.count() == 50 and {r.id for r in got.collect()} == set(range(50))
     assert len(sk.read_manifest(base)) >= 2  # multiple micro-batches committed
 
@@ -717,7 +708,7 @@ def test_vacuum_sink_path_spelling_does_not_delete_live_data(spark, tmp_path):
 
     # trailing slash
     assert sk.vacuum_sink(base + "/") == 1
-    assert {r.id for r in sk.read_sink_snapshot(spark, base).collect()} == set(range(10))
+    assert {r.id for r in sk.read_sink(spark, base).collect()} == set(range(10))
 
     # symlinked alias of the same directory
     alias = str(tmp_path / "alias")
@@ -726,7 +717,7 @@ def test_vacuum_sink_path_spelling_does_not_delete_live_data(spark, tmp_path):
         f"{base}/_attempts/batch=8/attempt=orphan02"
     )
     assert sk.vacuum_sink(alias) == 1
-    assert {r.id for r in sk.read_sink_snapshot(spark, base).collect()} == set(range(10))
+    assert {r.id for r in sk.read_sink(spark, base).collect()} == set(range(10))
 
 
 def test_manifest_writer_lock_fails_loudly_on_contention(spark, tmp_path):
@@ -818,11 +809,11 @@ def test_compact_sink_guard_local_path_with_colon_segment(spark, tmp_path):
 
 def test_footer_row_count_accepts_file_uri_spellings(spark, tmp_path):
     """_footer_row_count shares the guard's normalization: file:/x and
-    file://localhost/x walk the local directory; remote schemes -> None."""
+    file://localhost/x read the local manifest; remote schemes -> None."""
     from kwack_spark.streaming import sink as sk
 
     land = tmp_path / "land"
-    spark.range(10).coalesce(1).write.parquet(str(land))
+    sk.manifest_batch_writer(str(land))(spark.range(10).coalesce(1), 0)
     assert sk._footer_row_count(f"file:{land}") == 10
     assert sk._footer_row_count(f"file://localhost{land}") == 10
     assert sk._footer_row_count("hdfs://nn/x") is None
@@ -830,7 +821,7 @@ def test_footer_row_count_accepts_file_uri_spellings(spark, tmp_path):
 
 def test_footer_row_count_rejects_remote_file_authority(spark, tmp_path):
     """file://<other-host>/... names another machine's filesystem — the
-    footer walk must return None (fallback), not walk a same-named local
+    footer count must return None (fallback), not walk a same-named local
     directory; the disjointness guard still compares such URIs textually."""
     import pytest
 
@@ -951,3 +942,88 @@ def test_live_topic_durable_late_file_visible_exactly_once(spark, tmp_path):
         assert (got.n, got.d, got.lo, got.hi) == (40, 40, 0, 39)
     finally:
         q.stop()
+
+
+def _durable_live_topic(spark, tmp_path, topic):
+    """A durable live topic over an empty frames directory: (engine, query,
+    frames dir, landing path, schema id)."""
+    import os
+
+    from kwack_spark.config import KwackConfig
+    from kwack_spark.engine import KwackSpark
+
+    frames, land = str(tmp_path / "frames"), str(tmp_path / "land")
+    os.makedirs(frames)
+    reg = MockSchemaRegistry()
+    sid = reg.register(f"{topic}-value", json.dumps(AVRO), "AVRO")
+    eng = KwackSpark(KwackConfig(), spark=spark, registry=reg)
+    q = eng.register_live_topic(
+        topic, value_serde=Serde(kind="latest"), frames_dir=frames, durable_path=land
+    )
+    return eng, q, frames, land, sid
+
+
+def test_live_topic_durable_shows_only_committed_data(spark, tmp_path):
+    """The durable live table reads only what the manifest commits: a crash
+    orphan under _attempts/ and a replay of the last batch under its own
+    id change neither count(*) nor count(DISTINCT uid)."""
+    import shutil
+
+    from kwack_spark.streaming import sink as sk
+
+    eng, q, frames, land, sid = _durable_live_topic(spark, tmp_path, "live_cmt")
+    counts = "SELECT count(*) AS n, count(DISTINCT uid) AS d FROM live_cmt"
+    try:
+        for k in range(2):
+            _land_frame_file(spark, tmp_path, frames, sid, "live_cmt", range(k * 10, k * 10 + 10), f"f{k}")
+            q.processAllAvailable()
+        assert tuple(eng.sql(counts).collect()[0]) == (20, 20)
+        manifest = sk.read_manifest(land)
+        assert len(manifest) == 2
+        last = max(manifest, key=int)
+
+        # a crashed replay's attempt: written, never committed
+        shutil.copytree(manifest[last], f"{land}/_attempts/batch={last}/attempt=orphan01")
+        # the replay that completes: same id, fresh attempt, manifest repoints
+        sk.manifest_batch_writer(land)(spark.read.parquet(manifest[last]), int(last))
+        assert sk.read_manifest(land)[last] != manifest[last]
+        assert tuple(eng.sql(counts).collect()[0]) == (20, 20)
+        assert sk.read_sink(spark, land).count() == 20
+
+        # the next commit re-registers the view over the repointed manifest
+        _land_frame_file(spark, tmp_path, frames, sid, "live_cmt", range(20, 25), "f2")
+        q.processAllAvailable()
+        assert tuple(eng.sql(counts).collect()[0]) == (25, 25)
+    finally:
+        q.stop()
+
+
+def test_compact_sink_on_live_topic_path(spark, tmp_path, monkeypatch):
+    """compact_sink(spark, durable_path, out) on a live topic's own path
+    (what a traced live_topic benchmark run does after the window) plans
+    its file count from footers, with no count() pass, and keeps the rows."""
+    import glob
+
+    from pyspark.sql import DataFrame
+
+    from kwack_spark.streaming import sink as sk
+
+    _, q, frames, land, sid = _durable_live_topic(spark, tmp_path, "live_cmp")
+    try:
+        for k in range(2):
+            _land_frame_file(spark, tmp_path, frames, sid, "live_cmp", range(k * 15, k * 15 + 15), f"f{k}")
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def boom(self):
+        raise AssertionError("compact_sink planning must not run a count() data pass")
+
+    out = str(tmp_path / "compacted")
+    monkeypatch.setattr(DataFrame, "count", boom)
+    files = sk.compact_sink(spark, land, out, target_rows_per_file=12)
+    monkeypatch.undo()
+    assert files == 3  # ceil(30 / 12)
+    assert len(glob.glob(f"{out}/part-*.parquet")) == 3
+    got = spark.read.parquet(out).select("uid").collect()
+    assert sorted(r.uid for r in got) == list(range(30))
