@@ -156,13 +156,24 @@ class KwackSpark:
         falling behind"), to ERROR in the driver JVM: for every streaming
         query in that JVM, and until it exits."""
         from kwack_spark.config import Serde
-        from kwack_spark.sources.kafka import decode_topic
+        from kwack_spark.sources.kafka import decode_topic, read_topic_frames
         from kwack_spark.streaming import ingest as si
 
+        # a broker-fed live topic connects exactly like register_topics:
+        # same partitions, starting offset, timeout and -X client properties
         frames = (
             si.stream_frames_from_dir(self.spark, frames_dir)
             if frames_dir
-            else si.stream_topic_frames(self.spark, self.config.kafka_bootstrap, topic)
+            else read_topic_frames(
+                self.spark,
+                self.config.kafka_bootstrap,
+                topic,
+                streaming=True,
+                partitions=self.config.topic_partitions.get(topic),
+                offset_spec=self.config.offset(),
+                metadata_timeout_ms=self.config.metadata_timeout_ms,
+                client_props=self.config.client_props,
+            )
         )
         decoded = decode_topic(
             frames,

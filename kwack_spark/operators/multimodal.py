@@ -1,8 +1,10 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Beyond-parity operators for a training-data pipeline: media are opaque
-``binary`` payload columns with typed metadata, processed by one per-row
-``mapInArrow`` stage (``_per_row``).  No media library is used, but two
+``binary`` payload columns with typed metadata, processed by the engine's
+one Python row stage (``rowstage.per_row``, a ``mapInArrow`` pass; a NULL
+payload reaches a kernel as None and every payload kernel here treats it
+as malformed).  No media library is used, but two
 decode kernels are REAL anyway because their formats are pure byte
 arithmetic + stdlib compression: WAV/PCM16 (``decode_wav_features``) and PNG
 (``decode_png_features`` / ``decode_image`` — zlib inflate, CRC-checked
@@ -31,41 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
-
-def _per_row(df: DataFrame, in_cols, row_fn, out_schema: ST.StructType) -> DataFrame:
-    """The one Python stage every media kernel here runs in: a narrow
-    ``mapInArrow`` pass over ``df.select(*in_cols)``.  ``row_fn(*values)``
-    gets each row's Python values (binary columns arrive as ``bytes``) and
-    yields zero or more output tuples in ``out_schema`` order, so one
-    contract covers 1->1 kernels, skipping a malformed row and fanning a
-    video out to its keyframes.  Output batches are built against the Arrow
-    form of ``out_schema``, so NULLs survive in any column type.  A NULL
-    payload reaches ``row_fn`` as None; every payload kernel here treats it
-    as malformed (NULL features, or no row where it skips malformed input).
-
-    ``row_fn`` and everything it closes over are pickled with the stage and
-    unpickled once per task: a closed-over ``DecodeMemo`` or cache is
-    per-task state that starts empty in each task and dies with it."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = to_arrow_schema(out_schema)
-
-    def stage(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            cols = [[] for _ in schema]
-            for values in zip(*(c.to_pylist() for c in batch.columns)):
-                for out in row_fn(*values):
-                    for col, v in zip(cols, out, strict=True):
-                        col.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-                schema=schema,
-            )
-
-    return df.select(*in_cols).mapInArrow(stage, out_schema)
-
+from kwack_spark.rowstage import per_row
 
 IMAGE_META_SCHEMA = ST.StructType(
     [
@@ -162,7 +130,7 @@ def decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(IMAGE_META_SCHEMA.fields)
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def fake_decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
@@ -180,7 +148,7 @@ def fake_decode_image(df: DataFrame, payload_col: str, id_col: str) -> DataFrame
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(IMAGE_META_SCHEMA.fields)
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def sample_frames(
@@ -238,7 +206,7 @@ def resize_bytes(
             ST.StructField("resized", ST.BinaryType()),
         ]
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def byte_histogram_features(
@@ -271,7 +239,7 @@ def byte_histogram_features(
             ST.StructField("hist", ST.StringType()),
         ]
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 WAV_FEATURES_SCHEMA = ST.StructType(
@@ -318,7 +286,7 @@ def synth_wav_pcm16(
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return _per_row(df, [id_col], row, out_schema)
+    return per_row(df, [id_col], row, out_schema)
 
 
 def _wav_pcm16_bytes(frames: bytes, rate: int) -> bytes:
@@ -415,7 +383,7 @@ def decode_wav_features(df: DataFrame, payload_col: str, id_col: str) -> DataFra
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(WAV_FEATURES_SCHEMA.fields)
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def synth_wav_am(
@@ -461,7 +429,7 @@ def synth_wav_am(
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return _per_row(df, [id_col], row, out_schema)
+    return per_row(df, [id_col], row, out_schema)
 
 
 def audio_fingerprint64(
@@ -514,7 +482,7 @@ def audio_fingerprint64(
             ST.StructField("fp", ST.LongType(), True),
         ]
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 PNG_FEATURES_SCHEMA = ST.StructType(
@@ -727,7 +695,7 @@ def synth_png(df: DataFrame, id_col: str) -> DataFrame:
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return _per_row(df, [id_col], row, out_schema)
+    return per_row(df, [id_col], row, out_schema)
 
 
 def decode_png_features(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
@@ -751,7 +719,7 @@ def decode_png_features(df: DataFrame, payload_col: str, id_col: str) -> DataFra
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(PNG_FEATURES_SCHEMA.fields)
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def _blocky_grid(g: int, v: int):
@@ -790,7 +758,7 @@ def synth_png_blocky(df: DataFrame, id_col: str) -> DataFrame:
     blocking to find, never an all-pairs explosion."""
     import numpy as np
 
-    cache: dict = {}  # per task (see _per_row)
+    cache: dict = {}  # per task (see rowstage.per_row)
 
     def row(d):
         g, v = d % 128, (d // 128) % 4
@@ -806,7 +774,7 @@ def synth_png_blocky(df: DataFrame, id_col: str) -> DataFrame:
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return _per_row(df, [id_col], row, out_schema)
+    return per_row(df, [id_col], row, out_schema)
 
 
 def _dhash64_from_px(w: int, h: int, ch: int, px):
@@ -909,7 +877,7 @@ def dhash64(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
             ST.StructField("fp", ST.LongType(), True),
         ]
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def drop_payload_early(df: DataFrame, payload_col: str, feature_cols: list[str]) -> DataFrame:
@@ -1672,7 +1640,7 @@ def synth_jpeg(df: DataFrame, id_col: str) -> DataFrame:
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return _per_row(df, [id_col], row, out_schema)
+    return per_row(df, [id_col], row, out_schema)
 
 
 def synth_mjpeg(
@@ -1735,7 +1703,7 @@ def _synth_video(df, id_col, n_frames, every_n, container):
     """Shared synth kernel for the video fixtures: per (class, variant) the
     frame JPEGs are generated once and wrapped by ``container`` (bare
     concatenation for MJPEG, the RIFF/AVI writer for AVI)."""
-    cache: dict = {}  # per task (see _per_row)
+    cache: dict = {}  # per task (see rowstage.per_row)
 
     def row(d):
         g, v = d % 64, (d // 64) % 4
@@ -1752,7 +1720,7 @@ def _synth_video(df, id_col, n_frames, every_n, container):
             ST.StructField("payload", ST.BinaryType()),
         ]
     )
-    return _per_row(df, [id_col], row, out_schema)
+    return per_row(df, [id_col], row, out_schema)
 
 
 def _avi_container(frames, w: int = 72, h: int = 64, fps: int = 8) -> bytes:
@@ -1944,7 +1912,7 @@ def _codec_keyframes(df, payload_col, id_col, every_n, splitter):
             ST.StructField("fp", ST.LongType(), True),
         ]
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def decode_jpeg_features(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
@@ -1967,7 +1935,7 @@ def decode_jpeg_features(df: DataFrame, payload_col: str, id_col: str) -> DataFr
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(PNG_FEATURES_SCHEMA.fields)
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 WAV_TRIM_SCHEMA = ST.StructType(
@@ -2010,7 +1978,7 @@ def trim_wav_silence(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     out_schema = ST.StructType(
         [ST.StructField(id_col, ST.LongType())] + list(WAV_TRIM_SCHEMA.fields)
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)
 
 
 def synth_wav_stepped(
@@ -2043,7 +2011,7 @@ def synth_wav_stepped(
             ST.StructField("payload", ST.BinaryType(), False),
         ]
     )
-    return _per_row(df, [id_col], row, out_schema)
+    return per_row(df, [id_col], row, out_schema)
 
 
 def wav_rms_windows(
@@ -2075,4 +2043,4 @@ def wav_rms_windows(
             ST.StructField("peak", ST.IntegerType(), False),
         ]
     )
-    return _per_row(df, [id_col, payload_col], row, out_schema)
+    return per_row(df, [id_col, payload_col], row, out_schema)

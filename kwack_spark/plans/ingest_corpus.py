@@ -10,9 +10,10 @@ stack is the identity it must be.  This is the reference's whole test
 strategy (AbstractSchemaTest.java:60 'select * from topic' goldens) made
 differential.
 
-Scale shape: encode and decode are both narrow mapInPandas stages — no
-shuffle; at 100 TB this is the per-partition decode cost of the real Kafka
-read (1 task per topic-partition).
+Scale shape: encode (mapInPandas) and decode (the shared Python row stage,
+mapInArrow) are both narrow stages — no shuffle; at 100 TB this is the
+per-partition decode cost of the real Kafka read (1 task per
+topic-partition).
 """
 
 from __future__ import annotations
@@ -899,8 +900,9 @@ def kafka_two_topic_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming ingest under the oracle gate: the SAME decode path (schema-
 # registry Avro, Confluent framing, union branches) running on a file-source
 # stream of kafka-shaped frames — append-mode memory sink must equal the
-# batch decode, proving the one-code-path claim (streaming/ingest.py:
-# decode_stream) end-to-end rather than by inspection.
+# batch decode, proving the one-code-path claim (sources/kafka.py:
+# decode_topic on a streaming frame source) end-to-end rather than by
+# inspection.
 # ---------------------------------------------------------------------------
 
 
@@ -954,7 +956,7 @@ def streaming_kafka_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames.write.mode("overwrite").parquet(replay_dir)
 
     stream = si.stream_frames_from_dir(spark, replay_dir)
-    decoded = si.decode_stream(
+    decoded = ks.decode_topic(
         stream,
         "snation",
         value_serde=Serde(kind="latest"),

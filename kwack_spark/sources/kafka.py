@@ -14,9 +14,12 @@ Design for testability and scale:
   schema id (KwackEngine.java:1037-1045); stripping and id extraction happen
   JVM-side (substring / conv) so the scan stays in whole-stage codegen.
   ``skip.bytes`` trims a fixed prefix first (KwackConfig.java:96-98).
-- Schema-driven decode (Avro/JSON-Schema/Proto) runs in ONE Arrow-batched
-  mapInPandas stage; the registry snapshot is broadcast so per-record writer
-  schema resolution (Avro evolution) is a dict lookup on the executor.
+- Schema-driven decode (Avro/JSON-Schema/Proto) runs on the engine's one
+  Python row stage (``rowstage.per_row``, mapInArrow): one tuple per record,
+  the frame columns passed through, so rowinfo is the same JVM expression
+  on every path.  The registry snapshot rides with the stage, so per-record
+  writer schema resolution (Avro evolution) is a dict lookup on the
+  executor.
 - Primitive serdes, and plain-struct JSON Schema (``from_json``), decode
   JVM-side — no Python in the path.
 - At 100 TB the Kafka read parallelizes per topic-partition (1 task each,
@@ -33,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
 from kwack_spark.config import Serde
+from kwack_spark.rowstage import per_row
 from kwack_spark.schema import avro as avro_schema
 from kwack_spark.schema import jsonschema as json_schema
 from kwack_spark.schema import protobuf as proto_schema
@@ -153,22 +157,6 @@ def _decode_primitive_py(data: bytes, kind: str) -> Any:
 # ---------------------------------------------------------------------------
 # serde -> (StructType, converter)
 # ---------------------------------------------------------------------------
-
-
-def _dictify(value: Any, dt: ST.DataType) -> Any:
-    """Converter output (tuples for records) -> Arrow-friendly values
-    (dicts for structs), recursively."""
-    if value is None:
-        return None
-    if isinstance(dt, ST.StructType):
-        return {
-            f.name: _dictify(v, f.dataType) for f, v in zip(dt.fields, value)
-        }
-    if isinstance(dt, ST.ArrayType):
-        return [_dictify(v, dt.elementType) for v in value]
-    if isinstance(dt, ST.MapType):
-        return {k: _dictify(v, dt.valueType) for k, v in value.items()}
-    return value
 
 
 def resolve_serde(
@@ -314,8 +302,6 @@ def resolve_serde(
 # ---------------------------------------------------------------------------
 
 _ROWINFO_BUILDERS = {
-    # ksi/vsi: from the raw frame in the JVM path; the Python decode stage
-    # emits them as plain int columns instead (key/value don't survive it)
     "ksi": lambda: schema_id_col(F.col("key")).alias("ksi"),
     "vsi": lambda: schema_id_col(F.col("value")).alias("vsi"),
     "top": lambda: F.col("topic").alias("top"),
@@ -337,12 +323,11 @@ _ROWINFO_BUILDERS = {
 }
 
 
-def rowinfo_col(row_attributes: tuple[str, ...], ids_precomputed: bool = False) -> Column:
+def rowinfo_col(row_attributes: tuple[str, ...]) -> Column:
     """The rowinfo metadata struct (KwackEngine.java:696-743), holding the
     enabled attributes.  Header maps keep the LAST value per key
     (KwackEngine.java:1022-1035) — requires mapKeyDedupPolicy=LAST_WIN, set
-    by decode_topic.  ``ids_precomputed``: ksi/vsi already exist as int
-    columns (Python decode path) instead of being parsed from key/value.
+    by decode_topic.
 
     Permanent delta vs the reference: ``epo`` (leader epoch,
     KwackEngine.java:713) is NOT supported — Spark's Kafka source does not
@@ -355,10 +340,7 @@ def rowinfo_col(row_attributes: tuple[str, ...], ids_precomputed: bool = False) 
             continue  # documented permanent delta — see docstring
         if a not in _ROWINFO_BUILDERS:
             raise ValueError(f"unknown rowinfo attribute: {a!r}")
-        if ids_precomputed and a in ("ksi", "vsi"):
-            parts.append(F.col(a).alias(a))
-        else:
-            parts.append(_ROWINFO_BUILDERS[a]())
+        parts.append(_ROWINFO_BUILDERS[a]())
     return F.struct(*parts).alias("rowinfo")
 
 
@@ -395,11 +377,13 @@ def decode_topic(
 
     Two physical decode paths, chosen here and nowhere else: the JVM path
     (primitive casts, and ``from_json`` for plain-struct JSON Schema) and
-    one Arrow-batched Python stage (Avro, Protobuf, every other JSON
-    Schema) with a single per-record body for all three ``on_error``
-    modes.  'tag' always decodes on the Python stage (``from_json`` runs
-    in fail mode only, and JVM primitive casts yield NULLs instead of
-    errors, which could not be told apart from legitimate NULLs).
+    the shared Python row stage (``rowstage.per_row``: Avro, Protobuf,
+    every other JSON Schema) with a single per-record body for all three
+    ``on_error`` modes.  Its timestamps keep their instant whatever the
+    session time zone.  'tag' always decodes on the Python stage
+    (``from_json`` runs in fail mode only, and JVM primitive casts yield
+    NULLs instead of errors, which could not be told apart from legitimate
+    NULLs).
     """
     if on_error not in ("fail", "skip", "tag"):
         raise ValueError(
@@ -470,8 +454,8 @@ def decode_topic(
             ] + (["rowinfo"] if info_attrs else [])
             return out.select(*order)
 
-    # --- Python decode stage (Arrow-batched) ---------------------------------
-    writers_bc = spark.sparkContext.broadcast(registry.snapshot() if registry else {})
+    # --- Python decode stage (the shared row stage) --------------------------
+    writers = registry.snapshot() if registry else {}
 
     out_fields: list[ST.StructField] = []
     if want_rowkey:
@@ -499,109 +483,67 @@ def decode_topic(
             ST.StructField(f.name, f.dataType, True) for f in out_fields
         ]
         out_fields.append(ST.StructField("corrupt", ST.BooleanType(), True))
-    id_fields = [
-        ST.StructField("ksi", ST.IntegerType(), True),
-        ST.StructField("vsi", ST.IntegerType(), True),
-    ]
-    out_schema = ST.StructType(out_fields + id_fields + _frame_meta_fields())
 
     k_flat = k_conv is not None and k_st.fieldNames() != ["rowval"]
+    value_nulls = (None,) * (len(v_st.fields) if value_is_struct else 1)
 
-    tag_row = value_nulls = None
-    if tag:
-        # built once per plan: each tag-mode record starts from a copy
-        tag_row = {f.name: None for f in out_fields}
-        tag_row["corrupt"] = False
-        value_nulls = {f.name: None for f in v_st.fields} if value_is_struct else {}
-    columns = [f.name for f in out_schema.fields]
-    meta_names = [f.name for f in _frame_meta_fields()]
+    def decode_value(key, value):
+        if value is None:
+            return (None,)  # non-struct tombstone (struct tables dropped theirs)
+        body = value[skip_bytes:]
+        if v_conv is None:
+            if value_serde.kind == "rawjson":
+                return (split_frame(body)[1].decode("utf-8"),)
+            return (_decode_primitive_py(body, value_serde.kind),)
+        row = v_conv(body, writers, key) if value_serde.tag else v_conv(body, writers)
+        return row if value_is_struct else row[:1]
 
-    def decode_batches(batches):
-        import pandas as pd
+    def decode_row(key, value, *meta):
+        # on_error only decides what a raising key or value decode does:
+        # 'fail' re-raises, 'skip' drops the record, 'tag' nulls that part's
+        # data fields and sets corrupt (key and value decode independently,
+        # so a poison value keeps its identifying rowkey, and vice versa)
+        corrupt = False
+        head = ()
+        if want_rowkey:
+            try:
+                head = (_decode_key(key, k_conv, k_flat, writers, skip_bytes, key_serde.kind),)
+            except Exception:
+                if on_error == "fail":
+                    raise
+                if on_error == "skip":
+                    return
+                head, corrupt = (None,), True
+        try:
+            data = decode_value(key, value)
+        except Exception:
+            if on_error == "fail":
+                raise
+            if on_error == "skip":
+                return
+            data, corrupt = value_nulls, True
+        yield (*head, *data, *((corrupt,) if tag else ()), key, value, *meta)
 
-        writers = writers_bc.value
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                value = rec.value
-                if value_is_struct and value is None:
-                    continue
-                # on_error only decides what a raising key or value decode
-                # does: 'fail' re-raises, 'skip' drops the record, 'tag'
-                # nulls that part's data fields and sets corrupt (key and
-                # value decode independently, so a poison value keeps its
-                # identifying rowkey, and vice versa)
-                out: dict[str, Any] = dict(tag_row) if tag else {}
-                if want_rowkey:
-                    try:
-                        out["rowkey"] = _decode_key(
-                            rec.key, k_conv, k_st, k_flat, writers, skip_bytes,
-                            key_serde.kind,
-                        )
-                    except Exception:
-                        if on_error == "fail":
-                            raise
-                        if on_error == "skip":
-                            continue
-                        out["corrupt"] = True
-                try:
-                    if value is None:
-                        # non-struct tombstone (struct tables dropped theirs above)
-                        out["rowval"] = None
-                    elif v_conv is None:
-                        body = bytes(value[skip_bytes:] if skip_bytes else value)
-                        if value_serde.kind == "rawjson":
-                            out["rowval"] = split_frame(body)[1].decode("utf-8")
-                        else:
-                            out["rowval"] = _decode_primitive_py(
-                                body, value_serde.kind
-                            )
-                    else:
-                        body = value[skip_bytes:] if skip_bytes else value
-                        row = (
-                            v_conv(body, writers, rec.key)
-                            if value_serde.tag
-                            else v_conv(body, writers)
-                        )
-                        if value_is_struct:
-                            for f, v in zip(v_st.fields, row):
-                                out[f.name] = _dictify(v, f.dataType)
-                        else:
-                            out["rowval"] = _dictify(row[0], v_st.fields[0].dataType)
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    out.update(value_nulls)
-                    out["corrupt"] = True
-                out["ksi"] = None if rec.key is None else split_frame(bytes(rec.key))[0]
-                out["vsi"] = None if value is None else split_frame(bytes(value))[0]
-                for m in meta_names:
-                    out[m] = getattr(rec, m)
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=columns)
-
-    decoded = df.mapInPandas(decode_batches, out_schema)
-    data_cols = [f.name for f in out_fields]
-    meta_cols = [rowinfo_col(info_attrs, ids_precomputed=True)] if info_attrs else []
+    # data columns leave the stage under positional names, so a field named
+    # like a frame column (key, value, topic, ...) cannot clash with it
+    stage_schema = ST.StructType(
+        [ST.StructField(f"_{i}", f.dataType, f.nullable) for i, f in enumerate(out_fields)]
+        + KAFKA_FRAME_SCHEMA.fields
+    )
+    decoded = per_row(df, KAFKA_FRAME_SCHEMA.fieldNames(), decode_row, stage_schema)
+    data_cols = [F.col(f"_{i}").alias(f.name) for i, f in enumerate(out_fields)]
+    meta_cols = [rowinfo_col(info_attrs)] if info_attrs else []
     return decoded.select(*data_cols, *meta_cols)
 
 
-def _frame_meta_fields() -> list[ST.StructField]:
-    return [f for f in KAFKA_FRAME_SCHEMA.fields if f.name not in ("key", "value")]
-
-
-def _decode_key(key: Any, k_conv, k_st, k_flat: bool, writers: dict, skip_bytes: int, kind: str):
+def _decode_key(key: Any, k_conv, k_flat: bool, writers: dict, skip_bytes: int, kind: str):
     if key is None:
         return None
-    body = key[skip_bytes:] if skip_bytes else key
+    body = key[skip_bytes:]
     if k_conv is None:  # primitive key decoded Python-side in the mixed path
-        return _decode_primitive_py(bytes(body), kind)
+        return _decode_primitive_py(body, kind)
     row = k_conv(body, writers)
-    if k_flat:
-        return _dictify(row, k_st)
-    return _dictify(row[0], k_st.fields[0].dataType)
+    return row if k_flat else row[0]
 
 
 def _jvm_key_col(key_serde: Serde, skip_bytes: int) -> Column:

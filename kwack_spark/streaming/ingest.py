@@ -3,9 +3,9 @@
 The reference has NO streaming operators (batch catch-up only, SURVEY.md
 §1.1/§2.C); this module is the beyond-parity layer.  The design insight is
 that ``sources/kafka.py:decode_topic`` is a narrow transformation (filter +
-mapInPandas + project) — it works UNCHANGED on a streaming DataFrame, so
-batch and streaming ingest share one code path, and the streaming additions
-are purely the stateful operators on top:
+the shared Python row stage + project) — it works UNCHANGED on a streaming
+DataFrame, so batch and streaming ingest share one code path, and the
+streaming additions are purely the stateful operators on top:
 
 - event-time tumbling/sliding windows with watermarks (late-data bound)
 - session windows (gap-based)
@@ -23,9 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kwack_spark.config import Serde
-from kwack_spark.schema.registry import MockSchemaRegistry
-from kwack_spark.sources.kafka import KAFKA_FRAME_SCHEMA, decode_topic
+from kwack_spark.sources.kafka import KAFKA_FRAME_SCHEMA
 from kwack_spark.streaming.trigger import LIVE_PROCESSING_TIME, start_query
 
 
@@ -66,38 +64,10 @@ def _empty_pdf(*cols):
     return pd.DataFrame({name: pd.Series([], dtype=dt) for name, dt in cols})
 
 
-def stream_topic_frames(
-    spark: SparkSession,
-    bootstrap: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """readStream.format('kafka') — the continuous twin of
-    sources/kafka.py:read_topic_frames."""
-    from kwack_spark.sources.kafka import read_topic_frames
-
-    return read_topic_frames(spark, bootstrap, topic, starting_offsets, streaming=True)
-
-
 def stream_frames_from_dir(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of kafka-shaped frames (tests / replay): any
     directory of parquet files with the frame schema becomes a stream."""
     return spark.readStream.schema(KAFKA_FRAME_SCHEMA).parquet(path)
-
-
-def decode_stream(
-    frames: DataFrame,
-    topic: str,
-    value_serde: Serde,
-    key_serde: Serde | None = None,
-    registry: MockSchemaRegistry | None = None,
-    row_attributes: tuple[str, ...] = ("rowkey", "ksi", "vsi", "par", "off", "ts", "hdr"),
-) -> DataFrame:
-    """The batch decode path applied to a streaming frame source — one code
-    path for both modes (decode_topic is narrow, so it streams as-is)."""
-    return decode_topic(
-        frames, topic, value_serde, key_serde, registry, row_attributes
-    )
 
 
 # ---------------------------------------------------------------------------

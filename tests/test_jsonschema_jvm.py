@@ -113,7 +113,7 @@ def test_decode_topic_takes_from_json_path(spark):
         row_attributes=("rowkey", "vsi", "off"),
     )
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "from_json" in plan and "MapInPandas" not in plan
+    assert "from_json" in plan and "MapInArrow" not in plan
     rows = sorted(out.collect(), key=lambda r: r.id)
     assert out.columns == [
         "rowkey", "id", "name", "score", "tags", "attrs", "kind", "flag", "rowinfo",

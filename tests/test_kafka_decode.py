@@ -200,8 +200,9 @@ def test_primitive_serdes_jvm_path(spark):
     )
     rows = sorted(out.collect(), key=lambda r: r.rowkey)
     assert [(r.rowkey, r.rowval) for r in rows] == [(7, "hello"), (8, "world")]
-    # no mapInPandas in the plan — the decode stayed JVM-side
-    assert "mapInPandas" not in out._jdf.queryExecution().toString()
+    # no Python stage in the plan — the decode stayed JVM-side
+    plan = out._jdf.queryExecution().toString()
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan
 
 
 def test_primitive_negative_int_key(spark):
@@ -221,6 +222,54 @@ def test_double_primitive_value(spark):
     vals = [st.pack(">d", 2.5)]
     out = ks.decode_topic(make_frames(spark, vals), "t1", parse_serde("double"))
     assert out.collect()[0].rowval == 2.5
+
+
+def test_nan_is_a_value_not_null(spark):
+    """A NaN double decodes to NaN, not NULL, both as a primitive rowval
+    and as an Avro field; a tombstone stays NULL."""
+    import math
+    import struct as st
+
+    out = ks.decode_topic(
+        make_frames(spark, [st.pack(">d", float("nan")), None]), "t1",
+        parse_serde("double"), row_attributes=("off",),
+    )
+    rows = sorted(out.collect(), key=lambda r: r.rowinfo.off)
+    assert math.isnan(rows[0].rowval) and rows[1].rowval is None
+
+    schema = {"type": "record", "name": "D", "fields": [{"name": "d", "type": "double"}]}
+    payload = ks.confluent_frame(avro_schema.encode({"d": float("nan")}, schema), 1)
+    out = ks.decode_topic(
+        make_frames(spark, [payload]), "t1",
+        Serde(kind="avro", schema_str=json.dumps(schema)), row_attributes=(),
+    )
+    assert math.isnan(out.collect()[0].d)
+
+
+def test_value_fields_named_like_frame_columns(spark):
+    """Value fields named like Kafka frame columns (topic, key, value) are
+    plain data columns; rowinfo still reads the frame's own columns."""
+    schema = {
+        "type": "record",
+        "name": "R",
+        "fields": [
+            {"name": "topic", "type": "string"},
+            {"name": "key", "type": "int"},
+            {"name": "value", "type": "int"},
+        ],
+    }
+    payload = ks.confluent_frame(
+        avro_schema.encode({"topic": "x", "key": 5, "value": 6}, schema), 4
+    )
+    out = ks.decode_topic(
+        make_frames(spark, [payload], keys=[b"k"]), "t1",
+        Serde(kind="avro", schema_str=json.dumps(schema)),
+        key_serde=Serde(kind="string"), row_attributes=("rowkey", "vsi", "top"),
+    )
+    assert out.columns == ["rowkey", "topic", "key", "value", "rowinfo"]
+    row = out.collect()[0]
+    assert (row.rowkey, row.topic, row.key, row.value) == ("k", "x", 5, 6)
+    assert row.rowinfo.asDict() == {"vsi": 4, "top": "t1"}
 
 
 def test_headers_last_wins(spark):
@@ -443,7 +492,7 @@ def test_on_error_tag_primitive_value_and_tombstone(spark):
     assert rows[1].rowval is None and rows[1].corrupt is True  # wrong width
     assert rows[2].rowval is None and rows[2].corrupt is False  # tombstone
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "MapInPandas" in plan  # python stage, not the JVM primitive path
+    assert "MapInArrow" in plan  # python stage, not the JVM primitive path
 
 
 def test_on_error_rejects_unknown_mode(spark):
@@ -523,3 +572,68 @@ def test_on_error_modes_agree_on_clean_input(spark, on_error):
     ]
     if tag:
         assert [r.corrupt for r in rows] == [False, False]
+
+
+TS_AVRO = {
+    "type": "record",
+    "name": "Ts",
+    "fields": [
+        {"name": "us", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+        {"name": "ms", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+    ],
+}
+
+TS_PROTO = """
+syntax = "proto3";
+message Ts { google.protobuf.Timestamp ts = 1; }
+"""
+
+
+def test_decoded_timestamps_ignore_session_time_zone(spark):
+    """The Avro and Protobuf converters return naive UTC datetimes; the
+    decoded instant (and the frame timestamp behind rowinfo.ts) must not
+    move with spark.sql.session.timeZone."""
+    from pyspark.sql import functions as F
+
+    instants = [0, 1_700_000_000_123_000]
+    desc = proto_schema.resolve(proto_schema.parse_proto(TS_PROTO), "Ts")
+    avro_frames = [
+        ks.confluent_frame(avro_schema.encode({"us": us, "ms": us // 1000}, TS_AVRO), 1)
+        for us in instants
+    ]
+    proto_frames = [
+        proto_schema.encode_message(
+            {"ts": {"seconds": us // 10**6 + 1, "nanos": us % 10**6 * 1000}}, desc
+        )
+        for us in instants
+    ]
+
+    def decoded_micros():
+        avro = ks.decode_topic(
+            make_frames(spark, avro_frames), "t1",
+            Serde(kind="avro", schema_str=json.dumps(TS_AVRO)),
+            row_attributes=("off", "ts"),
+        )
+        proto = ks.decode_topic(
+            make_frames(spark, proto_frames), "t1",
+            Serde(kind="proto", schema_str=TS_PROTO, message="Ts"),
+            row_attributes=("off", "ts"),
+        )
+        return (
+            sorted(tuple(r) for r in avro.select(
+                "rowinfo.off", F.unix_micros("us"), F.unix_micros("ms"), "rowinfo.ts"
+            ).collect()),
+            sorted(tuple(r) for r in proto.select(
+                "rowinfo.off", F.unix_micros("ts"), "rowinfo.ts"
+            ).collect()),
+        )
+
+    utc = decoded_micros()
+    assert [r[1:3] for r in utc[0]] == [(us, us) for us in instants]
+    assert [r[1] for r in utc[1]] == [us + 10**6 for us in instants]
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        assert decoded_micros() == utc
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)

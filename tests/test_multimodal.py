@@ -8,6 +8,7 @@ import struct
 import pytest
 
 from kwack_spark.operators import multimodal as mm
+from kwack_spark.rowstage import per_row
 
 
 def _wav(chunks: bytes) -> bytes:
@@ -467,7 +468,7 @@ def test_decode_memo_bounds_bytes_not_entries():
 
 
 def test_per_row_contract(spark):
-    """The one media stage: a row function yields zero, one or many rows
+    """The one Python row stage: a row function yields zero, one or many rows
     per input, NULLs survive in nullable long and int columns, and the
     output schema is exactly the one asked for — over two partitions, one
     of them empty."""
@@ -494,7 +495,7 @@ def test_per_row_contract(spark):
             ST.StructField("small", ST.IntegerType(), True),
         ]
     )
-    out = mm._per_row(df, ["doc_id", "payload"], row, out_schema)
+    out = per_row(df, ["doc_id", "payload"], row, out_schema)
     assert out.schema == out_schema
     assert sorted(tuple(r) for r in out.collect()) == [
         (1, 0, None, 0),
@@ -524,7 +525,7 @@ def test_per_row_memo_starts_empty_in_each_task(spark):
     out_schema = ST.StructType(
         [ST.StructField("doc_id", ST.LongType()), ST.StructField("held", ST.LongType())]
     )
-    out = mm._per_row(df, ["doc_id", "payload"], row, out_schema)
+    out = per_row(df, ["doc_id", "payload"], row, out_schema)
     for _ in range(2):
         helds = [r.held for r in out.collect()]
         assert len(helds) == 12

@@ -50,7 +50,7 @@ def test_stream_decode_matches_batch(spark, tmp_path):
 
     stream = si.stream_frames_from_dir(spark, path)
     assert stream.isStreaming
-    decoded = si.decode_stream(
+    decoded = ks.decode_topic(
         stream, "evs", Serde(kind="latest"), registry=reg, row_attributes=("off",)
     )
     q = si.to_memory_sink(decoded, "evs_stream")
@@ -885,6 +885,44 @@ def test_live_topic_runs_on_processing_time_cadence(spark, tmp_path, monkeypatch
         assert q.isActive
     finally:
         q.stop()
+
+
+def test_live_topic_forwards_connection_settings(spark, monkeypatch):
+    """A broker-fed live topic reads its frames with the same connection
+    settings as register_topics: -X client properties (SSL/SASL), the
+    metadata timeout, the topic's partitions and the starting offset.
+    No broker: the reader is replaced by a recorder."""
+    from kwack_spark.config import KwackConfig
+    from kwack_spark.engine import KwackSpark
+
+    class Recorded(Exception):
+        pass
+
+    calls = []
+
+    def recording_reader(spark_, bootstrap, topic, *args, **kwargs):
+        calls.append((bootstrap, topic, args, kwargs))
+        raise Recorded
+
+    monkeypatch.setattr(ks, "read_topic_frames", recording_reader)
+    props = {"security.protocol": "SASL_SSL", "sasl.mechanism": "PLAIN"}
+    cfg = KwackConfig(
+        kafka_bootstrap="broker:9093",
+        client_props=props,
+        metadata_timeout_ms=1234,
+        topic_partitions={"lt": [0, 2]},
+        starting_offset="end",
+    )
+    eng = KwackSpark(cfg, spark=spark, registry=MockSchemaRegistry())
+    with pytest.raises(Recorded):
+        eng.register_live_topic("lt", value_serde=Serde(kind="string"))
+    [(bootstrap, topic, args, kwargs)] = calls
+    assert (bootstrap, topic, args) == ("broker:9093", "lt", ())
+    assert kwargs["streaming"] is True
+    assert kwargs["client_props"] == props
+    assert kwargs["metadata_timeout_ms"] == 1234
+    assert kwargs["partitions"] == [0, 2]
+    assert kwargs["offset_spec"].kind == "end"
 
 
 def test_continuous_start_quiets_falling_behind_logger(spark, tmp_path):
