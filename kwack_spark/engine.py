@@ -130,7 +130,8 @@ class KwackSpark:
         batch ingest — from readStream Kafka frames (production) or a
         frames directory (tests/replay).  Returns the StreamingQuery;
         callers sync with ``.processAllAvailable()`` and the engine stops
-        it on ``stop()``.
+        it on ``stop()``.  A serde left as None comes from the config
+        (``KwackConfig.value_serde`` / ``key_serde``), like a batch topic's.
 
         ``durable_path`` switches the sink from the in-memory table to the
         exactly-once parquet landing (streaming/sink.py): each micro-batch
@@ -155,7 +156,6 @@ class KwackSpark:
         logger, Spark's ``ProcessingTimeExecutor`` ("Current batch is
         falling behind"), to ERROR in the driver JVM: for every streaming
         query in that JVM, and until it exits."""
-        from kwack_spark.config import Serde
         from kwack_spark.sources.kafka import decode_topic, read_topic_frames
         from kwack_spark.streaming import ingest as si
 
@@ -178,8 +178,8 @@ class KwackSpark:
         decoded = decode_topic(
             frames,
             topic,
-            value_serde or self.config.topic_serdes.get(topic, Serde(kind="binary")),
-            key_serde=key_serde,
+            value_serde or self.config.value_serde(topic),
+            key_serde=key_serde or self.config.key_serde(topic),
             registry=self.registry,
             row_attributes=self.config.row_attributes,
             skip_bytes=self.config.skip_bytes,

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from kwack_spark.config import Serde
 from kwack_spark.functions.union import union_extract, union_tag
-from kwack_spark import scratch
+from kwack_spark.plans.pipeline import drain_to_table, replay
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.schema import avro as avro_schema
@@ -84,6 +84,56 @@ _NATION_AVRO = {
 }
 
 
+def _nation_avro_frames(spark: SparkSession, sf_dir: str, topic: str):
+    """nation -> Confluent-framed Avro frames on ``topic`` (int key,
+    union-bearing value: branch per key % 3).  Returns the frames and the
+    registry that holds the value schema."""
+    reg = MockSchemaRegistry()
+    sid = reg.register(f"{topic}-value", json.dumps(_NATION_AVRO), "AVRO")
+
+    def enc(rec):
+        k = int(rec.n_nationkey).to_bytes(4, "big", signed=True)
+        mod = rec.n_nationkey % 3
+        extra = (
+            (1, int(rec.n_nationkey) * 10)
+            if mod == 0
+            else (2, "x" + rec.n_name) if mod == 1 else (0, None)
+        )
+        payload = avro_schema.encode(
+            {
+                "n_nationkey": int(rec.n_nationkey),
+                "n_name": rec.n_name,
+                "n_regionkey": int(rec.n_regionkey),
+                "extra": extra,
+            },
+            _NATION_AVRO,
+        )
+        return k, ks.confluent_frame(payload, sid)
+
+    return _to_frames(T(spark, sf_dir, "nation"), enc, topic), reg
+
+
+def _decode_nation(frames: DataFrame, topic: str, reg) -> DataFrame:
+    """decode_topic over ``_nation_avro_frames`` -> flattened columns plus
+    the union helpers, the shape both nation Avro oracles grade."""
+    decoded = ks.decode_topic(
+        frames,
+        topic,
+        value_serde=Serde(kind="latest"),
+        key_serde=Serde(kind="int"),
+        registry=reg,
+    )
+    return decoded.select(
+        F.col("rowkey").cast("long").alias("rowkey"),
+        "n_nationkey",
+        "n_name",
+        "n_regionkey",
+        union_tag(F.col("extra"), ["u0", "u1"]).alias("extra_tag"),
+        union_extract(F.col("extra"), "u0").alias("extra_long"),
+        union_extract(F.col("extra"), "u1").alias("extra_str"),
+    )
+
+
 @register(
     "kafka_avro_roundtrip",
     # identity oracle: decode(encode(row)) == row, union branch per key%3
@@ -101,46 +151,8 @@ _NATION_AVRO = {
 def kafka_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation -> Confluent-framed Avro records (int key, union-bearing value)
     -> decode_topic -> flattened columns + union helpers."""
-    reg = MockSchemaRegistry()
-    sid = reg.register("nation-value", json.dumps(_NATION_AVRO), "AVRO")
-    schema = _NATION_AVRO
-
-    def enc(rec):
-        k = int(rec.n_nationkey).to_bytes(4, "big", signed=True)
-        mod = rec.n_nationkey % 3
-        extra = (
-            (1, int(rec.n_nationkey) * 10)
-            if mod == 0
-            else (2, "x" + rec.n_name) if mod == 1 else (0, None)
-        )
-        payload = avro_schema.encode(
-            {
-                "n_nationkey": int(rec.n_nationkey),
-                "n_name": rec.n_name,
-                "n_regionkey": int(rec.n_regionkey),
-                "extra": extra,
-            },
-            schema,
-        )
-        return k, ks.confluent_frame(payload, sid)
-
-    frames = _to_frames(T(spark, sf_dir, "nation"), enc, "nation")
-    decoded = ks.decode_topic(
-        frames,
-        "nation",
-        value_serde=Serde(kind="latest"),
-        key_serde=Serde(kind="int"),
-        registry=reg,
-    )
-    return decoded.select(
-        F.col("rowkey").cast("long").alias("rowkey"),
-        "n_nationkey",
-        "n_name",
-        "n_regionkey",
-        union_tag(F.col("extra"), ["u0", "u1"]).alias("extra_tag"),
-        union_extract(F.col("extra"), "u0").alias("extra_long"),
-        union_extract(F.col("extra"), "u1").alias("extra_str"),
-    )
+    frames, reg = _nation_avro_frames(spark, sf_dir, "nation")
+    return _decode_nation(frames, "nation", reg)
 
 
 # ---------------------------------------------------------------------------
@@ -924,60 +936,9 @@ def streaming_kafka_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch code path (decode is narrow/stateless, so append mode needs no
     watermark); a Kafka readStream swaps in for the file source with no
     other change."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
-    reg = MockSchemaRegistry()
-    sid = reg.register("snation-value", json.dumps(_NATION_AVRO), "AVRO")
-    schema = _NATION_AVRO
-
-    def enc(rec):
-        k = int(rec.n_nationkey).to_bytes(4, "big", signed=True)
-        mod = rec.n_nationkey % 3
-        extra = (
-            (1, int(rec.n_nationkey) * 10)
-            if mod == 0
-            else (2, "x" + rec.n_name) if mod == 1 else (0, None)
-        )
-        payload = avro_schema.encode(
-            {
-                "n_nationkey": int(rec.n_nationkey),
-                "n_name": rec.n_name,
-                "n_regionkey": int(rec.n_regionkey),
-                "extra": extra,
-            },
-            schema,
-        )
-        return k, ks.confluent_frame(payload, sid)
-
-    frames = _to_frames(T(spark, sf_dir, "nation"), enc, "snation")
-    replay_dir = scratch.scratch_dir(spark, "kafka_replay")
-    frames.write.mode("overwrite").parquet(replay_dir)
-
-    stream = si.stream_frames_from_dir(spark, replay_dir)
-    decoded = ks.decode_topic(
-        stream,
-        "snation",
-        value_serde=Serde(kind="latest"),
-        key_serde=Serde(kind="int"),
-        registry=reg,
-    )
-    out = decoded.select(
-        F.col("rowkey").cast("long").alias("rowkey"),
-        "n_nationkey",
-        "n_name",
-        "n_regionkey",
-        union_tag(F.col("extra"), ["u0", "u1"]).alias("extra_tag"),
-        union_extract(F.col("extra"), "u0").alias("extra_long"),
-        union_extract(F.col("extra"), "u1").alias("extra_str"),
-    )
-    sink = f"strm_{uuid.uuid4().hex[:8]}"
-    q = si.to_memory_sink(out, sink, output_mode="append")
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_kafka_avro_decode: stream did not finish in 300s")
-    return spark.table(sink)
+    frames, reg = _nation_avro_frames(spark, sf_dir, "snation")
+    out = _decode_nation(replay(frames, "kafka_replay"), "snation", reg)
+    return drain_to_table(out, "streaming_kafka_avro_decode")
 
 
 # ---------------------------------------------------------------------------

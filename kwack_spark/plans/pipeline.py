@@ -10,9 +10,11 @@ oracle can verify it bit-for-bit.
 from __future__ import annotations
 
 import contextlib
+import uuid
 
 from pyspark.sql import functions as F
 
+from kwack_spark import scratch
 from kwack_spark.functions import text as TX
 from kwack_spark.functions import vectors as V
 from kwack_spark.operators import asof, dedup, sampling, similarity
@@ -28,18 +30,72 @@ def _toks(c: str = "text") -> str:
     return _TOKS.format(c=c)
 
 @contextlib.contextmanager
-def _few_shuffle_partitions(spark, n: int = 8):
-    """Pin a small shuffle-partition count for the duration of a bounded
-    streaming replay: the state store creates one instance per shuffle
-    partition, so a caller session's default (e.g. 200) costs far more than
-    the test-scale data justifies.  Restored afterward — a real deployment
+def _few_shuffle_partitions(spark):
+    """Pin 8 shuffle partitions for the duration of a bounded streaming
+    replay: the state store creates one instance per shuffle partition, so
+    a caller session's default (e.g. 200) costs far more than the
+    test-scale data justifies.  Restored afterward — a real deployment
     sizes this to the cluster, not to the replay fixture."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+# a bounded replay that has not drained by then is stuck, not slow
+DRAIN_TIMEOUT_S = 300
+
+def replay(
+    df,
+    tag: str,
+    n: int | None = None,
+    *cols,
+    max_files_per_trigger: int | None = None,
+    readers: int = 1,
+):
+    """The bounded stream every streaming query grades: ``df`` is written
+    once under a fresh ``scratch.scratch_dir(spark, tag)`` (hash-partitioned
+    on ``cols`` into ``n`` files when ``n`` is given, round-robin when no
+    ``cols``) and returned as the file-source stream over it, at most
+    ``max_files_per_trigger`` files per micro-batch.  ``readers=k`` returns
+    a list of k independent streams over the one directory instead: Spark
+    plans a self-join of ONE stream over a single shared source, so two
+    sides that must replay as independent streams each need their own."""
+    spark = df.sparkSession
+    path = scratch.scratch_dir(spark, tag)
+    (df if n is None else df.repartition(n, *cols)).write.mode("overwrite").parquet(path)
+
+    def read():
+        reader = spark.readStream.schema(df.schema)
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        return reader.parquet(path)
+
+    return read() if readers == 1 else [read() for _ in range(readers)]
+
+def await_drain(q, query: str):
+    """Wait for ``q``, a query started with ``Trigger.AvailableNow``, to
+    drain its input.  After ``DRAIN_TIMEOUT_S`` it is stopped and a
+    ``TimeoutError`` naming ``query`` is raised.  Returns ``q``."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"{query}: stream did not finish in {DRAIN_TIMEOUT_S}s")
+    return q
+
+def drain(df, query: str, output_mode: str = "append"):
+    """Drain the bounded stream ``df`` into a fresh memory table under the
+    shuffle pin and return the finished query (its table is
+    ``spark.table(q.name)``)."""
+    from kwack_spark.streaming import ingest as si
+
+    with _few_shuffle_partitions(df.sparkSession):
+        sink = f"{query}_{uuid.uuid4().hex[:8]}"
+        return await_drain(si.to_memory_sink(df, sink, output_mode), query)
+
+def drain_to_table(df, query: str, output_mode: str = "append"):
+    """``drain`` ``df`` and return the memory table it landed in."""
+    return df.sparkSession.table(drain(df, query, output_mode).name)
 
 _SHINGLES = """
     CASE WHEN len(tk) >= 3

@@ -3000,11 +3000,11 @@ def knn_mutual_components(spark, sf_dir):
     # per round (O(log diameter) rounds); the loop breaks early, so a
     # high cap costs nothing.  The label table is <= 3n ids — partitions
     # sized to the edge set, not the session default, since per-round
-    # cost here is scheduling, not data (same rationale as the streaming
-    # replays' _few_shuffle_partitions).
+    # cost here is scheduling, not data: the same 8-partition pin every
+    # bounded streaming replay drains under (pipeline.drain).
     from kwack_spark.plans.pipeline import _few_shuffle_partitions
 
-    with _few_shuffle_partitions(spark, 8):
+    with _few_shuffle_partitions(spark):
         comp = graph.connected_components(mutual, max_iter=256)
         comp = comp.localCheckpoint()
     return (

@@ -4,10 +4,13 @@ Split out of plans/pipeline.py (same registrations, same semantics);
 shared helpers live in pipeline.py, the aggregator that imports this
 module at the bottom.
 
-Replay staging (r12): sites with a high-cardinality row key hash-partition
-the replay write (``repartition(n, key)``) instead of round-robin
-``repartition(n)`` — a keyless repartition first pays a local sort of its
-input for retry determinism (spark.sql.execution.sortBeforeRepartition),
+Every query replays its input through ``pipeline.replay`` and drains it
+through ``pipeline.drain_to_table`` (or ``await_drain`` for the manifest
+sink): one timeout, one shuffle pin.  Replay staging (r12): sites with a
+high-cardinality row key hash-partition the replay write
+(``replay(df, tag, n, key)``) instead of round-robin
+``replay(df, tag, n)`` — a keyless repartition first pays a local sort of
+its input for retry determinism (spark.sql.execution.sortBeforeRepartition),
 while a deterministic hash key needs none and is the form that stays
 correct under map retries at scale (SPARK-38388).  Micro-batch COMPOSITION
 changes; every graded end-of-stream result is arrival-order invariant by
@@ -18,14 +21,11 @@ keep the round-robin form.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import functions as F
 
-from kwack_spark.functions import text as TX
-from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling, similarity
 from kwack_spark import scratch
+from kwack_spark.functions import text as TX
+from kwack_spark.operators import dedup
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.plans.pipeline import (  # shared core
@@ -39,6 +39,10 @@ from kwack_spark.plans.pipeline import (  # shared core
     _url_raw_col,
     _video_keyframes,
     _video_pair_rollup,
+    await_drain,
+    drain,
+    drain_to_table,
+    replay,
 )
 
 
@@ -64,16 +68,10 @@ def streaming_window_counts(spark, sf_dir):
     (streaming/ingest.py), Trigger.AvailableNow into a memory sink; the
     returned DataFrame is the sink table.  Complete output mode emits open
     windows so end-of-stream equals batch."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
-    e = T(spark, sf_dir, "events")
-    replay_dir = scratch.scratch_dir(spark, "stream_replay")
-    e.write.mode("overwrite").parquet(replay_dir)
-    stream = spark.readStream.schema(e.schema).parquet(replay_dir)
     agg = si.windowed_counts(
-        stream,
+        replay(T(spark, sf_dir, "events"), "stream_replay"),
         "ts",
         keys=["event_type"],
         window="1 hour",
@@ -83,13 +81,9 @@ def streaming_window_counts(spark, sf_dir):
             F.sum(F.col("value").cast("decimal(18,3)")).cast("double").alias("total_value"),
         ],
     )
-    sink = f"strm_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_window_counts: stream did not finish in 300s")
-    return spark.table(sink).select("event_type", "window_start", "n", "total_value")
+    return drain_to_table(agg, "streaming_window_counts", "complete").select(
+        "event_type", "window_start", "n", "total_value"
+    )
 
 @register(
     "streaming_quality_gate",
@@ -133,17 +127,9 @@ def streaming_quality_gate(spark, sf_dir):
     projection runs per micro-batch into an append-mode memory sink.  At
     100 TB this is the shape of inline ingest filtering: zero state, the
     gate rides the decode scan."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
-    d = T(spark, sf_dir, "documents")
-    replay_dir = scratch.scratch_dir(spark, "qgate_replay")
-    d.repartition(4, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_dir)
+    stream = replay(
+        T(spark, sf_dir, "documents"), "qgate_replay", 4, "doc_id",
+        max_files_per_trigger=2,
     )
     ws = F.filter(F.split("text", " "), lambda t: F.length(t) > 0)
     base = stream.select("doc_id", "text", ws.alias("ws"))
@@ -178,12 +164,9 @@ def streaming_quality_gate(spark, sf_dir):
         stop_ratio.alias("stop_ratio"),
         (gopher_ok & stop_ok).alias("keep"),
     )
-    sink = f"qgate_{uuid.uuid4().hex[:8]}"
-    q = si.to_memory_sink(gated, sink, output_mode="append")
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("streaming_quality_gate: stream did not finish in 300s")
-    return spark.table(sink).select("doc_id", "n_words", "stop_ratio", "keep")
+    return drain_to_table(gated, "streaming_quality_gate").select(
+        "doc_id", "n_words", "stop_ratio", "keep"
+    )
 
 @register(
     "streaming_stateful_running_counts",
@@ -202,27 +185,13 @@ def streaming_stateful_running_counts(spark, sf_dir):
     per-key running count kept in the state store (streaming/ingest.py:
     stateful_running_counts), replayed over 4 micro-batches; the last
     update per key (monotone max) equals the batch aggregate."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("event_id", "event_type")
-    replay_dir = scratch.scratch_dir(spark, "state_replay")
-    e.repartition(4, F.col("event_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(e, "state_replay", 4, "event_id", max_files_per_trigger=1)
     counts = si.stateful_running_counts(stream, "event_type")
-    sink = f"state_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(counts, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stateful stream did not finish in 300s")
     return (
-        spark.table(sink)
+        drain_to_table(counts, "streaming_stateful_running_counts", "update")
         .groupBy("event_type")
         .agg(F.max("n").alias("n"))
     )
@@ -254,24 +223,15 @@ def streaming_exactly_once_sink(spark, sf_dir):
     from kwack_spark.streaming import sink as sk
 
     e = T(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    replay_dir = scratch.scratch_dir(spark, "sink_replay")
-    e.repartition(4, F.col("event_id")).write.mode("overwrite").parquet(replay_dir)
+    stream = replay(e, "sink_replay", 4, "event_id", max_files_per_trigger=1)
     land = scratch.scratch_dir(spark, "sink_land")
     ckpt = scratch.scratch_dir(spark, "sink_ckpt")
 
-    def drain(what):
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay_dir)
-        )
-        q = sk.to_manifest_parquet_sink(stream, land, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(f"exactly-once sink {what} did not drain in 300s")
-
     with _few_shuffle_partitions(spark):
-        drain("run")
+        await_drain(
+            sk.to_manifest_parquet_sink(stream, land, ckpt),
+            "streaming_exactly_once_sink",
+        )
         # crash-replay: re-deliver batch 0's payload under its original id —
         # a fresh attempt repoints the manifest, the row set stays the same
         b0 = spark.read.parquet(sk.read_manifest(land)["0"])
@@ -281,7 +241,10 @@ def streaming_exactly_once_sink(spark, sf_dir):
         # checkpoint that reprocessed everything could land the same row
         # union under new batch ids and the aggregate alone would pass.
         before = sk.read_manifest(land)
-        drain("resume")
+        await_drain(
+            sk.to_manifest_parquet_sink(stream, land, ckpt),
+            "streaming_exactly_once_sink (resume)",
+        )
         after = sk.read_manifest(land)
         if after != before:
             raise AssertionError(
@@ -324,22 +287,15 @@ def sink_manifest_snapshot_read(spark, sf_dir):
     from kwack_spark.streaming import sink as sk
 
     e = T(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    replay_dir = scratch.scratch_dir(spark, "man_replay")
-    e.repartition(4, F.col("event_id")).write.mode("overwrite").parquet(replay_dir)
+    stream = replay(e, "man_replay", 4, "event_id", max_files_per_trigger=2)
     land = scratch.scratch_dir(spark, "man_land")
     ckpt = scratch.scratch_dir(spark, "man_ckpt")
 
     with _few_shuffle_partitions(spark):
-        q = sk.to_manifest_parquet_sink(
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(replay_dir),
-            land,
-            ckpt,
+        await_drain(
+            sk.to_manifest_parquet_sink(stream, land, ckpt),
+            "sink_manifest_snapshot_read",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("manifest sink did not drain in 300s")
         # simulate the crash-redelivery of the final batch: same rows, new
         # attempt, manifest repoints — the snapshot must not double-count
         manifest = sk.read_manifest(land)
@@ -380,23 +336,16 @@ def sink_compaction_roundtrip(spark, sf_dir):
     from kwack_spark.streaming import sink as sk
 
     e = T(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    replay_dir = scratch.scratch_dir(spark, "cmp_replay")
-    e.repartition(4, F.col("event_id")).write.mode("overwrite").parquet(replay_dir)
+    stream = replay(e, "cmp_replay", 4, "event_id", max_files_per_trigger=1)
     land = scratch.scratch_dir(spark, "cmp_land")
     ckpt = scratch.scratch_dir(spark, "cmp_ckpt")
     out = scratch.scratch_dir(spark, "cmp_out")
 
     with _few_shuffle_partitions(spark):
-        q = sk.to_manifest_parquet_sink(
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay_dir),
-            land,
-            ckpt,
+        await_drain(
+            sk.to_manifest_parquet_sink(stream, land, ckpt),
+            "sink_compaction_roundtrip",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("compaction-roundtrip sink did not drain in 300s")
         n = e.count()
         target = max(1, math.ceil(n / 8))  # plan ~8 balanced output files
         files = sk.compact_sink(spark, land, out, target_rows_per_file=target)
@@ -441,27 +390,13 @@ def streaming_running_moments(spark, sf_dir):
     emission decodes to the same mean/variance the batch DECIMAL aggregate
     produces — the monitoring-state pattern (z-score alerting off a stream)
     with replay-proof determinism."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("event_type", "value")
-    replay_dir = scratch.scratch_dir(spark, "moments_replay")
-    e.repartition(4).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(e, "moments_replay", 4, max_files_per_trigger=1)
     moments = si.stateful_running_moments(stream, "event_type")
-    sink = f"moments_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(moments, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("moments stream did not finish in 300s")
     last = (
-        spark.table(sink)
+        drain_to_table(moments, "streaming_running_moments", "update")
         .groupBy("event_type")
         .agg(F.max(F.struct("n", "s", "ss")).alias("m"))
         .select("event_type", "m.n", "m.s", "m.ss")
@@ -521,8 +456,6 @@ def streaming_quantile_sketch(spark, sf_dir):
     monitoring a 100 TB ingest runs continuously, with O(k) state per key
     and a closing extraction identical to the batch sketch's
     (operators/scale.py:kll_quantile)."""
-    import uuid
-
     from kwack_spark.operators import scale
     from kwack_spark.streaming import ingest as si
 
@@ -532,22 +465,10 @@ def streaming_quantile_sketch(spark, sf_dir):
         F.col("doc_id").cast("long").alias("rid"),
         F.col("n_chars").cast("long").alias("v"),
     )
-    replay_dir = scratch.scratch_dir(spark, "kll_replay")
-    d.repartition(4, F.col("rid")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(d, "kll_replay", 4, "rid", max_files_per_trigger=1)
     regs = si.stateful_kll_registers(stream, "lang", k=64)
-    sink = f"kll_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(regs, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("kll sketch stream did not finish in 300s")
     last = (
-        spark.table(sink)
+        drain_to_table(regs, "streaming_quantile_sketch", "update")
         .groupBy("lang")
         .agg(F.max(F.struct("n_seen", "hrs", "rids", "vs")).alias("m"))
         .select("lang", F.arrays_zip("m.hrs", "m.rids", "m.vs").alias("z"))
@@ -579,24 +500,14 @@ def streaming_dedup_keys(spark, sf_dir):
     watermark spans the replayed range, so end-of-stream equals batch
     DISTINCT; in production the watermark bounds state to the late-data
     horizon instead of the full history."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    replay_dir = scratch.scratch_dir(spark, "stream_dedup")
-    e.write.mode("overwrite").parquet(replay_dir)
-    stream = spark.readStream.schema(e.schema).parquet(replay_dir)
     deduped = si.streaming_dedup(
-        stream, "ts", ["user_id", "event_type"], watermark="3650 days"
+        replay(e, "stream_dedup"), "ts", ["user_id", "event_type"],
+        watermark="3650 days",
     ).select("user_id", "event_type")
-    sink = f"strmdd_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(deduped, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_dedup_keys: stream did not finish in 300s")
-    return spark.table(sink)
+    return drain_to_table(deduped, "streaming_dedup_keys")
 
 @register(
     "streaming_lsh_neardup",
@@ -625,28 +536,14 @@ def streaming_lsh_neardup(spark, sf_dir):
     colliding in both bands is emitted by both buckets, so the trailing
     .distinct() restores set semantics; arrival order doesn't matter, so
     the final pair set equals the batch self-join bit-for-bit."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     d = T(spark, sf_dir, "documents")
     prep = dedup.lsh_band_keys_narrow(d, "doc_id", "text", k=8, bands=2)
-    replay_dir = scratch.scratch_dir(spark, "lsh_replay")
-    prep.repartition(2, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(prep.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(prep, "lsh_replay", 2, "doc_id", max_files_per_trigger=1)
     pairs = si.stateful_lsh_neardup(stream, threshold=0.5)
-    sink = f"strmlsh_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_lsh_neardup: stream did not finish in 300s")
     # a pair colliding in both bands is emitted by both buckets -> distinct
-    return spark.table(sink).distinct()
+    return drain_to_table(pairs, "streaming_lsh_neardup").distinct()
 
 @register(
     "streaming_static_enrich",
@@ -666,29 +563,13 @@ def streaming_static_enrich(spark, sf_dir):
     broadcast hash join inside every micro-batch, which is exactly the 100 TB
     shape — a small dim broadcast to every executor while the stream
     partitions flow through unshuffled."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
     e = T(spark, sf_dir, "events").select("event_id", "user_id")
     n = T(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    replay_dir = scratch.scratch_dir(spark, "enrich_replay")
-    e.repartition(2, F.col("event_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(e, "enrich_replay", 2, "event_id", max_files_per_trigger=1)
     enriched = stream.join(
         F.broadcast(n), (F.col("user_id") % 25) == F.col("n_nationkey")
     ).select("event_id", "user_id", F.col("n_name").alias("nation_name"))
-    sink = f"enrich_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(enriched, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_static_enrich: stream did not finish in 300s")
-    return spark.table(sink)
+    return drain_to_table(enriched, "streaming_static_enrich")
 
 @register(
     "streaming_video_neardup",
@@ -726,33 +607,17 @@ def streaming_video_neardup(spark, sf_dir):
     its id list (streaming/ingest.py:stateful_key_collision_pairs), and
     the shared-count rollup runs on the emitted pair rows exactly as the
     batch join's."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     kf = _video_keyframes(spark, sf_dir).select("doc_id", "frame_md5")
-    replay_dir = scratch.scratch_dir(spark, "video_replay")
-    kf.repartition(2, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(kf.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(kf, "video_replay", 2, "doc_id", max_files_per_trigger=1)
     # max_ids matches the batch join's df-cap: a frame-hash bucket past
     # 4096 videos stops emitting (no dedup signal) and its state stays
     # bounded — the streaming leg of the hot-bucket guard
     pairs = si.stateful_key_collision_pairs(
         stream, "frame_md5", "doc_id", max_ids=4096
     )
-    sink = f"strmvid_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_video_neardup: stream did not finish in 300s"
-            )
-    return _video_pair_rollup(spark.table(sink))
+    return _video_pair_rollup(drain_to_table(pairs, "streaming_video_neardup"))
 
 @register(
     "streaming_session_counts",
@@ -786,26 +651,18 @@ def streaming_session_counts(spark, sf_dir):
     complete-mode memory sink == batch session assignment.  State is
     watermark-bounded; at production rates session state is O(active
     sessions), not O(stream length)."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
-    e = T(spark, sf_dir, "events")
-    replay_dir = scratch.scratch_dir(spark, "stream_replay")
-    e.write.mode("overwrite").parquet(replay_dir)
-    stream = spark.readStream.schema(e.schema).parquet(replay_dir)
     agg = si.session_counts(
-        stream, "ts", keys=["user_id"], gap="30 minutes", watermark="10 minutes"
+        replay(T(spark, sf_dir, "events"), "stream_replay"),
+        "ts",
+        keys=["user_id"],
+        gap="30 minutes",
+        watermark="10 minutes",
     )
-    sink = f"strm_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_session_counts: stream did not finish in 300s"
-            )
-    return spark.table(sink).select("user_id", "session_start", "n_events")
+    return drain_to_table(agg, "streaming_session_counts", "complete").select(
+        "user_id", "session_start", "n_events"
+    )
 
 @register(
     "streaming_state_observability",
@@ -862,35 +719,17 @@ def streaming_state_observability(spark, sf_dir):
     claim instead of arguing it.  The scalar collects here are one count
     and one progress dict per kernel — constant-size observability, not
     data."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
-    def drain(prep, build_stateful):
-        replay_dir = scratch.scratch_dir(spark, "stateobs")
-        prep.repartition(3).write.mode("overwrite").parquet(replay_dir)
-        stream = (
-            spark.readStream.schema(prep.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay_dir)
-        )
-        sink = f"obs_{uuid.uuid4().hex[:8]}"
-        with _few_shuffle_partitions(spark):
-            q = si.to_memory_sink(
-                build_stateful(stream), sink, output_mode="append"
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_state_observability: stream did not finish"
-                )
-        progress = q.lastProgress
-        return int(progress["stateOperators"][0]["numRowsTotal"])
+    def state_rows(prep, build_stateful):
+        stream = replay(prep, "stateobs", 3, max_files_per_trigger=1)
+        q = drain(build_stateful(stream), "streaming_state_observability")
+        return int(q.lastProgress["stateOperators"][0]["numRowsTotal"])
 
     rows = []
     kf = _video_keyframes(spark, sf_dir).select("doc_id", "frame_md5")
     n_keys_v = kf.select("frame_md5").distinct().count()
-    state_v = drain(
+    state_v = state_rows(
         kf,
         lambda s: si.stateful_key_collision_pairs(
             s, "frame_md5", "doc_id", max_ids=4096
@@ -906,7 +745,7 @@ def streaming_state_observability(spark, sf_dir):
         blocks=4,
     )
     n_keys_s = prep.select("blk", "slc").distinct().count()
-    state_s = drain(
+    state_s = state_rows(
         prep, lambda s: si.stateful_simhash_neardup(s, max_hamming=3)
     )
     rows.append(("simhash_sliced", state_s, n_keys_s, state_s <= n_keys_s))
@@ -968,39 +807,24 @@ def streaming_state_observability_sketches(spark, sf_dir):
     however long the stream runs; the CMS row is bounded by depth*width
     (4*256) regardless of user cardinality.  The scalar collects are one
     count + one progress dict per kernel — constant-size observability."""
-    import uuid
-
     from kwack_spark.operators import scale
     from kwack_spark.streaming import ingest as si
 
-    def drain(prep, build, mode):
-        replay_dir = scratch.scratch_dir(spark, "stateobs_sk")
-        prep.repartition(3).write.mode("overwrite").parquet(replay_dir)
-        stream = (
-            spark.readStream.schema(prep.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay_dir)
-        )
-        sink = f"obsk_{uuid.uuid4().hex[:8]}"
-        with _few_shuffle_partitions(spark):
-            q = si.to_memory_sink(build(stream), sink, output_mode=mode)
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "streaming_state_observability_sketches: stream stuck"
-                )
+    def state_rows(prep, build, mode):
+        stream = replay(prep, "stateobs_sk", 3, max_files_per_trigger=1)
+        q = drain(build(stream), "streaming_state_observability_sketches", mode)
         return int(q.lastProgress["stateOperators"][0]["numRowsTotal"])
 
     rows = []
     ev = T(spark, sf_dir, "events")
     e_types = ev.select("event_type").distinct().count()
-    state_rc = drain(
+    state_rc = state_rows(
         ev.select("event_id", "event_type"),
         lambda s: si.stateful_running_counts(s, "event_type"),
         "update",
     )
     rows.append(("running_counts", state_rc, e_types, state_rc <= e_types))
-    state_rm = drain(
+    state_rm = state_rows(
         ev.select("event_type", "value"),
         lambda s: si.stateful_running_moments(s, "event_type"),
         "update",
@@ -1014,7 +838,7 @@ def streaming_state_observability_sketches(spark, sf_dir):
         F.col("n_chars").cast("long").alias("v"),
     )
     n_langs = d.select("lang").distinct().count()
-    state_kll = drain(
+    state_kll = state_rows(
         d, lambda s: si.stateful_kll_registers(s, "lang", k=64), "update"
     )
     rows.append(("kll_registers", state_kll, n_langs, state_kll <= n_langs))
@@ -1026,7 +850,7 @@ def streaming_state_observability_sketches(spark, sf_dir):
         .distinct()
         .count()
     )
-    state_cms = drain(
+    state_cms = state_rows(
         e,
         lambda s: scale._cms_keyed(s, "user_id", depth=4, width=256, seed="cms")
         .groupBy("d", "b")
@@ -1061,8 +885,6 @@ def streaming_url_dedup(spark, sf_dir):
     size, not the crawl size — and the watermark bounds it to the re-crawl
     horizon in production (spanned fully here so the replay equals batch
     DISTINCT)."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     d = T(spark, sf_dir, "documents").select(
@@ -1070,26 +892,14 @@ def streaming_url_dedup(spark, sf_dir):
         _url_raw_col().alias("raw_url"),
         F.timestamp_seconds(F.col("doc_id")).alias("ts"),
     )
-    replay_dir = scratch.scratch_dir(spark, "stream_url")
-    d.repartition(2, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(d, "stream_url", 2, "doc_id", max_files_per_trigger=1)
     canon = stream.select(
         TX.canonical_url("raw_url").alias("canon_url"), "ts"
     )
     deduped = si.streaming_dedup(
         canon, "ts", ["canon_url"], watermark="3650 days"
     ).select("canon_url")
-    sink = f"strmurl_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(deduped, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_url_dedup: stream did not finish in 300s")
-    return spark.table(sink)
+    return drain_to_table(deduped, "streaming_url_dedup")
 
 @register(
     "streaming_click_purchase_join",
@@ -1123,18 +933,9 @@ def streaming_click_purchase_join(spark, sf_dir):
     the scale failure mode of unconstrained stream joins.  Append mode:
     matches emit as soon as both sides arrive; end-of-replay equals the
     batch interval join bit-for-bit."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
-    e = T(spark, sf_dir, "events")
-    replay_dir = scratch.scratch_dir(spark, "ssjoin_replay")
-    e.write.mode("overwrite").parquet(replay_dir)
-
-    def side(event_type, id_alias, ts_alias, user_alias):
-        s = spark.readStream.schema(e.schema).parquet(replay_dir)
+    def side(stream, event_type, id_alias, ts_alias, user_alias):
         return (
-            s.filter(F.col("event_type") == event_type)
+            stream.filter(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(user_alias),
                 F.col("event_id").alias(id_alias),
@@ -1143,8 +944,9 @@ def streaming_click_purchase_join(spark, sf_dir):
             .withWatermark(ts_alias, "1 hour")
         )
 
-    clicks = side("click", "click_id", "click_ts", "c_user")
-    purchases = side("purchase", "purchase_id", "purchase_ts", "p_user")
+    c, p = replay(T(spark, sf_dir, "events"), "ssjoin_replay", readers=2)
+    clicks = side(c, "click", "click_id", "click_ts", "c_user")
+    purchases = side(p, "purchase", "purchase_id", "purchase_ts", "p_user")
     joined = clicks.join(
         purchases,
         F.expr(
@@ -1158,15 +960,7 @@ def streaming_click_purchase_join(spark, sf_dir):
         "click_ts",
         "purchase_ts",
     )
-    sink = f"ssj_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(joined, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_click_purchase_join: stream did not finish in 300s"
-            )
-    return spark.table(sink).select(
+    return drain_to_table(joined, "streaming_click_purchase_join").select(
         "user_id", "click_id", "purchase_id", "click_ts", "purchase_ts"
     )
 
@@ -1200,14 +994,7 @@ def streaming_latest_per_key(spark, sf_dir):
     into the per-key maxima map-side before the state update.  The
     (ts, event_id) struct ordering makes the tie-break total, so the
     landed view is bit-equal to the batch window."""
-    import uuid
-
-    from kwack_spark.streaming import ingest as si
-
-    e = T(spark, sf_dir, "events")
-    replay_dir = scratch.scratch_dir(spark, "latest_replay")
-    e.write.mode("overwrite").parquet(replay_dir)
-    stream = spark.readStream.schema(e.schema).parquet(replay_dir)
+    stream = replay(T(spark, sf_dir, "events"), "latest_replay")
     ord_key = F.struct("ts", "event_id")
     agg = stream.groupBy("user_id").agg(
         F.max("ts").alias("latest_ts"),
@@ -1215,15 +1002,7 @@ def streaming_latest_per_key(spark, sf_dir):
         F.max_by("value", ord_key).alias("latest_value"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    sink = f"latest_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(agg, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_latest_per_key: stream did not finish in 300s"
-            )
-    return spark.table(sink).select(
+    return drain_to_table(agg, "streaming_latest_per_key", "complete").select(
         "user_id", "latest_ts", "latest_event_id", "latest_value", "n_events"
     )
 
@@ -1260,29 +1039,15 @@ def streaming_simhash_neardup(spark, sf_dir):
     agreeing on several slices is emitted by each, so the trailing
     .distinct() restores set semantics; arrival order doesn't matter, so
     the final pair set equals the batch self-join bit-for-bit."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     d = T(spark, sf_dir, "documents")
     prep = dedup._simhash64_sliced(
         dedup.simhash64_fingerprints(d, "doc_id", "text"), "doc_id", blocks=4
     )
-    replay_dir = scratch.scratch_dir(spark, "simhash_replay")
-    prep.repartition(2, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(prep.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(prep, "simhash_replay", 2, "doc_id", max_files_per_trigger=1)
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmsh_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_simhash_neardup: stream did not finish in 300s")
-    return spark.table(sink).distinct()
+    return drain_to_table(pairs, "streaming_simhash_neardup").distinct()
 
 @register(
     "streaming_audio_neardup",
@@ -1315,8 +1080,6 @@ def streaming_audio_neardup(spark, sf_dir):
     text, image, and audio fingerprints in batch, incremental, AND
     streaming mode.  Arrival order cannot change the end-of-stream pair
     set; the trailing .distinct() collapses multi-slice agreements."""
-    import uuid
-
     from kwack_spark.operators import multimodal as mm
     from kwack_spark.streaming import ingest as si
 
@@ -1326,23 +1089,9 @@ def streaming_audio_neardup(spark, sf_dir):
         mm.synth_wav_am(d, "doc_id"), "payload", "doc_id"
     )
     prep = dedup._simhash64_sliced(fps, "doc_id", blocks=4)
-    replay_dir = scratch.scratch_dir(spark, "audiosh_replay")
-    prep.repartition(2, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(prep.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(prep, "audiosh_replay", 2, "doc_id", max_files_per_trigger=1)
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmau_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_audio_neardup: stream did not finish in 300s"
-            )
-    return spark.table(sink).distinct()
+    return drain_to_table(pairs, "streaming_audio_neardup").distinct()
 
 @register(
     "streaming_image_neardup",
@@ -1369,8 +1118,6 @@ def streaming_image_neardup(spark, sf_dir):
     (streaming/ingest.py:stateful_simhash_neardup — the one kernel now
     serving text, image, and audio in streaming mode).  The trailing
     .distinct() collapses multi-slice agreements."""
-    import uuid
-
     from kwack_spark.operators import multimodal as mm
     from kwack_spark.streaming import ingest as si
 
@@ -1378,23 +1125,9 @@ def streaming_image_neardup(spark, sf_dir):
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     fps = mm.dhash64(mm.synth_png_blocky(d, "doc_id"), "payload", "doc_id")
     prep = dedup._simhash64_sliced(fps, "doc_id", blocks=4)
-    replay_dir = scratch.scratch_dir(spark, "imgsh_replay")
-    prep.repartition(2, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(prep.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(prep, "imgsh_replay", 2, "doc_id", max_files_per_trigger=1)
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmim_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_image_neardup: stream did not finish in 300s"
-            )
-    return spark.table(sink).distinct()
+    return drain_to_table(pairs, "streaming_image_neardup").distinct()
 
 @register(
     "streaming_change_point",
@@ -1446,27 +1179,13 @@ def streaming_change_point(spark, sf_dir):
     (streaming/ingest.py:stateful_cusum_days), take each type's last
     emission, and decode the day ordinal back to the timestamp the batch
     query reports."""
-    import uuid
-
     from kwack_spark.streaming import ingest as si
 
     e = T(spark, sf_dir, "events").select("event_type", "ts")
-    replay_dir = scratch.scratch_dir(spark, "cusum_replay")
-    e.repartition(4).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(e, "cusum_replay", 4, max_files_per_trigger=1)
     states = si.stateful_cusum_days(stream, "event_type", "ts")
-    sink = f"cusum_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(states, sink, output_mode="update")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("cusum stream did not finish in 300s")
     last = (
-        spark.table(sink)
+        drain_to_table(states, "streaming_change_point", "update")
         .groupBy("event_type")
         .agg(
             F.max(
@@ -1513,8 +1232,6 @@ def streaming_video_dhash_neardup(spark, sf_dir):
     decode kernel runs once while staging the replay (a production
     stream decodes per arriving video the same way); the stateful stage
     sees only (kfid, fp, blk, slc) rows."""
-    import uuid
-
     from kwack_spark.operators import multimodal as mm
     from kwack_spark.streaming import ingest as si
 
@@ -1535,24 +1252,10 @@ def streaming_video_dhash_neardup(spark, sf_dir):
         "fp",
     )
     prep = dedup._simhash64_sliced(kfid, "doc_id", blocks=4)
-    replay_dir = scratch.scratch_dir(spark, "viddh_replay")
-    prep.repartition(2, F.col("doc_id")).write.mode("overwrite").parquet(replay_dir)
-    stream = (
-        spark.readStream.schema(prep.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+    stream = replay(prep, "viddh_replay", 2, "doc_id", max_files_per_trigger=1)
     pairs = si.stateful_simhash_neardup(stream, max_hamming=3)
-    sink = f"strmvd_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(pairs, sink, output_mode="append")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming_video_dhash_neardup: stream did not finish in 300s"
-            )
     return (
-        spark.table(sink)
+        drain_to_table(pairs, "streaming_video_dhash_neardup")
         .distinct()
         .select(
             F.expr("id_a div 16").alias("id_a"),

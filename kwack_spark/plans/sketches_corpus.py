@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from kwack_spark.functions import text as TX
 from kwack_spark.operators import scale
-from kwack_spark import scratch
+from kwack_spark.plans.pipeline import drain_to_table, replay
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 
@@ -516,24 +516,14 @@ def streaming_hll_distinct(spark, sf_dir):
     the batch sketch at end of stream, so the estimate read off it is the
     same running "distinct users so far" a 100 TB ingest would publish per
     micro-batch."""
-    import uuid
-
-    from kwack_spark.plans.pipeline import _few_shuffle_partitions
-    from kwack_spark.streaming import ingest as si
-
     e = T(spark, sf_dir, "events").select("user_id", "ts")
-    replay_dir = scratch.scratch_dir(spark, "stream_hll")
-    e.write.mode("overwrite").parquet(replay_dir)
-    stream = spark.readStream.schema(e.schema).parquet(replay_dir)
-    regs = scale._hll_registers(stream, "user_id")
+    regs = scale._hll_registers(replay(e, "stream_hll"), "user_id")
     sk = regs.groupBy("j").agg(F.max("rho").alias("mx"))
-    sink = f"strmhll_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(sk, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_hll_distinct: stream did not finish in 300s")
-    return spark.table(sink).select("j", "mx").orderBy("j")
+    return (
+        drain_to_table(sk, "streaming_hll_distinct", "complete")
+        .select("j", "mx")
+        .orderBy("j")
+    )
 
 
 @register(
@@ -563,24 +553,12 @@ def streaming_cms_counts(spark, sf_dir):
     there).  The sink equals the batch sketch at end of stream, so
     frequency estimates read off it mid-stream are the same
     never-undercounting guarantees cms_heavy_hitters grades in batch."""
-    import uuid
-
-    from kwack_spark.plans.pipeline import _few_shuffle_partitions
-    from kwack_spark.streaming import ingest as si
-
     e = T(spark, sf_dir, "events").select("user_id", "ts")
-    replay_dir = scratch.scratch_dir(spark, "stream_cms")
-    e.write.mode("overwrite").parquet(replay_dir)
-    stream = spark.readStream.schema(e.schema).parquet(replay_dir)
-    keyed = scale._cms_keyed(stream, "user_id", depth=4, width=256, seed="cms")
+    keyed = scale._cms_keyed(
+        replay(e, "stream_cms"), "user_id", depth=4, width=256, seed="cms"
+    )
     sk = keyed.groupBy("d", "b").agg(F.count(F.lit(1)).alias("cnt"))
-    sink = f"strmcms_{uuid.uuid4().hex[:8]}"
-    with _few_shuffle_partitions(spark):
-        q = si.to_memory_sink(sk, sink, output_mode="complete")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming_cms_counts: stream did not finish in 300s")
-    return spark.table(sink).select(
+    return drain_to_table(sk, "streaming_cms_counts", "complete").select(
         "d", F.col("b").cast("int").alias("b"), "cnt"
     ).orderBy("d", "b")
 

@@ -54,12 +54,9 @@ def get_session(
         # measured 2-3 s per cold plan on the deep pipeline DAGs at sf0.1,
         # and the repeated compiles also churn the JVM code cache.  Size
         # the cache to the working set instead (static conf — must be set
-        # at session start); scale-independent: it bounds DRIVER-side
-        # compile work, not data.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("KWACK_CODEGEN_CACHE_ENTRIES", "2000"),
-        )
+        # at session start; ``extra_conf``, i.e. ``-X``, overrides it);
+        # scale-independent: it bounds DRIVER-side compile work, not data.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # JIT code-cache headroom for the same many-distinct-plans shape:
         # the JDK default (240 MB) fills after a few hundred compiled
         # query plans, after which HotSpot stops JIT-compiling and hot
@@ -73,8 +70,7 @@ def get_session(
         .config(
             "spark.driver.extraJavaOptions",
             (
-                "-XX:ReservedCodeCacheSize="
-                + os.environ.get("KWACK_CODE_CACHE", "512m")
+                "-XX:ReservedCodeCacheSize=512m"
                 + (
                     " " + os.environ["KWACK_DRIVER_JAVA_OPTS"]
                     if os.environ.get("KWACK_DRIVER_JAVA_OPTS")

@@ -284,7 +284,6 @@ def compact_sink(
     base_path: str,
     out_path: str,
     target_rows_per_file: int = 1_000_000,
-    shuffle: bool = True,
 ) -> int:
     """Offline compaction of a landed dataset: rewrite the committed
     per-batch attempt directories (one per micro-batch — the small-file
@@ -297,11 +296,9 @@ def compact_sink(
     ``out_path`` is rejected up front) and repoints nothing: the sink and
     any live view over it keep their per-batch directories.  Sizing is
     metadata-only — row counts come from parquet footers, not a ``count()``
-    data pass — so the single data read is the rewrite itself.
-    ``shuffle=True`` repartitions for uniform file sizes (one full shuffle —
-    the usual price of a compaction job); ``shuffle=False`` coalesces
-    instead: no shuffle, but file sizes follow the existing partition
-    skew."""
+    data pass — so the single data read is the rewrite itself.  The rewrite
+    repartitions for uniform file sizes: one full shuffle, the usual price
+    of a compaction job."""
     import math
 
     _check_disjoint_paths(base_path, out_path)
@@ -311,6 +308,5 @@ def compact_sink(
     if n is None:  # footers not readable: pay the extra scan
         n = df.count()
     files = max(1, math.ceil(n / target_rows_per_file))
-    out = df.repartition(files) if shuffle else df.coalesce(files)
-    out.write.mode("overwrite").parquet(out_path)
+    df.repartition(files).write.mode("overwrite").parquet(out_path)
     return files

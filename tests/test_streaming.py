@@ -1065,3 +1065,69 @@ def test_compact_sink_on_live_topic_path(spark, tmp_path, monkeypatch):
     assert len(glob.glob(f"{out}/part-*.parquet")) == 3
     got = spark.read.parquet(out).select("uid").collect()
     assert sorted(r.uid for r in got) == list(range(30))
+
+
+def test_live_topic_uses_configured_serdes(spark, tmp_path):
+    """A live topic with no serde argument decodes with the topic's
+    configured value and key serdes (``KwackConfig.value_serde`` /
+    ``key_serde``), the same lookup as a batch topic."""
+    from kwack_spark.config import KwackConfig
+    from kwack_spark.engine import KwackSpark
+
+    frames = str(tmp_path / "frames")
+    rows = [
+        ((10 * i).to_bytes(8, "big"), f"v{i}".encode(), "lt", 0, i, TS0, 0, None)
+        for i in range(3)
+    ]
+    spark.createDataFrame(rows, ks.KAFKA_FRAME_SCHEMA).write.parquet(f"{frames}/b0")
+    cfg = KwackConfig(topic_serdes={"lt": "string"}, key_serdes={"lt": "long"})
+    eng = KwackSpark(cfg, spark=spark, registry=MockSchemaRegistry())
+    q = eng.register_live_topic("lt", frames_dir=f"{frames}/*")
+    try:
+        q.processAllAvailable()
+        got = eng.sql("SELECT rowkey, rowval FROM lt ORDER BY rowkey").collect()
+    finally:
+        q.stop()
+    assert [tuple(r) for r in got] == [(0, "v0"), (10, "v1"), (20, "v2")]
+
+
+def test_await_drain_stops_and_names_a_stuck_query():
+    """A bounded replay that has not drained by the timeout is stopped, and
+    the TimeoutError names the query.  No Spark: a fake query."""
+    from kwack_spark.plans import pipeline
+
+    class Stuck:
+        stopped = False
+        waited = None
+
+        def awaitTermination(self, timeout):
+            self.waited = timeout
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = Stuck()
+    with pytest.raises(TimeoutError, match="streaming_window_counts"):
+        pipeline.await_drain(q, "streaming_window_counts")
+    assert q.stopped and q.waited == pipeline.DRAIN_TIMEOUT_S
+
+
+def test_single_stream_await_site_in_plans():
+    """Every streaming query in the plans corpus drains through
+    ``pipeline.await_drain``: ``awaitTermination(`` appears once under
+    kwack_spark/plans/, inside that helper."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "kwack_spark" / "plans"
+    hits = [
+        (p.name, i)
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "awaitTermination(" in line
+    ]
+    assert len(hits) == 1 and hits[0][0] == "pipeline.py", hits
+    src = (root / "pipeline.py").read_text()
+    body = re.search(r"\ndef await_drain\(.*?\n(?=\S)", src, re.S).group(0)
+    assert "awaitTermination(" in body
