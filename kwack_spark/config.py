@@ -164,7 +164,6 @@ class KwackConfig:
     starting_offset: str = "beginning"
     row_attributes: tuple[str, ...] = DEFAULT_ROW_ATTRIBUTES
     skip_bytes: int = 0
-    streaming: bool = False
     warehouse_dir: str | None = None  # -d equivalent: persist tables here
     query: str | None = None  # -q one-shot query
     spark_conf: dict[str, str] = field(default_factory=dict)

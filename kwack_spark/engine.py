@@ -67,23 +67,10 @@ class KwackSpark:
         if self.config.warehouse_dir:
             self._load_warehouse()
         if self.config.kafka_bootstrap:
-            from kwack_spark.sources.kafka import register_topics
+            from kwack_spark.session import register_view
 
-            register_topics(
-                self.spark,
-                bootstrap=self.config.kafka_bootstrap,
-                topics=self.config.topics,
-                serdes=self.config.topic_serdes,
-                key_serdes=self.config.key_serdes,
-                registry=self.registry,
-                streaming=self.config.streaming,
-                row_attributes=self.config.row_attributes,
-                skip_bytes=self.config.skip_bytes,
-                topic_partitions=self.config.topic_partitions,
-                offset_spec=self.config.offset(),
-                metadata_timeout_ms=self.config.metadata_timeout_ms,
-                client_props=self.config.client_props,
-            )
+            for topic in self.config.topics:
+                register_view(self._topic_table(topic), topic)
         self._initialized = True
         return self
 
@@ -156,40 +143,23 @@ class KwackSpark:
         logger, Spark's ``ProcessingTimeExecutor`` ("Current batch is
         falling behind"), to ERROR in the driver JVM: for every streaming
         query in that JVM, and until it exits."""
-        from kwack_spark.sources.kafka import decode_topic, read_topic_frames
+        from kwack_spark.session import alias_view, register_view, safe_identifier
+        from kwack_spark.sources.kafka import KAFKA_FRAME_SCHEMA
         from kwack_spark.streaming import ingest as si
 
-        # a broker-fed live topic connects exactly like register_topics:
-        # same partitions, starting offset, timeout and -X client properties
         frames = (
-            si.stream_frames_from_dir(self.spark, frames_dir)
+            self.spark.readStream.schema(KAFKA_FRAME_SCHEMA).parquet(frames_dir)
             if frames_dir
-            else read_topic_frames(
-                self.spark,
-                self.config.kafka_bootstrap,
-                topic,
-                streaming=True,
-                partitions=self.config.topic_partitions.get(topic),
-                offset_spec=self.config.offset(),
-                metadata_timeout_ms=self.config.metadata_timeout_ms,
-                client_props=self.config.client_props,
-            )
+            else None
         )
-        decoded = decode_topic(
-            frames,
-            topic,
-            value_serde or self.config.value_serde(topic),
-            key_serde=key_serde or self.config.key_serde(topic),
-            registry=self.registry,
-            row_attributes=self.config.row_attributes,
-            skip_bytes=self.config.skip_bytes,
+        decoded = self._topic_table(
+            topic, streaming=True, frames=frames,
+            value_serde=value_serde, key_serde=key_serde,
         )
-        from kwack_spark.session import alias_view, safe_identifier
 
         if durable_path is not None:
             from kwack_spark.streaming import sink as sk
 
-            view = safe_identifier(topic, prefix="_kw_live_")
             # pin the decoded schema: re-registration skips footer
             # inference, and an empty manifest still gives a typed table
             landed_schema = decoded.schema
@@ -202,13 +172,12 @@ class KwackSpark:
             # batch count; compact_sink writes a compacted copy elsewhere
             # and does not repoint a running topic.
             def _register_landed_view(_batch_id: int | None = None) -> None:
-                (
-                    self.spark.read.schema(landed_schema)
-                    .parquet(*sk.committed_paths(durable_path))
-                    .createOrReplaceTempView(view)
+                register_view(
+                    self.spark.read.schema(landed_schema).parquet(
+                        *sk.committed_paths(durable_path)
+                    ),
+                    topic,
                 )
-                if view != topic:
-                    alias_view(self.spark, topic, view)
 
             # register EAGERLY too: on a restart with no new input no batch
             # ever fires the hook, and an empty topic must still present an
@@ -227,12 +196,40 @@ class KwackSpark:
 
         # memory-sink query names must be plain identifiers; dashed/dotted
         # topics get an internal sink name plus a backticked alias view
-        sink = safe_identifier(topic, prefix="_kw_live_")
+        sink = safe_identifier(topic)
         q = si.to_memory_sink(decoded, sink, continuous=True)
         if sink != topic:
             alias_view(self.spark, topic, sink)
         self._live_queries[topic] = q
         return q
+
+    def _topic_table(
+        self,
+        topic: str,
+        streaming: bool = False,
+        frames: DataFrame | None = None,
+        value_serde=None,
+        key_serde=None,
+    ) -> DataFrame:
+        """The one topic -> table path (KwackEngine.java:745-774 consume +
+        :516-585 serde dispatch): ``frames`` (default: the Kafka read of
+        ``topic`` with this config's connection, partition and offset
+        settings) decoded with the topic's serdes, registry, row
+        attributes and skip bytes.  A serde left as None comes from the
+        config (``KwackConfig.value_serde`` / ``key_serde``)."""
+        from kwack_spark.sources.kafka import decode_topic, read_topic_frames
+
+        if frames is None:
+            frames = read_topic_frames(self.spark, self.config, topic, streaming=streaming)
+        return decode_topic(
+            frames,
+            topic,
+            value_serde or self.config.value_serde(topic),
+            key_serde=key_serde or self.config.key_serde(topic),
+            registry=self.registry,
+            row_attributes=self.config.row_attributes,
+            skip_bytes=self.config.skip_bytes,
+        )
 
     # -- query surface -------------------------------------------------------
 

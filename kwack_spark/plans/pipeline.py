@@ -16,10 +16,7 @@ from pyspark.sql import functions as F
 
 from kwack_spark import scratch
 from kwack_spark.functions import text as TX
-from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling, similarity
 from kwack_spark.operators.dedup import LSH_MAX_BAND_DF
-from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 
 _NORM = "regexp_replace(lower({c}), '[^a-z ]', '', 'g')"

@@ -84,7 +84,7 @@ def get_session(
     return builder.getOrCreate()
 
 
-def safe_identifier(name: str, prefix: str = "_kw_") -> str:
+def safe_identifier(name: str) -> str:
     """``name`` if it is a plain SQL identifier, else a deterministic
     internal name derived from its hash.  Kafka topic names may contain '.'
     and '-' (the reference's testBadName/'test-json' topics simply get
@@ -96,7 +96,7 @@ def safe_identifier(name: str, prefix: str = "_kw_") -> str:
 
     if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
         return name
-    return prefix + hashlib.md5(name.encode()).hexdigest()[:10]
+    return "_kw_" + hashlib.md5(name.encode()).hexdigest()[:10]
 
 
 def alias_view(spark: SparkSession, name: str, internal: str) -> None:

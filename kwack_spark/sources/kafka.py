@@ -22,8 +22,12 @@ Design for testability and scale:
   executor.
 - Primitive serdes, and plain-struct JSON Schema (``from_json``), decode
   JVM-side — no Python in the path.
-- At 100 TB the Kafka read parallelizes per topic-partition (1 task each,
-  ``minPartitions`` to split further); decode is narrow (no shuffle).
+- The connector read (``read_topic_frames``) takes the engine's
+  ``KwackConfig`` whole: bootstrap, -p partitions, -o offset, -m timeout
+  and -X client properties reach the source reader and the end-offset
+  admin lookup from that one object, in batch and live mode alike.
+- At 100 TB the Kafka read parallelizes per topic-partition (1 task each);
+  decode is narrow (no shuffle).
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
-from kwack_spark.config import Serde
+from kwack_spark.config import KwackConfig, Serde
 from kwack_spark.rowstage import per_row
 from kwack_spark.schema import avro as avro_schema
 from kwack_spark.schema import jsonschema as json_schema
@@ -561,7 +565,7 @@ def _jvm_value_col(value_serde: Serde, skip_bytes: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# topic registration (the real Kafka connector path)
+# the Kafka connector read (KwackConfig -> frames)
 # ---------------------------------------------------------------------------
 
 
@@ -575,19 +579,37 @@ def resolve_relative_offsets(
     return {p: max(0, end - n) for p, end in end_offsets.items()}
 
 
+def _client_props(config: KwackConfig) -> dict[str, str]:
+    """The Kafka client properties of ``config``: bootstrap servers, the
+    reference's -m/--metadata-timeout (KwackMain.java:61-63) as the
+    client's request and API timeouts, then the -X / named SSL client
+    properties (last, so an explicit -X wins).  The source reader gets
+    them as ``kafka.<key>`` options, the admin client as they are."""
+    props = {"bootstrap.servers": config.kafka_bootstrap}
+    if config.metadata_timeout_ms is not None:
+        props["request.timeout.ms"] = str(config.metadata_timeout_ms)
+        props["default.api.timeout.ms"] = str(config.metadata_timeout_ms)
+    props.update((k, str(v)) for k, v in config.client_props.items())
+    return props
+
+
 def jvm_end_offsets(
-    spark: SparkSession, bootstrap: str, topic: str, partitions: list[int] | None = None
+    spark: SparkSession, config: KwackConfig, topic: str
 ) -> dict[int, int]:
-    """Per-partition END offsets via the Kafka AdminClient through Spark's
-    JVM (py4j — no new Python dependency; the kafka-clients jar arrives with
-    the same spark-sql-kafka connector package the source itself needs)."""
+    """Per-partition END offsets of ``topic`` (its -p partitions, else all
+    of them) via the Kafka AdminClient through Spark's JVM (py4j — no new
+    Python dependency; the kafka-clients jar arrives with the same
+    spark-sql-kafka connector package the source itself needs).  The admin
+    client connects with the reader's client properties."""
     try:
         jvm = spark._jvm
         props = jvm.java.util.Properties()
-        props.put("bootstrap.servers", bootstrap)
+        for k, v in _client_props(config).items():
+            props.put(k, v)
         admin = jvm.org.apache.kafka.clients.admin.AdminClient.create(props)
         try:
-            if partitions is None:
+            partitions = config.topic_partitions.get(topic)
+            if not partitions:
                 names = jvm.java.util.Collections.singletonList(topic)
                 desc = admin.describeTopics(names).allTopicNames().get().get(topic)
                 partitions = [pi.partition() for pi in desc.partitions()]
@@ -612,112 +634,86 @@ def jvm_end_offsets(
         ) from exc
 
 
+def _needs_end_offsets(config: KwackConfig, topic: str) -> bool:
+    """'-N' starts from each partition's end, and '<abs>' without -p must
+    name every partition (Spark rejects a partial offset JSON): both need
+    the end-offset lookup, whose keys are the topic's partitions."""
+    kind = config.offset().kind
+    return kind == "relative" or (
+        kind == "absolute" and not config.topic_partitions.get(topic)
+    )
+
+
 def kafka_reader_options(
-    bootstrap: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    partitions: list[int] | None = None,
-    offset_spec: "OffsetSpec | None" = None,
-    min_partitions: int | None = None,
-    end_offsets: dict[int, int] | None = None,
-    metadata_timeout_ms: int | None = None,
-    client_props: dict[str, str] | None = None,
+    config: KwackConfig, topic: str, end_offsets: dict[int, int] | None = None
 ) -> dict[str, str]:
-    """Spark Kafka source options from the reference's offset/partition
-    grammar (KwackMain.java:69-76): beginning|end -> earliest|latest;
-    @<ts ms> -> startingTimestamp(s); <abs> -> per-partition offset JSON;
-    -N -> absolute offsets computed from ``end_offsets`` (resolved via an
-    admin client, jvm_end_offsets — Spark's source only understands the
-    -2/-1 earliest/latest sentinels, never '-N before end');
-    -p partitions -> assign JSON."""
+    """Spark Kafka source options for ``topic`` from ``config``'s offset/
+    partition grammar (KwackMain.java:69-76): beginning|end ->
+    earliest|latest; @<ts ms> -> startingTimestamp(s); <abs> ->
+    per-partition offset JSON over the -p partitions, else over every
+    partition of ``end_offsets``; -N -> absolute offsets computed from
+    ``end_offsets`` (resolved via an admin client, jvm_end_offsets —
+    Spark's source only understands the -2/-1 earliest/latest sentinels,
+    never '-N before end'); -p partitions -> assign JSON."""
     import json as _json
 
-    opts: dict[str, str] = {
-        "kafka.bootstrap.servers": bootstrap,
-        "includeHeaders": "true",
-    }
-    if metadata_timeout_ms is not None:
-        # reference -m/--metadata-timeout (KwackMain.java:61-63): bound every
-        # broker metadata/admin request; the Kafka client's equivalents
-        opts["kafka.request.timeout.ms"] = str(metadata_timeout_ms)
-        opts["kafka.default.api.timeout.ms"] = str(metadata_timeout_ms)
-    for k, v in (client_props or {}).items():
-        # reference -X prop=val passthrough: raw Kafka client properties
-        opts[f"kafka.{k}"] = str(v)
+    partitions = config.topic_partitions.get(topic)
+    spec = config.offset()
+    opts = {f"kafka.{k}": v for k, v in _client_props(config).items()}
+    opts["includeHeaders"] = "true"
     if partitions:
         opts["assign"] = _json.dumps({topic: sorted(partitions)})
     else:
         opts["subscribe"] = topic
-    if offset_spec is not None:
-        if offset_spec.kind == "beginning":
-            opts["startingOffsets"] = "earliest"
-        elif offset_spec.kind == "end":
-            opts["startingOffsets"] = "latest"
-        elif offset_spec.kind == "timestamp":
-            if partitions:
-                opts["startingTimestamps"] = _json.dumps(
-                    {topic: {str(p): offset_spec.value for p in partitions}}
-                )
-            else:
-                opts["startingTimestamp"] = str(offset_spec.value)
-        elif offset_spec.kind == "relative":
-            if end_offsets is None:
-                raise ValueError(
-                    f"relative offset {offset_spec.value} needs per-partition "
-                    "end offsets (jvm_end_offsets / end_offsets_fn) — Spark's "
-                    "Kafka source has no '-N before end' form"
-                )
-            starts = resolve_relative_offsets(offset_spec.value, end_offsets)
-            opts["startingOffsets"] = _json.dumps(
-                {topic: {str(p): o for p, o in sorted(starts.items())}}
+    if _needs_end_offsets(config, topic) and end_offsets is None:
+        raise ValueError(
+            f"offset {config.starting_offset!r} needs per-partition end "
+            "offsets (jvm_end_offsets / end_offsets_fn) — Spark's Kafka "
+            "source has no '-N before end' form and needs every partition "
+            "named in a specific-offsets start"
+        )
+    if spec.kind == "beginning":
+        opts["startingOffsets"] = "earliest"
+    elif spec.kind == "end":
+        opts["startingOffsets"] = "latest"
+    elif spec.kind == "timestamp":
+        if partitions:
+            opts["startingTimestamps"] = _json.dumps(
+                {topic: {str(p): spec.value for p in partitions}}
             )
-        else:  # absolute per-partition offsets need partitions
-            parts = partitions if partitions else [0]
-            opts["startingOffsets"] = _json.dumps(
-                {topic: {str(p): offset_spec.value for p in parts}}
-            )
+        else:
+            opts["startingTimestamp"] = str(spec.value)
     else:
-        opts["startingOffsets"] = starting_offsets
-    if min_partitions:
-        opts["minPartitions"] = str(min_partitions)
+        if spec.kind == "relative":
+            starts = resolve_relative_offsets(spec.value, end_offsets)
+        else:
+            starts = {p: spec.value for p in partitions or end_offsets}
+        opts["startingOffsets"] = _json.dumps(
+            {topic: {str(p): o for p, o in sorted(starts.items())}}
+        )
     return opts
 
 
 def read_topic_frames(
     spark: SparkSession,
-    bootstrap: str,
+    config: KwackConfig,
     topic: str,
-    starting_offsets: str = "earliest",
     streaming: bool = False,
-    min_partitions: int | None = None,
-    partitions: list[int] | None = None,
-    offset_spec: "OffsetSpec | None" = None,
     end_offsets_fn: Callable[..., dict[int, int]] | None = None,
-    metadata_timeout_ms: int | None = None,
-    client_props: dict[str, str] | None = None,
 ) -> DataFrame:
-    """spark.read[Stream].format('kafka') — one task per topic-partition;
-    raises a clear error when the Kafka connector jar is absent.
+    """spark.read[Stream].format('kafka') over ``topic`` with ``config``'s
+    connection, partition and offset settings — one task per
+    topic-partition; raises a clear error when the Kafka connector jar is
+    absent.
 
-    ``end_offsets_fn(spark, bootstrap, topic, partitions)``: resolver for
-    '-N before end' offset specs (default jvm_end_offsets, admin client)."""
+    ``end_offsets_fn(spark, config, topic)``: per-partition end-offset
+    lookup for the offset specs that need one (default jvm_end_offsets,
+    admin client)."""
     end_offsets = None
-    if offset_spec is not None and offset_spec.kind == "relative":
-        end_offsets = (end_offsets_fn or jvm_end_offsets)(
-            spark, bootstrap, topic, partitions
-        )
+    if _needs_end_offsets(config, topic):
+        end_offsets = (end_offsets_fn or jvm_end_offsets)(spark, config, topic)
     reader = (spark.readStream if streaming else spark.read).format("kafka")
-    for k, v in kafka_reader_options(
-        bootstrap,
-        topic,
-        starting_offsets,
-        partitions,
-        offset_spec,
-        min_partitions,
-        end_offsets,
-        metadata_timeout_ms,
-        client_props,
-    ).items():
+    for k, v in kafka_reader_options(config, topic, end_offsets).items():
         reader = reader.option(k, v)
     try:
         return reader.load()
@@ -727,56 +723,3 @@ def read_topic_frames(
             "must be on the Spark classpath (spark.jars.packages="
             "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark version>)"
         ) from exc
-
-
-def register_topics(
-    spark: SparkSession,
-    bootstrap: str,
-    topics: list[str],
-    serdes: dict[str, str] | None = None,
-    key_serdes: dict[str, str] | None = None,
-    registry: MockSchemaRegistry | None = None,
-    starting_offsets: str = "earliest",
-    streaming: bool = False,
-    row_attributes: tuple[str, ...] = ("rowkey", "ksi", "vsi", "par", "off", "ts", "hdr"),
-    skip_bytes: int = 0,
-    topic_partitions: dict[str, list[int]] | None = None,
-    offset_spec: "OffsetSpec | None" = None,
-    on_error: str = "fail",
-    end_offsets_fn: Callable[..., dict[int, int]] | None = None,
-    metadata_timeout_ms: int | None = None,
-    client_props: dict[str, str] | None = None,
-) -> dict[str, DataFrame]:
-    """One temp view per topic (the reference's CREATE TABLE per topic,
-    KwackEngine.java:587-591)."""
-    from kwack_spark.config import parse_serde
-
-    out: dict[str, DataFrame] = {}
-    for topic in topics:
-        frames = read_topic_frames(
-            spark,
-            bootstrap,
-            topic,
-            starting_offsets,
-            streaming,
-            partitions=(topic_partitions or {}).get(topic),
-            offset_spec=offset_spec,
-            end_offsets_fn=end_offsets_fn,
-            metadata_timeout_ms=metadata_timeout_ms,
-            client_props=client_props,
-        )
-        decoded = decode_topic(
-            frames,
-            topic,
-            value_serde=parse_serde((serdes or {}).get(topic, "latest")),
-            key_serde=parse_serde((key_serdes or {}).get(topic, "binary")),
-            registry=registry,
-            row_attributes=row_attributes,
-            skip_bytes=skip_bytes,
-            on_error=on_error,
-        )
-        from kwack_spark.session import register_view
-
-        register_view(decoded, topic)
-        out[topic] = decoded
-    return out

@@ -19,11 +19,10 @@ a Kafka source."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kwack_spark.sources.kafka import KAFKA_FRAME_SCHEMA
 from kwack_spark.streaming.trigger import LIVE_PROCESSING_TIME, start_query
 
 
@@ -62,12 +61,6 @@ def _empty_pdf(*cols):
     import pandas as pd
 
     return pd.DataFrame({name: pd.Series([], dtype=dt) for name, dt in cols})
-
-
-def stream_frames_from_dir(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of kafka-shaped frames (tests / replay): any
-    directory of parquet files with the frame schema becomes a stream."""
-    return spark.readStream.schema(KAFKA_FRAME_SCHEMA).parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -364,15 +357,10 @@ def stateful_lsh_neardup(
         state.update((ids, shs))
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(
-            {"id_a": out_a, "id_b": out_b, "jaccard": out_j}
-            if out_a
-            else {
-                "id_a": pd.Series([], dtype="int64"),
-                "id_b": pd.Series([], dtype="int64"),
-                "jaccard": pd.Series([], dtype="float64"),
-            }
-        )
+        if out_a:
+            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "jaccard": out_j})
+        else:
+            yield _empty_pdf(("id_a", "int64"), ("id_b", "int64"), ("jaccard", "float64"))
 
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout

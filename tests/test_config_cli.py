@@ -141,87 +141,137 @@ def test_engine_copy_partitioned(spark, tmp_path):
     assert 0 < one < back.count()
 
 
+def _reader_options(end_offsets=None, **cfg):
+    from kwack_spark.sources.kafka import kafka_reader_options
+
+    return kafka_reader_options(
+        KwackConfig(kafka_bootstrap="b:9092", **cfg), "t", end_offsets
+    )
+
+
 def test_kafka_reader_options():
     """Offset/partition grammar -> Spark Kafka source options (A1 surface;
     no broker needed to verify the option construction)."""
-    import json as _json
-
-    from kwack_spark.config import parse_offset
-    from kwack_spark.sources.kafka import kafka_reader_options
-
-    o = kafka_reader_options("b:9092", "t", offset_spec=parse_offset("beginning"))
+    o = _reader_options()
+    assert o["kafka.bootstrap.servers"] == "b:9092"
     assert o["subscribe"] == "t" and o["startingOffsets"] == "earliest"
 
-    o = kafka_reader_options("b:9092", "t", offset_spec=parse_offset("end"))
+    o = _reader_options(starting_offset="end")
     assert o["startingOffsets"] == "latest"
 
-    o = kafka_reader_options(
-        "b:9092", "t", partitions=[0, 2], offset_spec=parse_offset("100")
-    )
-    assert _json.loads(o["assign"]) == {"t": [0, 2]}
-    assert _json.loads(o["startingOffsets"]) == {"t": {"0": 100, "2": 100}}
+    o = _reader_options(topic_partitions={"t": [0, 2]}, starting_offset="100")
+    assert json.loads(o["assign"]) == {"t": [0, 2]}
+    assert json.loads(o["startingOffsets"]) == {"t": {"0": 100, "2": 100}}
 
-    o = kafka_reader_options("b:9092", "t", offset_spec=parse_offset("@1700000000000"))
+    o = _reader_options(starting_offset="@1700000000000")
     assert o["startingTimestamp"] == "1700000000000"
 
-    o = kafka_reader_options(
-        "b:9092", "t", partitions=[1], offset_spec=parse_offset("@5"), min_partitions=64
-    )
-    assert _json.loads(o["startingTimestamps"]) == {"t": {"1": 5}}
-    assert o["minPartitions"] == "64"
+    o = _reader_options(topic_partitions={"t": [1]}, starting_offset="@5")
+    assert json.loads(o["startingTimestamps"]) == {"t": {"1": 5}}
+
+
+def test_absolute_offset_without_partitions_names_every_partition():
+    """'-o <n>' without '-p' starts EVERY partition at n: Spark's Kafka
+    source rejects a specific-offsets JSON that leaves a partition out, so
+    the partitions come from the end-offset lookup ('-N' uses the same)."""
+    o = _reader_options(starting_offset="100", end_offsets={0: 9, 1: 9, 2: 9})
+    assert o["subscribe"] == "t"
+    assert json.loads(o["startingOffsets"]) == {
+        "t": {"0": 100, "1": 100, "2": 100}
+    }
+    # no lookup result -> explicit error, never a silent partition-0 start
+    with pytest.raises(ValueError, match="end offsets"):
+        _reader_options(starting_offset="100")
 
 
 def test_relative_offsets_resolve_against_end():
     """'-N' (KwackMain.java:69-76) -> absolute per-partition starts from end
     offsets: end-100 per partition, clamped at 0 for short partitions."""
-    import json as _json
-
-    import pytest
-
-    from kwack_spark.config import parse_offset
-    from kwack_spark.sources.kafka import (
-        kafka_reader_options,
-        resolve_relative_offsets,
-    )
+    from kwack_spark.sources.kafka import resolve_relative_offsets
 
     ends = {0: 1000, 1: 350, 2: 40}
     assert resolve_relative_offsets(-100, ends) == {0: 900, 1: 250, 2: 0}
 
-    o = kafka_reader_options(
-        "b:9092", "t", offset_spec=parse_offset("-100"), end_offsets=ends
-    )
-    assert _json.loads(o["startingOffsets"]) == {"t": {"0": 900, "1": 250, "2": 0}}
+    o = _reader_options(starting_offset="-100", end_offsets=ends)
+    assert json.loads(o["startingOffsets"]) == {"t": {"0": 900, "1": 250, "2": 0}}
 
     # no resolver output -> explicit error, never a silent sentinel pass-through
     with pytest.raises(ValueError, match="end offsets"):
-        kafka_reader_options("b:9092", "t", offset_spec=parse_offset("-100"))
+        _reader_options(starting_offset="-100")
 
 
 def test_read_topic_frames_uses_end_offsets_fn(spark):
-    """read_topic_frames resolves '-N' through the injected resolver before
-    building source options (the connector jar itself is absent here, so the
-    load fails afterwards with the documented error — resolver calls are
-    still observable)."""
-    import pytest
-
-    from kwack_spark.config import parse_offset
+    """read_topic_frames resolves '-N', and '<abs>' without -p, through the
+    injected end-offset lookup before building source options (the
+    connector jar itself is absent here, so the load fails afterwards with
+    the documented error — lookup calls are still observable).  '<abs>'
+    with -p names its partitions itself and needs no lookup."""
     from kwack_spark.sources.kafka import read_topic_frames
 
     calls = []
 
-    def fake_ends(spark_, bootstrap, topic, partitions):
-        calls.append((bootstrap, topic, partitions))
+    def fake_ends(spark_, config, topic):
+        calls.append((config, topic))
         return {0: 500}
 
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        read_topic_frames(
-            spark,
-            "b:9092",
-            "t",
-            offset_spec=parse_offset("-10"),
-            end_offsets_fn=fake_ends,
+    for offset, parts, looked_up in (
+        ("-10", {}, True),
+        ("100", {}, True),
+        ("100", {"t": [0]}, False),
+    ):
+        calls.clear()
+        cfg = KwackConfig(
+            kafka_bootstrap="b:9092", starting_offset=offset, topic_partitions=parts
         )
-    assert calls == [("b:9092", "t", None)]
+        with pytest.raises(RuntimeError, match="spark-sql-kafka"):
+            read_topic_frames(spark, cfg, "t", end_offsets_fn=fake_ends)
+        assert calls == ([(cfg, "t")] if looked_up else []), offset
+
+
+def test_admin_lookup_connects_with_client_settings():
+    """The end-offset admin client gets the reader's client settings: the
+    bootstrap, the -m timeout and the -X / SSL / SASL properties, as plain
+    Kafka keys.  A fake JVM records every Properties.put and fails at
+    AdminClient.create (no jar, no broker)."""
+    from types import SimpleNamespace as NS
+
+    from kwack_spark.sources.kafka import jvm_end_offsets
+
+    puts = {}
+
+    class Properties:
+        def put(self, k, v):
+            puts[k] = v
+
+    class NoBroker(Exception):
+        pass
+
+    def create(props):
+        raise NoBroker
+
+    jvm = NS(
+        java=NS(util=NS(Properties=Properties)),
+        org=NS(apache=NS(kafka=NS(clients=NS(admin=NS(AdminClient=NS(create=create)))))),
+    )
+    cfg = config_from_args(
+        build_parser().parse_args(
+            [
+                "-b", "broker:9093", "-t", "t", "-o", "-5", "-m", "4500",
+                "--security-protocol", "SASL_SSL",
+                "-X", "sasl.mechanism=PLAIN",
+            ]
+        )
+    )
+    with pytest.raises(RuntimeError, match="end offsets") as ei:
+        jvm_end_offsets(NS(_jvm=jvm), cfg, "t")
+    assert isinstance(ei.value.__cause__, NoBroker)
+    assert puts == {
+        "bootstrap.servers": "broker:9093",
+        "request.timeout.ms": "4500",
+        "default.api.timeout.ms": "4500",
+        "security.protocol": "SASL_SSL",
+        "sasl.mechanism": "PLAIN",
+    }
 
 
 def test_engine_kafka_without_connector_raises_clear_error(spark):
@@ -233,6 +283,53 @@ def test_engine_kafka_without_connector_raises_clear_error(spark):
                       topic_serdes={"t1": "string"})
     with pytest.raises(RuntimeError, match="spark-sql-kafka"):
         KwackSpark(cfg, spark=spark).init()
+
+
+def test_engine_init_registers_kafka_topics(spark, tmp_path, monkeypatch):
+    """init() turns every configured topic into a view through the one
+    topic path: the Kafka read (replaced here by parquet frames — no
+    connector jar) and the config's serdes.  A dashed topic with a string
+    serde gets its backticked alias; a topic left on the defaults decodes
+    its value as the registry's latest Avro schema and its key as binary."""
+    import datetime
+
+    from kwack_spark.engine import KwackSpark
+    from kwack_spark.schema import avro as avro_schema
+    from kwack_spark.schema.registry import MockSchemaRegistry
+    from kwack_spark.sources import kafka as ks
+
+    schema = {"type": "record", "name": "Ev",
+              "fields": [{"name": "uid", "type": "int"}]}
+    reg = MockSchemaRegistry()
+    sid = reg.register("evs-value", json.dumps(schema), "AVRO")
+    ts = datetime.datetime(2024, 1, 1)
+    values = {
+        "a-b": [f"s{i}".encode() for i in range(3)],
+        "evs": [ks.confluent_frame(avro_schema.encode({"uid": i}, schema), sid)
+                for i in range(5)],
+    }
+    for topic, vals in values.items():
+        rows = [(b"k", v, topic, 0, i, ts, 0, None) for i, v in enumerate(vals)]
+        spark.createDataFrame(rows, ks.KAFKA_FRAME_SCHEMA).write.parquet(
+            str(tmp_path / topic)
+        )
+
+    reads = []
+
+    def parquet_frames(spark_, config, topic, streaming=False, end_offsets_fn=None):
+        reads.append((config, topic, streaming))
+        return spark_.read.parquet(str(tmp_path / topic))
+
+    monkeypatch.setattr(ks, "read_topic_frames", parquet_frames)
+    cfg = KwackConfig(kafka_bootstrap="b:9092", topics=["a-b", "evs"],
+                      topic_serdes={"a-b": "string"})
+    eng = KwackSpark(cfg, spark=spark, registry=reg).init()
+    assert reads == [(cfg, "a-b", False), (cfg, "evs", False)]
+
+    got = eng.sql("SELECT rowval FROM `a-b` ORDER BY rowinfo.off").collect()
+    assert [r.rowval for r in got] == ["s0", "s1", "s2"]
+    got = eng.sql("SELECT uid, rowkey FROM evs ORDER BY uid").collect()
+    assert [(r.uid, bytes(r.rowkey)) for r in got] == [(i, b"k") for i in range(5)]
 
 
 def test_engine_explain_surface(spark):
@@ -343,8 +440,8 @@ def test_engine_copy_csv_and_json(spark, tmp_path):
 
 def test_cli_metadata_timeout_and_property_passthrough():
     """-m and -X (KwackMain.java:61-63,136-138): -m bounds broker requests,
-    -X routes kwack keys / spark.* conf / raw Kafka client properties."""
-    from kwack_spark.cli import build_parser, config_from_args
+    -X routes kwack keys / spark.* conf / raw Kafka client properties; CLI
+    args -> config -> reader options end to end."""
     from kwack_spark.sources.kafka import kafka_reader_options
 
     args = build_parser().parse_args(
@@ -365,15 +462,13 @@ def test_cli_metadata_timeout_and_property_passthrough():
     assert cfg.skip_bytes == 4
     assert cfg.topic_serdes["t1"] == "string"
 
-    opts = kafka_reader_options(
-        "broker:9092",
-        "t1",
-        metadata_timeout_ms=cfg.metadata_timeout_ms,
-        client_props=cfg.client_props,
-    )
+    opts = kafka_reader_options(cfg, "t1")
+    assert opts["kafka.bootstrap.servers"] == "broker:9092"
     assert opts["kafka.request.timeout.ms"] == "45000"
     assert opts["kafka.default.api.timeout.ms"] == "45000"
     assert opts["kafka.security.protocol"] == "SASL_SSL"
+    assert not any(k.startswith("kafka.spark.") for k in opts)
+    assert "kafka.skip.bytes" not in opts and "kafka.serde.t1" not in opts
 
 
 def test_properties_file_metadata_timeout(tmp_path):
@@ -460,7 +555,6 @@ def test_named_ssl_flags_land_in_reader_options():
     """The named SSL flags (reference surface KwackConfig.java:100-191)
     route into the same client-prop table as -X and come out as
     kafka.<key> Spark reader options; the enum-valued one is validated."""
-    from kwack_spark.config import parse_offset
     from kwack_spark.sources.kafka import kafka_reader_options
 
     args = build_parser().parse_args(
@@ -487,11 +581,8 @@ def test_named_ssl_flags_land_in_reader_options():
     assert cfg.client_props["ssl.truststore.password"] == "tspw"
     assert cfg.client_props["ssl.client.authentication"] == "REQUIRED"
 
-    o = kafka_reader_options(
-        cfg.kafka_bootstrap, "t1",
-        offset_spec=parse_offset("beginning"),
-        client_props=cfg.client_props,
-    )
+    o = kafka_reader_options(cfg, "t1")
+    assert o["startingOffsets"] == "earliest"
     assert o["kafka.security.protocol"] == "SSL"
     assert o["kafka.ssl.keystore.location"] == "/etc/kwack/client.jks"
     assert o["kafka.ssl.keystore.password"] == "kspw"

@@ -42,13 +42,18 @@ def _write_frames(spark, path, n=20):
     return reg
 
 
+def _frame_stream(spark, path):
+    """File-source stream of kafka-shaped frames."""
+    return spark.readStream.schema(ks.KAFKA_FRAME_SCHEMA).parquet(path)
+
+
 def test_stream_decode_matches_batch(spark, tmp_path):
     """One decode path, two modes: streaming decode of the same frames equals
     the batch decode."""
     path = str(tmp_path / "frames")
     reg = _write_frames(spark, path)
 
-    stream = si.stream_frames_from_dir(spark, path)
+    stream = _frame_stream(spark, path)
     assert stream.isStreaming
     decoded = ks.decode_topic(
         stream, "evs", Serde(kind="latest"), registry=reg, row_attributes=("off",)
@@ -89,7 +94,7 @@ def test_stream_windowed_counts(spark, tmp_path):
     # complete mode emits open windows too — end-of-stream parity with batch
     # (append mode would hold back windows the watermark hasn't finalized)
     q = si.to_memory_sink(
-        pipeline(si.stream_frames_from_dir(spark, path)), "evs_win", output_mode="complete"
+        pipeline(_frame_stream(spark, path)), "evs_win", output_mode="complete"
     )
     q.awaitTermination(60)
     got = sorted(map(tuple, spark.table("evs_win").collect()))
@@ -100,7 +105,7 @@ def test_stream_windowed_counts(spark, tmp_path):
 def test_stream_session_and_dedup(spark, tmp_path):
     path = str(tmp_path / "frames")
     reg = _write_frames(spark, path)
-    frames = si.stream_frames_from_dir(spark, path)
+    frames = _frame_stream(spark, path)
     decoded = ks.decode_topic(
         frames, "evs", Serde(kind="latest"), registry=reg, row_attributes=("ts",)
     ).withColumn("ets", F.timestamp_millis(F.col("rowinfo.ts")))
@@ -132,7 +137,7 @@ def test_stateful_running_counts(spark, tmp_path):
     equal the batch groupBy count."""
     path = str(tmp_path / "frames")
     reg = _write_frames(spark, path)
-    frames = si.stream_frames_from_dir(spark, path)
+    frames = _frame_stream(spark, path)
     decoded = ks.decode_topic(
         frames, "evs", Serde(kind="latest"), registry=reg, row_attributes=("off",)
     )
@@ -888,10 +893,11 @@ def test_live_topic_runs_on_processing_time_cadence(spark, tmp_path, monkeypatch
 
 
 def test_live_topic_forwards_connection_settings(spark, monkeypatch):
-    """A broker-fed live topic reads its frames with the same connection
-    settings as register_topics: -X client properties (SSL/SASL), the
-    metadata timeout, the topic's partitions and the starting offset.
-    No broker: the reader is replaced by a recorder."""
+    """A broker-fed live topic reads its frames through the same reader and
+    the same config object as init()'s batch topics, so the -X client
+    properties (SSL/SASL), the metadata timeout, the topic's partitions and
+    the starting offset all reach it.  No broker: the reader is replaced by
+    a recorder."""
     from kwack_spark.config import KwackConfig
     from kwack_spark.engine import KwackSpark
 
@@ -900,8 +906,8 @@ def test_live_topic_forwards_connection_settings(spark, monkeypatch):
 
     calls = []
 
-    def recording_reader(spark_, bootstrap, topic, *args, **kwargs):
-        calls.append((bootstrap, topic, args, kwargs))
+    def recording_reader(spark_, config, topic, streaming=False, end_offsets_fn=None):
+        calls.append((config, topic, streaming))
         raise Recorded
 
     monkeypatch.setattr(ks, "read_topic_frames", recording_reader)
@@ -916,13 +922,16 @@ def test_live_topic_forwards_connection_settings(spark, monkeypatch):
     eng = KwackSpark(cfg, spark=spark, registry=MockSchemaRegistry())
     with pytest.raises(Recorded):
         eng.register_live_topic("lt", value_serde=Serde(kind="string"))
-    [(bootstrap, topic, args, kwargs)] = calls
-    assert (bootstrap, topic, args) == ("broker:9093", "lt", ())
-    assert kwargs["streaming"] is True
-    assert kwargs["client_props"] == props
-    assert kwargs["metadata_timeout_ms"] == 1234
-    assert kwargs["partitions"] == [0, 2]
-    assert kwargs["offset_spec"].kind == "end"
+    [(config, topic, streaming)] = calls
+    assert config is eng.config and topic == "lt" and streaming is True
+
+    opts = ks.kafka_reader_options(config, topic)
+    assert opts["kafka.bootstrap.servers"] == "broker:9093"
+    assert opts["kafka.security.protocol"] == "SASL_SSL"
+    assert opts["kafka.sasl.mechanism"] == "PLAIN"
+    assert opts["kafka.request.timeout.ms"] == "1234"
+    assert opts["assign"] == json.dumps({"lt": [0, 2]})
+    assert opts["startingOffsets"] == "latest"
 
 
 def test_continuous_start_quiets_falling_behind_logger(spark, tmp_path):
