@@ -81,22 +81,6 @@ def minhash_seed_slice(i: int) -> tuple[str, int]:
     return chr(ord("a") + i // 4), (i % 4) * 8 + 1
 
 
-def minhash(shingle_col: Column, i: int) -> Column:
-    """MinHash member i: lexicographic min of the i-th md5 slice per
-    shingle.  md5 is identical across engines -> oracle-checkable."""
-    seed, off = minhash_seed_slice(i)
-    return F.array_min(
-        F.transform(
-            shingle_col,
-            lambda s: F.substring(F.md5(F.concat(F.lit(f"{seed}:"), s)), off, 8),
-        )
-    )
-
-
-def minhash_signature(shingle_col: Column, k: int = 8) -> list[Column]:
-    return [minhash(shingle_col, i).alias(f"mh{i}") for i in range(k)]
-
-
 def simhash_bits(tok_col: Column, bits: int = 16) -> Column:
     """SimHash fingerprint as a bit-string: bit i is 1 iff the majority of
     tokens have the high bit of md5 nibble i set (nibble in 89abcdef).

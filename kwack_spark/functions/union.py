@@ -9,15 +9,8 @@ that encoding — pure column expressions, JVM-side.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _branch_names(col_or_df, col_name: str | None = None) -> list[str]:
-    if isinstance(col_or_df, DataFrame):
-        dt = col_or_df.schema[col_name].dataType
-        return [f.name for f in dt.fields]
-    raise TypeError("pass (df, 'column') to derive branch names from the schema")
 
 
 def union_tag(col: Column, branches: list[str]) -> Column:
@@ -33,14 +26,3 @@ def union_extract(col: Column, branch: str) -> Column:
     """Value of one branch (NULL when another branch is set) — DuckDB
     union_extract equivalent."""
     return col.getField(branch)
-
-
-def union_value(branches: list[tuple[str, Column]], active: Column) -> Column:
-    """Build a union struct: ``active`` names the branch to set; all other
-    branches are NULL.  Inverse of union_tag/union_extract."""
-    fields = []
-    for name, value in branches:
-        fields.append(
-            F.when(active == F.lit(name), value).otherwise(F.lit(None)).alias(name)
-        )
-    return F.struct(*fields)

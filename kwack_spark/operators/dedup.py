@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kwack_spark import stages
 from kwack_spark.functions import text as TX
 
 # Default hot-band cap for the MinHash-LSH family.  The SAME constant is
@@ -179,25 +180,24 @@ def _lsh_base(
     inline ``TX.tokens`` path, so signatures, band keys and verified
     pairs are unchanged."""
     from kwack_spark.operators.scale import widen_if_narrow
-    from kwack_spark.operators.similarity import _persist_rotating
 
     if not pre_tokenized:
         # md5 signature stage must not run single-task
         df = widen_if_narrow(df)
     tok_col = F.col(text_col) if pre_tokenized else TX.tokens(text_col)
     tag = f"k{k}b{bands}n{shingle_n}" + ("t" if pre_tokenized else "")
-    shingle_sets = _persist_rotating(
+    shingle_sets = stages.hold(
         f"lsh_sets:{tag}",
         df.select(
             F.col(id_col),
             F.array_distinct(TX.shingles(tok_col, shingle_n)).alias("sh"),
         ),
     )
-    exploded = _persist_rotating(
+    exploded = stages.hold(
         f"lsh_bands:{tag}",
         lsh_band_keys(shingle_sets, id_col, k, bands, narrow=True),
     )
-    census = _persist_rotating(
+    census = stages.hold(
         f"lsh_census:{tag}",
         exploded.groupBy("band_key").agg(
             F.count(F.lit(1)).alias("_df"), F.min(id_col).alias("_canon")
@@ -477,9 +477,7 @@ def _inc_lsh_sets(
     """Rotating-persisted ``(id, distinct shingle set)`` frame for one side
     of the incremental LSH probe — tag keyed by side+width so history and
     batch caches coexist."""
-    from kwack_spark.operators.similarity import _persist_rotating
-
-    return _persist_rotating(
+    return stages.hold(
         f"lsh_inc_{side}:n{shingle_n}",
         df.select(
             F.col(id_col),
@@ -503,7 +501,8 @@ def _inc_lsh_history(
     shingle sets and the df-capped ``(hist_id, band_key)`` index.  The
     band-key frame RIDES a prefetched cache when one exists
     (``warm_incremental_lsh_history`` from a curation DAG's index-build
-    thread pool) but is NOT persisted standalone: measured at sf0.1,
+    thread pool; Spark's CacheManager swaps in the held frame by plan
+    match) but is NOT persisted standalone: measured at sf0.1,
     forcing the persist costs more than the census+probe double-compute
     it saves (2.43 vs 2.06 s median on dedup_incremental_lsh) — at
     100 TB the landed band-key table is a bucketed table written once,
@@ -513,13 +512,8 @@ def _inc_lsh_history(
     r12): a band ubiquitous in landed history (boilerplate cluster)
     carries no "is this NEW?" signal and would contribute O(df) rows per
     probing batch item on one shuffle key."""
-    from kwack_spark.operators.similarity import _reuse_rotating
-
     hist_base = _inc_lsh_sets(history, id_col, text_col, shingle_n, "hist")
-    hist_keys_all = _reuse_rotating(
-        f"lsh_inc_histkeys:k{k}b{bands}n{shingle_n}",
-        lsh_band_keys(hist_base, id_col, k, bands),
-    )
+    hist_keys_all = lsh_band_keys(hist_base, id_col, k, bands)
     hot = (
         hist_keys_all.groupBy("band_key")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -551,10 +545,8 @@ def warm_incremental_lsh_history(
     cache serves any ``max_band_df`` (r12 ADVICE — the former
     ``max_band_df`` parameter here was never used and invited the false
     expectation that the warm index was cap-filtered)."""
-    from kwack_spark.operators.similarity import _persist_rotating
-
     hist_base = _inc_lsh_sets(history, id_col, text_col, shingle_n, "hist")
-    keys = _persist_rotating(
+    keys = stages.hold(
         f"lsh_inc_histkeys:k{k}b{bands}n{shingle_n}",
         lsh_band_keys(hist_base, id_col, k, bands),
     )
@@ -627,10 +619,9 @@ def _shingle_band_base(
     band-candidate stage and the verify joins — computed once, not four
     times.  Rotating persist: one outstanding cache per shingle width."""
     from kwack_spark.operators.scale import widen_if_narrow
-    from kwack_spark.operators.similarity import _persist_rotating
 
     df = widen_if_narrow(df)  # shingle/token-set stage must not run single-task
-    return _persist_rotating(
+    return stages.hold(
         f"shband:n{shingle_n}",
         df.select(
             F.col(id_col),
@@ -887,7 +878,6 @@ def simhash64_hamming_pairs(
         )
     if 64 % blocks:
         raise ValueError(f"blocks must divide 64 (got {blocks})")
-    from kwack_spark.operators.similarity import _persist_rotating
 
     # persist the fingerprint index: both sides of the slice self-join (and
     # the verify) read it, and at 100 TB this IS the written-once 8B/doc
@@ -895,7 +885,7 @@ def simhash64_hamming_pairs(
     # pipeline once per join side.  Rotating persist (r07 ADVICE #2): a
     # long-lived session (multi-rep bench) keeps at most ONE cached index
     # per operator family instead of accumulating one per call.
-    fps = _persist_rotating(
+    fps = stages.hold(
         "sh64_pairs_fps", simhash64_fingerprints(df, id_col, text_col)
     )
     return fingerprint_hamming_pairs(fps, id_col, max_hamming, blocks)
@@ -1249,13 +1239,12 @@ def exact_duplicate_spans(
     Work is O(total tokens) hashing + candidate-sized verification; every
     shuffle key (anchor hash, doc id) is uniform."""
     from kwack_spark.operators.scale import widen_if_narrow
-    from kwack_spark.operators.similarity import _persist_rotating
     from pyspark.sql import Window
 
     w = min_tokens
     # token arrays feed the anchor stage AND the final span-text slice —
     # persisted so tokenization runs once (rotating: one cache per family)
-    toks = _persist_rotating(
+    toks = stages.hold(
         "exact_span_toks",
         widen_if_narrow(df)
         .select(F.col(id_col), TX.tokens(text_col).alias("tk"))
@@ -1339,13 +1328,12 @@ def simhash64_hamming_pairs_combo(
         )
     if 64 % blocks:
         raise ValueError(f"blocks must divide 64 (got {blocks})")
-    from kwack_spark.operators.similarity import _persist_rotating
 
     width = 64 // blocks
     mask = (1 << width) - 1
     # rotating persist (r07 ADVICE #2): one cached fingerprint index per
     # operator family, released on the next call
-    fps = _persist_rotating(
+    fps = stages.hold(
         "sh64_combo_fps", simhash64_fingerprints(df, id_col, text_col)
     )
 

@@ -1138,18 +1138,6 @@ def _jpeg_padded(plane, w: int, h: int):
     return padded
 
 
-def _jpeg_blocks(plane, w, h):
-    """Split an (h, w) plane into row-major 8x8 blocks, edge-replicating to
-    multiples of 8."""
-    padded = _jpeg_padded(plane, w, h)
-    H, W = padded.shape
-    return [
-        padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-        for by in range(H // 8)
-        for bx in range(W // 8)
-    ]
-
-
 # quant tables, DCT matrix and Annex K Huffman code maps, built once per
 # process (fixed module constants; treated read-only by all users)
 _ENC_MEMO: dict = {}

@@ -27,6 +27,8 @@ import logging
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kwack_spark import stages
+
 _log = logging.getLogger(__name__)
 
 
@@ -112,16 +114,16 @@ def global_running_sum(
     which would make the local-cumsum + offset decomposition ambiguous.
 
     The range-partitioned intermediate feeds two subtrees (local windows
-    and per-partition totals), so it is persisted — without it the source
-    is scanned and range-shuffled twice.
+    and per-partition totals), so it is held (``stages.hold``) — without
+    it the source is scanned and range-shuffled twice.
     """
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ranged = stages.hold(
+        "running_sum_ranged",
+        df.repartitionByRange(num_partitions, *order_cols).withColumn(
+            "__pid", F.spark_partition_id()
+        ),
     )
     w_local = (
         Window.partitionBy("__pid")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kwack_spark import stages
 from kwack_spark.functions import vectors as V
 
 
@@ -313,7 +314,7 @@ def ivf_assign(
         # the same index) would otherwise re-execute that pipeline per use.
         # Rotating persist (r07 ADVICE #2): at most one cached centroid
         # table stays pinned across repeated calls in a long-lived session.
-        cents = _persist_rotating("ivf_cents", cents)
+        cents = stages.hold("ivf_cents", cents)
     return cents, _assign(cents)
 
 
@@ -453,202 +454,6 @@ def ivf_probe_topk(
     ).select("query_id", "corpus_id", "cosine", "rank")
 
 
-# Rotation state is keyed per SparkSession (weakly — a stopped, dropped
-# session releases its entry instead of pinning the last DataFrame's plan
-# forever) and guarded by a lock so concurrent callers in different
-# sessions cannot unpersist each other's index cache mid-build.
-import threading as _threading
-import weakref as _weakref
-
-_ACTIVE_CACHE: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_ACTIVE_CACHE_LOCK = _threading.Lock()
-
-
-def _persist_rotating(tag: str, df: DataFrame) -> DataFrame:
-    """Persist ``df``, releasing the PREVIOUS persisted frame under ``tag``
-    within the same SparkSession — unless the previous frame has the SAME
-    analyzed plan, in which case it is returned as-is (cache REUSE).
-
-    DataFrame.persist pins the plan in the session CacheManager until an
-    explicit unpersist — garbage collection never frees it — so a
-    long-lived session calling a PQ operator repeatedly would accumulate
-    one full reconstructed-index cache per call.  Rotating keeps at most
-    ONE outstanding cache per operator family per session.
-
-    The sameResult reuse matters for repeated identical calls (bench reps,
-    a session re-running one query): a plain pinned ``persist`` gets this
-    for free (the CacheManager dedupes identical plans — the pre-rotation
-    behavior), and naive rotation would unpersist-then-recompute the very
-    cache it could have reused, measured 2-4x on the SimHash64 bench
-    family.  Caveat: plan equality over file sources reflects the files at
-    read time — callers whose INPUT FILES mutate between calls must not
-    share a tag (every current caller reads the immutable testdata or a
-    frame derived from it)."""
-    from pyspark import StorageLevel
-
-    spark = df.sparkSession
-    with _ACTIVE_CACHE_LOCK:
-        per_session = _ACTIVE_CACHE.get(spark)
-        if per_session is None:
-            per_session = {}
-            _ACTIVE_CACHE[spark] = per_session
-        prev = per_session.get(tag)
-        if prev is not None:
-            try:
-                # reuse only while the held frame is STILL cached: an
-                # external spark.catalog.clearCache() (bench/stress
-                # harnesses evict between queries) unpins it behind our
-                # back, and returning an unpersisted frame would make the
-                # caller's self-join recompute the subtree once per side
-                still_cached = (
-                    prev.storageLevel.useMemory or prev.storageLevel.useDisk
-                )
-                if still_cached and prev._jdf.queryExecution().analyzed().sameResult(
-                    df._jdf.queryExecution().analyzed()
-                ):
-                    return prev
-            except Exception:
-                pass
-        per_session.pop(tag, None)
-        # Unpersist the displaced frame BEFORE persisting the new one.
-        # Spark's CacheManager keys entries by plan equality, so when the
-        # held frame was evicted externally (spark.catalog.clearCache()
-        # between bench reps) and the incoming frame has the SAME plan,
-        # persisting first and unpersisting after would destroy the entry
-        # just created — the caller's self-join then recomputes the whole
-        # fingerprint subtree once per side (measured 2.3 s/rep with the
-        # cache vs 8.3 s/rep without on dedup_simhash_hamming).
-        if prev is not None:
-            try:
-                prev.unpersist(False)
-            except Exception:
-                pass
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        per_session[tag] = out
-    return out
-
-
-def _reuse_rotating(tag: str, df: DataFrame) -> DataFrame:
-    """Return the live rotating cache under ``tag`` when it plan-matches
-    ``df``; otherwise return ``df`` UNPERSISTED and leave the registry
-    untouched.  The read-only sibling of ``_persist_rotating`` for
-    consumers whose standalone invocation is cheaper WITHOUT a cache but
-    that should ride one a prefetch thread already materialized
-    (measured on dedup_incremental_lsh at sf0.1: forcing the history
-    band-key persist costs 2.43 s vs 2.06 s median un-persisted, while
-    the warmed curation DAGs reuse the prefetched cache for free)."""
-    spark = df.sparkSession
-    with _ACTIVE_CACHE_LOCK:
-        per_session = _ACTIVE_CACHE.get(spark)
-        prev = per_session.get(tag) if per_session else None
-        if prev is not None:
-            try:
-                still_cached = (
-                    prev.storageLevel.useMemory or prev.storageLevel.useDisk
-                )
-                if still_cached and prev._jdf.queryExecution().analyzed().sameResult(
-                    df._jdf.queryExecution().analyzed()
-                ):
-                    return prev
-            except Exception:
-                pass
-    return df
-
-
-# stage_checkpoint state: spark -> {tag: (source_df, checkpointed_df)}
-_STAGE_CKPT: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
-def _ckpt_alive(ck: DataFrame) -> bool:
-    """True while a localCheckpoint'ed frame's blocks are still persisted
-    (the analyzed plan is a LogicalRDD whose stored RDD carries a storage
-    level; an external unpersist — the bench harness evicts between
-    queries — zeroes it, and a checkpointed RDD cannot recompute)."""
-    try:
-        rdd = ck._jdf.queryExecution().analyzed().rdd()
-        lvl = rdd.getStorageLevel()
-        return bool(lvl.useMemory() or lvl.useDisk())
-    except Exception:
-        return False
-
-
-def stage_checkpoint(tag: str, df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` of a pipeline STAGE frame, rotating the
-    previous checkpoint under ``tag`` — the lineage-truncation sibling of
-    ``_persist_rotating`` for deep sequential DAGs.
-
-    A multi-stage funnel whose every stage is merely ``persist``-ed keeps
-    the FULL logical subtree in every downstream plan: each anti-join
-    doubles the tree (survivor side + drop side both embed the upstream),
-    so analysis, CacheManager lookups and per-call py4j traffic grow
-    geometrically with stage count — measured 17.7 s of pure DataFrame
-    CONSTRUCTION (no job) on the 7-stage all-modalities curation DAG at
-    sf0.1, vs ~2 s of actual execution.  ``localCheckpoint(eager=True)``
-    materializes the stage once and re-roots downstream plans on a
-    LogicalRDD leaf, so every later stage plans against an O(stage)-size
-    tree.  The rows are identical; only the plan shape changes.
-
-    Reuse/rotation contract matches ``_persist_rotating``: an incoming
-    frame whose analyzed plan ``sameResult``-matches the held source IS
-    the held checkpoint (bench reps in an eviction-free session), while a
-    new plan displaces the old checkpoint, whose blocks are explicitly
-    unpersisted.  Liveness is probed through the LogicalRDD storage level
-    because checkpoint blocks CANNOT be recomputed once dropped — a reused
-    frame must still be resident.
-
-    Cluster caveat (same as every ``localCheckpoint`` in this repo, e.g.
-    the components iteration): blocks live in executor storage, so losing
-    an executor fails the query instead of recomputing — acceptable for
-    intra-query stage state; the job retry recomputes from source."""
-    spark = df.sparkSession
-    with _ACTIVE_CACHE_LOCK:
-        per_session = _STAGE_CKPT.get(spark)
-        if per_session is None:
-            per_session = {}
-            _STAGE_CKPT[spark] = per_session
-        prev = per_session.get(tag)
-        if prev is not None:
-            src, ck = prev
-            try:
-                if _ckpt_alive(ck) and src._jdf.queryExecution().analyzed().sameResult(
-                    df._jdf.queryExecution().analyzed()
-                ):
-                    return ck
-            except Exception:
-                pass
-        per_session.pop(tag, None)
-    # Materialize OUTSIDE the lock so INDEPENDENT stage builds submitted
-    # from a driver thread pool genuinely overlap (guide §2.6 — the
-    # incremental curation DAGs build their five history indexes
-    # concurrently; holding the lock across the eager checkpoint would
-    # serialize them).  Callers use distinct tags per call site; two
-    # concurrent builds of the SAME tag would both materialize and the
-    # later store wins (the loser's blocks stay until session end), which
-    # no current caller does.
-    if prev is not None:
-        try:
-            prev[1]._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-    out = df.localCheckpoint(eager=True)
-    # NOTE (r12, measured and deliberately NOT widened): AQE coalesces
-    # a small stage's final shuffle to ONE partition and the checkpoint
-    # freezes that width, so downstream projections run single-task at
-    # bench scale.  Handing consumers a round-robin-widened view
-    # (out.repartition(defaultParallelism) when narrower) was tried and
-    # measured SLOWER end-to-end on both big curation DAGs at sf0.1
-    # (corpus_curation_all_modalities 7.8 -> 11.9 s warm, the
-    # incremental-multimodal DAG 6.6 -> 10.3 s): with only a few
-    # thousand surviving rows per stage, 32 near-empty partitions cost
-    # more in task/Arrow overhead across every consuming job than the
-    # single-core projections they spread out.  At 100 TB the
-    # coalesced width tracks data volume (AQE targets
-    # advisoryPartitionSizeInBytes), so stages stay wide on their own.
-    with _ACTIVE_CACHE_LOCK:
-        per_session[tag] = (df, out)
-    return out
-
-
 def _pq_reconstruct(c: DataFrame, m: int, ksub: int, dsub: int) -> DataFrame:
     """PQ encode + decode: ``(corpus_id, v)`` -> ``(corpus_id, xhat)`` where
     xhat is the vector reconstructed from the nearest code per subspace.
@@ -741,7 +546,7 @@ def pq_topk(
     # createDataFrame re-upload of the index.  Rotating persist: the prior
     # call's cache is released here (CacheManager pins persisted plans
     # until unpersist; GC alone never frees them).
-    recon = _persist_rotating("pq_recon", _pq_reconstruct(c, m, ksub, dsub))
+    recon = stages.hold("pq_recon", _pq_reconstruct(c, m, ksub, dsub))
 
     # Scoring follows brute_force_topk_vectorized's two-stage shape: the
     # (tiny: m*ksub*dsub doubles per vector -> reconstructed) code table is
@@ -902,7 +707,7 @@ def ivf_pq_topk(
     import numpy as np
     import pandas as pd
 
-    coded = _persist_rotating(
+    coded = stages.hold(
         "ivfpq_coded", coded.select("corpus_id", "list_id", "xhat")
     )
     if not _within_cap(coded, max_index_rows):

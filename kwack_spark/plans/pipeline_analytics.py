@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from kwack_spark.functions import text as TX
 from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling, similarity
-from kwack_spark import scratch
+from kwack_spark.operators import asof, dedup, sampling
+from kwack_spark import scratch, stages
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.plans.pipeline import (  # shared core
@@ -973,10 +973,9 @@ def cms_merge_shards(spark, sf_dir):
     h0 = scale.cms_sketch(e.filter(F.col("user_id") % 2 == 0), "user_id")
     h1 = scale.cms_sketch(e.filter(F.col("user_id") % 2 == 1), "user_id")
     mrg = scale.cms_merge(h0, h1)
-    from kwack_spark.operators.similarity import _persist_rotating
 
     # the merged 1024-row sketch feeds the estimate join AND the diff gate
-    mrg = _persist_rotating("cms_mrg", mrg)
+    mrg = stages.hold("cms_mrg", mrg)
     direct = scale.cms_sketch(e, "user_id")
     a = direct.select("d", "b", "cnt")
     b = mrg.select("d", "b", "cnt")
@@ -1259,7 +1258,7 @@ def pagerank_dup_graph(spark, sf_dir):
     # pairs through two projection branches, so persisting upstream of it
     # runs the whole LSH shingle/signature pipeline once instead of twice;
     # every iteration then reads the cached pairs, never the corpus
-    pairs = similarity._persist_rotating("pagerank_pairs", pairs)
+    pairs = stages.hold("pagerank_pairs", pairs)
     edges = pairs.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")
     ).unionAll(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
@@ -1407,7 +1406,7 @@ def dup_graph_triangles(spark, sf_dir):
     pairs = dedup.minhash_lsh_pairs(
         d, "doc_id", "text", k=8, bands=2, threshold=0.5
     ).select("id_a", "id_b")
-    pairs = similarity._persist_rotating("tri_pairs", pairs)
+    pairs = stages.hold("tri_pairs", pairs)
     p1, p2, p3 = pairs.alias("p1"), pairs.alias("p2"), pairs.alias("p3")
     tri = (
         p1.join(p2, F.col("p2.id_a") == F.col("p1.id_b"))
@@ -1424,7 +1423,7 @@ def dup_graph_triangles(spark, sf_dir):
     )
     # the triangle list feeds THREE unionAll branches (one per corner);
     # unpersisted, the two-hop self-join executes three times
-    tri = similarity._persist_rotating("tri_tri", tri)
+    tri = stages.hold("tri_tri", tri)
     tn = (
         tri.select(F.col("a").alias("node"))
         .unionAll(tri.select(F.col("b").alias("node")))
@@ -1830,10 +1829,11 @@ def markov_stationary_power(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     tot = cnt.groupBy("src").agg(F.sum("n").alias("total"))
-    p = (
-        cnt.join(F.broadcast(tot), "src")
-        .select("src", "dst", (F.col("n").cast("double") / F.col("total")).alias("p"))
-        .persist()
+    p = stages.hold(
+        "markov_p",
+        cnt.join(F.broadcast(tot), "src").select(
+            "src", "dst", (F.col("n").cast("double") / F.col("total")).alias("p")
+        ),
     )
     k = p.agg(F.countDistinct("src").alias("k"))
     v = (

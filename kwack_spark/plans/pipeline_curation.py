@@ -11,9 +11,10 @@ import contextlib
 
 from pyspark.sql import functions as F
 
+from kwack_spark import stages
 from kwack_spark.functions import text as TX
 from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling, similarity
+from kwack_spark.operators import asof, dedup, sampling
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.plans.pipeline import (  # shared core
@@ -1153,7 +1154,7 @@ def _curation_text_funnel(spark, d):
     # persist the URL-survivor frame: the LSH base, the keep-best
     # anti-join, and the gate all read it — uncached, each materialization
     # re-runs the canon-URL regex + groupBy + join
-    s1 = similarity.stage_checkpoint("e2e_s1", d.join(keep1, "doc_id"))
+    s1 = stages.checkpoint("e2e_s1", d.join(keep1, "doc_id"))
     # --- stage 2: MinHash-LSH keep-best (longest per component) ---
     # pairs + over-cap star edges, so boilerplate clusters the hot-band
     # cap prunes from the pair join still resolve to one keeper
@@ -1173,7 +1174,7 @@ def _curation_text_funnel(spark, d):
     # semi-join; the decon grams AND the main branch; the mixture counts
     # AND the quota join) — persist them (rotating) or every consumer
     # re-executes the whole upstream funnel
-    s2 = similarity.stage_checkpoint(
+    s2 = stages.checkpoint(
         "e2e_s2", s1.join(drop2, "doc_id", "left_anti")
     )
     # --- stage 3: ensemble quality gate (shared operator body, applied to
@@ -1183,7 +1184,7 @@ def _curation_text_funnel(spark, d):
         .filter(F.col("keep"))
         .select("doc_id")
     )
-    return similarity.stage_checkpoint("e2e_s3", s2.join(gate, "doc_id"))
+    return stages.checkpoint("e2e_s3", s2.join(gate, "doc_id"))
 
 def _shard_manifest(survivors):
     """Order-independent shard manifest over a ``(doc_id, n_chars)``
@@ -1362,7 +1363,7 @@ def corpus_curation_e2e(spark, sf_dir):
         .filter(F.col("n_hits") >= 3)
         .select("doc_id")
     )
-    s4 = similarity.stage_checkpoint(
+    s4 = stages.checkpoint(
         "e2e_s4",
         s3.filter(F.col("doc_id") % 97 != 0)
         .join(contaminated, "doc_id", "left_anti")
@@ -1463,7 +1464,7 @@ def corpus_curation_multimodal(spark, sf_dir):
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     png = mm.synth_png_blocky(ids, "doc_id")
-    fps = similarity.stage_checkpoint(
+    fps = stages.checkpoint(
         "mm_cur_fps", mm.dhash64(png, "payload", "doc_id")
     )
     pairs4 = dedup.fingerprint_hamming_pairs(fps, "doc_id", max_hamming=3, blocks=4)
@@ -1561,7 +1562,7 @@ def corpus_curation_all_modalities(spark, sf_dir):
     # --- stage 4: image near-dup keep-min over the funnel survivors ---
     ids3 = s3.select("doc_id").repartition(par, "doc_id")
     png = mm.synth_png_blocky(ids3, "doc_id")
-    fpi = similarity.stage_checkpoint(
+    fpi = stages.checkpoint(
         "cur_all_img_fps", mm.dhash64(png, "payload", "doc_id")
     )
     drop4 = (
@@ -1569,13 +1570,13 @@ def corpus_curation_all_modalities(spark, sf_dir):
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
-    s4 = similarity.stage_checkpoint(
+    s4 = stages.checkpoint(
         "cur_all_s4", s3.join(drop4, "doc_id", "left_anti")
     )
     # --- stage 5: audio near-dup keep-min over the image survivors ---
     ids4 = s4.select("doc_id").repartition(par, "doc_id")
     wav = mm.synth_wav_am(ids4, "doc_id")
-    fpa = similarity.stage_checkpoint(
+    fpa = stages.checkpoint(
         "cur_all_aud_fps", mm.audio_fingerprint64(wav, "payload", "doc_id")
     )
     drop5 = (
@@ -1583,7 +1584,7 @@ def corpus_curation_all_modalities(spark, sf_dir):
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
-    s5 = similarity.stage_checkpoint(
+    s5 = stages.checkpoint(
         "cur_all_s5", s4.join(drop5, "doc_id", "left_anti")
     )
     # --- stage 6: video keyframe keep-min over the audio survivors ---
@@ -1814,7 +1815,7 @@ def corpus_curation_incremental(spark, sf_dir):
     # results, only job overlap changes
     def _build_url_index():
         spark.sparkContext.setJobDescription("cur_inc: history URL index")
-        return similarity.stage_checkpoint(
+        return stages.checkpoint(
             "cur_inc_urlidx",
             hist.select(
                 TX2.canonical_url(_url_raw_col()).alias("canon_url")
@@ -1840,7 +1841,7 @@ def corpus_curation_incremental(spark, sf_dir):
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id")
         )
-        s1 = similarity.stage_checkpoint(
+        s1 = stages.checkpoint(
             "cur_inc_s1", bat.join(keep1, "doc_id")
         )
         f_lsh.result()  # rotating caches warm; the probe plan-matches them
@@ -1850,7 +1851,7 @@ def corpus_curation_incremental(spark, sf_dir):
     dups = dedup.incremental_lsh_new_dups(
         hist, s1, "doc_id", "text", k=8, bands=2, threshold=0.5
     )
-    s2 = similarity.stage_checkpoint(
+    s2 = stages.checkpoint(
         "cur_inc_s2",
         s1.join(dups.select("doc_id").distinct(), "doc_id", "left_anti"),
     )
@@ -2006,7 +2007,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
 
     def _build_url_index():
         spark.sparkContext.setJobDescription("cim: history URL index")
-        return similarity.stage_checkpoint(
+        return stages.checkpoint(
             "cim_urlidx",
             hist.select(
                 TX2.canonical_url(_url_raw_col()).alias("canon_url")
@@ -2015,7 +2016,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
 
     def _build_img_index():
         spark.sparkContext.setJobDescription("cim: history image dHash index")
-        return similarity.stage_checkpoint(
+        return stages.checkpoint(
             "cim_imgidx",
             mm.dhash64(
                 mm.synth_png_blocky(
@@ -2031,7 +2032,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
 
     def _build_aud_index():
         spark.sparkContext.setJobDescription("cim: history audio fp index")
-        return similarity.stage_checkpoint(
+        return stages.checkpoint(
             "cim_audidx",
             mm.audio_fingerprint64(
                 mm.synth_wav_am(
@@ -2047,7 +2048,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
 
     def _build_vid_index():
         spark.sparkContext.setJobDescription("cim: history keyframe index")
-        return similarity.stage_checkpoint(
+        return stages.checkpoint(
             "cim_vididx",
             _video_keyframes_from(hist.filter(has_vid).select("doc_id")).select(
                 "doc_id", "frame_md5"
@@ -2076,7 +2077,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id")
         )
-        s1 = similarity.stage_checkpoint("cim_s1", bat.join(keep1, "doc_id"))
+        s1 = stages.checkpoint("cim_s1", bat.join(keep1, "doc_id"))
         # --- stage 2: near-dup-of-history rejection (LSH index probe) ---
         f_lsh.result()  # rotating caches warm; the probe plan-matches them
         img_hist, aud_hist, kf_hist = (
@@ -2089,7 +2090,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
     dups = dedup.incremental_lsh_new_dups(
         hist, s1, "doc_id", "text", k=8, bands=2, threshold=0.5
     )
-    s2 = similarity.stage_checkpoint(
+    s2 = stages.checkpoint(
         "cim_s2",
         s1.join(dups.select("doc_id").distinct(), "doc_id", "left_anti"),
     )
@@ -2099,7 +2100,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
         .filter(F.col("keep"))
         .select("doc_id")
     )
-    s3 = similarity.stage_checkpoint(
+    s3 = stages.checkpoint(
         "cim_s3", s2.join(gate, "doc_id").select("doc_id", "n_chars")
     )
     # --- stage 4: image admission (persisted dHash index probe) ---
@@ -2114,7 +2115,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
     drop4 = dedup.fingerprint_hamming_probe(
         img_hist, img_bat, "doc_id", max_hamming=3, blocks=4
     ).select("doc_id").distinct()
-    s4 = similarity.stage_checkpoint(
+    s4 = stages.checkpoint(
         "cim_s4", s3.join(drop4, "doc_id", "left_anti")
     )
     # --- stage 5: audio admission (persisted energy-fp index probe) ---
@@ -2129,7 +2130,7 @@ def corpus_curation_incremental_multimodal(spark, sf_dir):
     drop5 = dedup.fingerprint_hamming_probe(
         aud_hist, aud_bat, "doc_id", max_hamming=3, blocks=4
     ).select("doc_id").distinct()
-    s5 = similarity.stage_checkpoint(
+    s5 = stages.checkpoint(
         "cim_s5", s4.join(drop5, "doc_id", "left_anti")
     )
     # --- stage 6: video admission (persisted keyframe index probe) ---

@@ -11,6 +11,7 @@ import contextlib
 
 from pyspark.sql import functions as F
 
+from kwack_spark import stages
 from kwack_spark.functions import text as TX
 from kwack_spark.functions import vectors as V
 from kwack_spark.operators import asof, dedup, sampling, similarity
@@ -839,13 +840,14 @@ def dedup_lsh_edit_verify(spark, sf_dir):
     similarity on the 200-char normalized prefix.  Set-based Jaccard misses
     transpositions and small in-place edits that edit distance catches; the
     prefix cap keeps the quadratic DP bounded regardless of document size."""
-    from pyspark import StorageLevel
-
     d = T(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        F.array_distinct(TX.shingles(TX.tokens("text"), 3)).alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    base = stages.hold(
+        "lsh_edit_base",
+        d.select(
+            "doc_id",
+            F.array_distinct(TX.shingles(TX.tokens("text"), 3)).alias("sh"),
+        ),
+    )
     keys = dedup.lsh_band_keys(base, "doc_id", k=8, bands=2)
     a, b = keys.alias("a"), keys.alias("b")
     cand = (
@@ -1316,18 +1318,19 @@ def minhash_band_calibration(spark, sf_dir):
     the slice-equality flags removes the per-config explode, the second
     distinct, and the cand-to-jaccard rejoin — output bit-identical (the
     oracle is unchanged)."""
-    from pyspark import StorageLevel
-
     from kwack_spark.operators.scale import widen_if_narrow
 
     d = T(spark, sf_dir, "documents")
     # widen first: the shingle + md5 signature stage is per-row expensive
     # and a bench-scale scan is one split (no-op at scale) — same policy
     # as _lsh_base
-    shingle_sets = widen_if_narrow(d).select(
-        "doc_id",
-        F.array_distinct(TX.shingles(TX.tokens("text"), 3)).alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    shingle_sets = stages.hold(
+        "band_calib_sets",
+        widen_if_narrow(d).select(
+            "doc_id",
+            F.array_distinct(TX.shingles(TX.tokens("text"), 3)).alias("sh"),
+        ),
+    )
     # signatures via explode + groupBy-min, DELIBERATELY not the narrow
     # _minhash_sig_frame form: measured A/B at sf0.1 (4 alternating reps),
     # the narrow frame's larger size estimate flips the downstream
@@ -1342,9 +1345,10 @@ def minhash_band_calibration(spark, sf_dir):
             F.substring(F.md5(F.concat(F.lit(f"{seed}:"), F.col("s"))), off, 8)
         ).alias(f"mh{i}")
 
-    sigs = exploded_sh.groupBy("doc_id").agg(
-        *[_member(i) for i in range(8)]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = stages.hold(
+        "band_calib_sigs",
+        exploded_sh.groupBy("doc_id").agg(*[_member(i) for i in range(8)]),
+    )
 
     # finest-config band rows: (slice position j, slice value) — carrying
     # the full signature through the self-join so per-config collision
@@ -1608,10 +1612,9 @@ def dedup_shingle_size_sensitivity(spark, sf_dir):
     ran once per width before; shingling, signatures and verify joins are
     width-specific and still independent."""
     from kwack_spark.operators.scale import widen_if_narrow
-    from kwack_spark.operators.similarity import _persist_rotating
 
     d = T(spark, sf_dir, "documents")
-    toks = _persist_rotating(
+    toks = stages.hold(
         "shingle_sweep_toks",
         widen_if_narrow(d).select("doc_id", TX.tokens("text").alias("tk")),
     )
@@ -1936,7 +1939,7 @@ def dedup_incremental_simhash64(spark, sf_dir):
         F.md5(F.concat(F.lit("isim:"), F.col("doc_id").cast("string"))), 1, 4
     )
     # rotating persist (r07 ADVICE #2): one cached history index per family
-    hist_fps = similarity._persist_rotating(
+    hist_fps = stages.hold(
         "isim64_hist_fps",
         dedup.simhash64_fingerprints(d.filter(split >= "3334"), "doc_id", "text"),
     )
@@ -2195,13 +2198,14 @@ def minhash_estimate_error(spark, sf_dir):
     """MinHash estimator error by match count.  100-TB shape: candidates
     are the already-blocked pair set; signatures and shingle sets join on
     the id key; output is <=9 rows (one per possible match count)."""
-    from pyspark import StorageLevel
-
     d = T(spark, sf_dir, "documents")
-    shingle_sets = d.select(
-        "doc_id",
-        F.array_distinct(TX.shingles(TX.tokens("text"), 3)).alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    shingle_sets = stages.hold(
+        "mh_err_sets",
+        d.select(
+            "doc_id",
+            F.array_distinct(TX.shingles(TX.tokens("text"), 3)).alias("sh"),
+        ),
+    )
     exploded = dedup.lsh_band_keys(shingle_sets, "doc_id", k=8, bands=2)
     a = exploded.alias("a")
     b = exploded.alias("b")

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from kwack_spark.functions import text as TX
 from kwack_spark.functions import vectors as V
 from kwack_spark.operators import asof, dedup, sampling, similarity
-from kwack_spark import scratch
+from kwack_spark import scratch, stages
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.plans.pipeline import (  # shared core
@@ -591,12 +591,12 @@ def mmr_diverse_topk(spark, sf_dir):
             "vec_id", "v", V.cosine(F.col("v"), F.col("qv")).alias("rel")
         )
     )
-    pool = similarity._persist_rotating(
+    pool = stages.hold(
         "mmr_pool", rel.orderBy(F.desc("rel"), "vec_id").limit(pool_n)
     )
     a = pool.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
     b = pool.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    sims = similarity._persist_rotating(
+    sims = stages.hold(
         "mmr_sims",
         a.join(b, F.col("ia") != F.col("ib")).select(
             "ia", "ib", V.cosine(F.col("va"), F.col("vb")).alias("cos")
@@ -714,7 +714,7 @@ def embedding_matryoshka_recall(spark, sf_dir):
         )
     )
     wex = Window.partitionBy("query_id").orderBy(F.desc("cos"), "corpus_id")
-    ex = similarity._persist_rotating(
+    ex = stages.hold(
         "mrl_exact",
         ex_pairs.select(
             "query_id", "corpus_id", F.row_number().over(wex).alias("rnk")
@@ -1880,7 +1880,7 @@ def jl_projection_recall(spark, sf_dir):
         return F.array(*[V.dot(vec, plane_comp(p)) for p in _JL_PLANES])
 
     proj = v.select("vec_id", jl(F.col("v")).alias("y"))
-    proj = similarity._persist_rotating("jl_proj", proj)
+    proj = stages.hold("jl_proj", proj)
     q_ids = v.orderBy("vec_id").limit(8).select(
         F.col("vec_id").alias("query_id")
     )
@@ -2081,7 +2081,7 @@ def ann_probe_recall_curve(spark, sf_dir):
     # the assigned index feeds BOTH the candidate stage (collect on the
     # BLAS path / join on the fallback) and the exact re-score join —
     # without the persist the full assign pipeline re-executes per consumer
-    assigned = similarity._persist_rotating("probe_curve_assigned", assigned)
+    assigned = stages.hold("probe_curve_assigned", assigned)
     q = e.select(
         F.col("vec_id").alias("query_id"), V.as_double("embedding").alias("qv")
     ).withColumn("nqv", V.norm(F.col("qv")))
@@ -2228,7 +2228,7 @@ def ann_probe_recall_curve(spark, sf_dir):
     # the exact truth set feeds BOTH the per-config match count and the
     # 1-row total; without the persist the brute-force scan runs twice.
     # Rotating persist (r07 ADVICE #2): released on the next call.
-    bf = similarity._persist_rotating(
+    bf = stages.hold(
         "probe_curve_bf",
         _Q["ann_brute_force_topk"].fn(spark, sf_dir).select("query_id", "corpus_id"),
     )
@@ -2424,7 +2424,7 @@ def jl_recall_vs_dim_curve(spark, sf_dir):
     proj = v.select(
         "vec_id", F.array(*[V.dot(F.col("v"), plane_comp(p)) for p in _JL_PLANES]).alias("y")
     )
-    proj = similarity._persist_rotating("jl_curve_proj", proj)
+    proj = stages.hold("jl_curve_proj", proj)
     q_ids = v.orderBy("vec_id").limit(8).select(F.col("vec_id").alias("query_id"))
 
     ex_pairs = (
@@ -2436,7 +2436,7 @@ def jl_recall_vs_dim_curve(spark, sf_dir):
     wex = Window.partitionBy("query_id").orderBy(F.desc("cos"), "corpus_id")
     # persisted: the 40-row exact top-5 feeds both the recall join and the
     # 1-row total — without it the 8xN exact-cosine scan runs twice
-    ex = similarity._persist_rotating(
+    ex = stages.hold(
         "jl_curve_exact",
         ex_pairs.select(
             "query_id", "corpus_id", F.row_number().over(wex).alias("rnk")
@@ -2510,7 +2510,7 @@ def ann_reciprocal_rate(spark, sf_dir):
     query (k-bounded, never corpus-sized); the reversal join is an
     equi-join on the pair key against itself."""
     bf = _Q["ann_brute_force_topk"].fn(spark, sf_dir).select("query_id", "corpus_id")
-    bf = similarity._persist_rotating("recip_bf", bf)
+    bf = stages.hold("recip_bf", bf)
     rev = bf.select(
         F.col("corpus_id").alias("query_id"), F.col("query_id").alias("corpus_id")
     )
@@ -2979,7 +2979,7 @@ def knn_mutual_components(spark, sf_dir):
     from kwack_spark.operators import graph
 
     e = T(spark, sf_dir, "embeddings")
-    topk = similarity._persist_rotating(
+    topk = stages.hold(
         "knn_mutual_topk",
         similarity.brute_force_topk_vectorized(
             e, e, "vec_id", "embedding", k=3

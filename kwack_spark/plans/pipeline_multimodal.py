@@ -11,9 +11,10 @@ import contextlib
 
 from pyspark.sql import functions as F
 
+from kwack_spark import stages
 from kwack_spark.functions import text as TX
 from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling, similarity
+from kwack_spark.operators import asof, dedup, sampling
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.plans.pipeline import (  # shared core
@@ -270,7 +271,7 @@ def multimodal_phash_dedup(spark, sf_dir):
     # persist the 8-byte/image fingerprint index (rotating): both sides of
     # the slice self-join read it — without this the synth+decode kernel
     # would run once per join side
-    fps = similarity._persist_rotating(
+    fps = stages.hold(
         "phash_fps", mm.dhash64(png, "payload", "doc_id")
     )
     return dedup.fingerprint_hamming_pairs(fps, "doc_id", max_hamming=3, blocks=4)
@@ -321,7 +322,7 @@ def multimodal_audio_fingerprint_dedup(spark, sf_dir):
     # bench scale; no-op where the scan has real splits)
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     wav = mm.synth_wav_am(d, "doc_id")
-    fps = similarity._persist_rotating(
+    fps = stages.hold(
         "audio_fp_fps", mm.audio_fingerprint64(wav, "payload", "doc_id")
     )
     return dedup.fingerprint_hamming_pairs(fps, "doc_id", max_hamming=3, blocks=4)
@@ -493,7 +494,7 @@ def multimodal_video_dhash_dedup(spark, sf_dir):
         ),
         "fp",
     )
-    fps = similarity._persist_rotating("video_dhash_fps", kfid)
+    fps = stages.hold("video_dhash_fps", kfid)
     pairs = dedup.fingerprint_hamming_pairs(fps, "kfid", max_hamming=3, blocks=4)
     return (
         pairs.select(
@@ -563,7 +564,7 @@ def multimodal_avi_keyframe_dedup(spark, sf_dir):
         ),
         "fp",
     )
-    fps = similarity._persist_rotating("avi_dhash_fps", kfid)
+    fps = stages.hold("avi_dhash_fps", kfid)
     pairs = dedup.fingerprint_hamming_pairs(fps, "kfid", max_hamming=3, blocks=4)
     return (
         pairs.select(
@@ -638,7 +639,7 @@ def multimodal_avi_incremental(spark, sf_dir):
             "fp",
         )
 
-    hist = similarity._persist_rotating("avi_inc_hist", kfids(d.filter(v < 2)))
+    hist = stages.hold("avi_inc_hist", kfids(d.filter(v < 2)))
     batch = kfids(d.filter(v >= 2))
     probes = dedup.fingerprint_hamming_probe(
         hist, batch, "kfid", max_hamming=3, blocks=4
@@ -692,7 +693,7 @@ def multimodal_audio_incremental(spark, sf_dir):
 
     d = T(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    hist = similarity._persist_rotating(
+    hist = stages.hold(
         "audio_inc_hist",
         mm.audio_fingerprint64(
             mm.synth_wav_am(
@@ -749,7 +750,7 @@ def multimodal_image_incremental(spark, sf_dir):
 
     d = T(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    hist = similarity._persist_rotating(
+    hist = stages.hold(
         "image_inc_hist",
         mm.dhash64(
             mm.synth_png_blocky(
@@ -806,7 +807,7 @@ def multimodal_video_incremental(spark, sf_dir):
     match strength exactly as the batch join's."""
     kf = _video_keyframes(spark, sf_dir).select("doc_id", "frame_md5")
     v = (F.col("doc_id") / 64).cast("long") % 4
-    hist = similarity._persist_rotating("video_inc_hist", kf.filter(v < 2))
+    hist = stages.hold("video_inc_hist", kf.filter(v < 2))
     batch = kf.filter(v >= 2)
     probes = dedup.key_collision_probe(
         hist, batch, "frame_md5", "doc_id", max_key_df=4096

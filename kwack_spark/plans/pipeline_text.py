@@ -11,9 +11,10 @@ import contextlib
 
 from pyspark.sql import functions as F
 
+from kwack_spark import stages
 from kwack_spark.functions import text as TX
 from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling, similarity
+from kwack_spark.operators import asof, dedup, sampling
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.plans.pipeline import (  # shared core
@@ -1358,15 +1359,18 @@ def textrank_keywords(spark, sf_dir):
         .select("pr.w1", "pr.w2")
         .filter(F.col("w1") != F.col("w2"))
     )
-    edges = (
+    edges = stages.hold(
+        "textrank_edges",
         prs.select(F.col("w1").alias("src"), F.col("w2").alias("dst"))
         .union(prs.select(F.col("w2").alias("src"), F.col("w1").alias("dst")))
-        .distinct()
-        .persist()
+        .distinct(),
     )
-    deg = edges.groupBy(F.col("src").alias("token")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).persist()
+    deg = stages.hold(
+        "textrank_deg",
+        edges.groupBy(F.col("src").alias("token")).agg(
+            F.count(F.lit(1)).alias("deg")
+        ),
+    )
     n = deg.agg(F.count(F.lit(1)).alias("nt"))
     p = deg.crossJoin(F.broadcast(n)).select(
         "token", (F.lit(1.0) / F.col("nt")).alias("p")
@@ -1539,7 +1543,7 @@ def bpe_merge_training_5steps(spark, sf_dir):
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    state = similarity._persist_rotating(
+    state = stages.hold(
         "bpe_state0",
         wf.select(
             F.concat(
@@ -1633,7 +1637,7 @@ def bpe_apply_merges(spark, sf_dir):
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    state = similarity._persist_rotating(
+    state = stages.hold(
         "bpe_apply_state0",
         wf.select(
             "w",
@@ -1982,7 +1986,7 @@ def tfidf_cosine_topk(spark, sf_dir):
     # the posting table feeds three subtrees (both sides of the pair join
     # + the norms) — persist it once or the tokenize+tf+df pipeline runs
     # 3x (the minhash_lsh_pairs shingle-set discipline)
-    w = similarity._persist_rotating("tfidf_cos_w", w)
+    w = stages.hold("tfidf_cos_w", w)
     n2 = w.groupBy("doc_id").agg(
         F.sum((F.col("w") * F.col("w")).cast("decimal(38,12)"))
         .cast("double")

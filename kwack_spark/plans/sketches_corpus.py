@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kwack_spark import stages
 from kwack_spark.functions import text as TX
 from kwack_spark.operators import scale
 from kwack_spark.plans.pipeline import drain_to_table, replay
@@ -999,14 +1000,12 @@ def sketch_quantile_lengths(spark, sf_dir):
     pure function) and full-outer-diffs the register sets — 0 mismatches
     is part of the graded output, so a broken merge fails correctness,
     not just a unit test."""
-    from kwack_spark.operators.similarity import _persist_rotating
-
     d = T(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars")
     n = d.count()  # 1-row scalar action; parquet metadata at scan time
     kw = dict(k=64, by=("lang",), seed="kllq", n_hint=n)
     # the full sketch feeds the quantile AND the invariance diff — persist
     # (rotating) or the scan + top-k runs once per consumer
-    full = _persist_rotating(
+    full = stages.hold(
         "kll_full", scale.kll_sketch(d, "doc_id", "n_chars", **kw)
     )
     h0 = scale.kll_sketch(
@@ -1097,11 +1096,9 @@ def length_trim_sketch_gated(spark, sf_dir):
     top-64 shuffles ~8k prefilter survivors, the two quantiles per
     language broadcast back onto one corpus pass with a per-lang rollup —
     the exact-sort percentile trim's semantics at constant sketch cost."""
-    from kwack_spark.operators.similarity import _persist_rotating
-
     d = T(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars")
     n = d.count()  # 1-row scalar action; parquet metadata at scan time
-    full = _persist_rotating(
+    full = stages.hold(
         "kll_trim",
         scale.kll_sketch(
             d, "doc_id", "n_chars", k=64, by=("lang",), seed="kllt", n_hint=n
@@ -1209,11 +1206,10 @@ def quality_perceptron_step(spark, sf_dir):
         .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    from kwack_spark.operators.similarity import _persist_rotating
 
     # both the margin pass and the gradient pass read the (doc, bucket)
     # counts — persist (rotating) so the tokenize/bucket scan runs once
-    cnts = _persist_rotating("perceptron_cnts", cnts)
+    cnts = stages.hold("perceptron_cnts", cnts)
     lab = d.select(
         "doc_id", F.when(F.col("lang") == "en", 1).otherwise(-1).alias("y")
     )
@@ -1289,7 +1285,6 @@ def _paras_df(spark, sf_dir):
     of _PARA_SQL, persisted rotating (history bits + batch probe + exact
     audit all read it)."""
     from kwack_spark.operators.scale import widen_if_narrow
-    from kwack_spark.operators.similarity import _persist_rotating
 
     d = widen_if_narrow(T(spark, sf_dir, "documents").select("doc_id", "text"))
     toks = d.select("doc_id", TX.tokens("text").alias("tk")).where(
@@ -1302,7 +1297,7 @@ def _paras_df(spark, sf_dir):
             F.sequence(F.lit(0), F.size("tk") - 1, F.lit(20))
         ).alias("para_id", "start"),
     )
-    return _persist_rotating(
+    return stages.hold(
         "bff_paras",
         s.select(
             "doc_id",

@@ -2,6 +2,7 @@
 (KwackConfig.java:527-612 grammar, KwackMain.java:49-138 options)."""
 
 import json
+from pathlib import Path
 
 import pytest
 
@@ -388,7 +389,7 @@ def test_cli_end_to_end_json_lines():
             "-q", "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
         ],
         capture_output=True, text=True, timeout=300,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parent.parent,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     rows = [_json.loads(line) for line in proc.stdout.strip().splitlines() if line.startswith("{")]

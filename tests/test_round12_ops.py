@@ -248,24 +248,24 @@ def test_scratch_schemeless_path_resolves_through_hadoop_fs(spark):
 
 
 def test_stage_checkpoint_rotates_and_preserves_rows(spark):
-    """stage_checkpoint truncates lineage (LogicalRDD leaf), preserves the
+    """stages.checkpoint truncates lineage (LogicalRDD leaf), preserves the
     rows exactly, reuses the held checkpoint for a sameResult plan, and
     rotates (unpersists) the previous checkpoint when the plan changes."""
-    from kwack_spark.operators import similarity
+    from kwack_spark import stages
 
     src = spark.range(10).withColumn("v", F.col("id") * 2)
-    a = similarity.stage_checkpoint("t_ckpt_test", src)
+    a = stages.checkpoint("t_ckpt_test", src)
     assert [r.v for r in a.orderBy("id").collect()] == [i * 2 for i in range(10)]
     # lineage truncated: the analyzed plan is a scan of a materialized RDD
     assert "LogicalRDD" in a._jdf.queryExecution().analyzed().toString()
     # same logical plan -> the held checkpoint is returned, no re-materialize
-    b = similarity.stage_checkpoint(
+    b = stages.checkpoint(
         "t_ckpt_test", spark.range(10).withColumn("v", F.col("id") * 2)
     )
     assert b is a
     # new plan under the same tag rotates: old blocks released, new rows served
-    c = similarity.stage_checkpoint("t_ckpt_test", spark.range(3))
+    c = stages.checkpoint("t_ckpt_test", spark.range(3))
     assert c is not a and c.count() == 3
-    assert not similarity._ckpt_alive(a)
-    with similarity._ACTIVE_CACHE_LOCK:
-        del similarity._STAGE_CKPT[spark]["t_ckpt_test"]
+    assert not stages._resident("checkpoint", a)
+    with stages._LOCK:
+        del stages._HELD[spark][("checkpoint", "t_ckpt_test")]

@@ -345,18 +345,18 @@ def test_brute_force_string_labels(spark):
 
 
 def test_persist_rotating_is_per_session(spark):
-    """The rotation cache is keyed by SparkSession and rotates within a
-    tag: a second persist under the same tag releases the first."""
-    from kwack_spark.operators.similarity import _ACTIVE_CACHE, _persist_rotating
+    """The stage holder is keyed by SparkSession and rotates within a
+    tag: a second ``stages.hold`` under the same tag releases the first."""
+    from kwack_spark import stages
 
-    a = _persist_rotating("t_test", spark.range(3))
-    assert _ACTIVE_CACHE[spark]["t_test"] is a
-    b = _persist_rotating("t_test", spark.range(4))
-    assert _ACTIVE_CACHE[spark]["t_test"] is b
+    a = stages.hold("t_test", spark.range(3))
+    assert stages._HELD[spark][("hold", "t_test")][1] is a
+    b = stages.hold("t_test", spark.range(4))
+    assert stages._HELD[spark][("hold", "t_test")][1] is b
     assert a.storageLevel.useMemory is False  # rotated out -> unpersisted
     assert b.count() == 4
     b.unpersist(False)
-    del _ACTIVE_CACHE[spark]["t_test"]
+    del stages._HELD[spark][("hold", "t_test")]
 
 
 def test_pq_topk_distributed_branch_matches_broadcast(spark):

@@ -1,18 +1,18 @@
 """Round-9 operator pins.
 
-- _persist_rotating eviction reorder: after an EXTERNAL cache eviction
+- stages.hold eviction reorder: after an EXTERNAL cache eviction
   (spark.catalog.clearCache(), as tools/scale_stress.py does between
   reps), re-rotating the SAME plan must leave the returned frame
   cached.  The r08 ordering (persist new, then unpersist prev) destroyed
   the fresh entry because Spark's CacheManager uncaches by plan equality
   — the SimHash64 family then ran cacheless (2.3 s/rep -> 8.3 s/rep).
-- _persist_rotating exception path: a probe failure must never leave the
+- stages.hold exception path: a probe failure must never leave the
   returned frame uncached (ADVICE r08 item 3).
 """
 
 from pyspark.sql import functions as F
 
-from kwack_spark.operators.similarity import _ACTIVE_CACHE, _persist_rotating
+from kwack_spark import stages
 
 
 def test_persist_rotating_survives_external_eviction(spark):
@@ -20,7 +20,7 @@ def test_persist_rotating_survives_external_eviction(spark):
     returned frame must be cached (storageLevel.useMemory), not destroyed
     by the displaced frame's unpersist."""
     plan = spark.range(100).withColumn("x", F.col("id") * 2)
-    a = _persist_rotating("t_evict", plan)
+    a = stages.hold("t_evict", plan)
     assert a.count() == 100
     assert a.storageLevel.useMemory
 
@@ -29,41 +29,41 @@ def test_persist_rotating_survives_external_eviction(spark):
 
     # same logical plan, new DataFrame object — exactly a bench re-run
     plan2 = spark.range(100).withColumn("x", F.col("id") * 2)
-    b = _persist_rotating("t_evict", plan2)
+    b = stages.hold("t_evict", plan2)
     assert b.count() == 100
     assert b.storageLevel.useMemory, (
         "re-persisted same-plan frame was evicted by prev.unpersist — "
         "unpersist must run BEFORE persist"
     )
     b.unpersist(False)
-    del _ACTIVE_CACHE[spark]["t_evict"]
+    del stages._HELD[spark][("hold", "t_evict")]
 
 
 def test_persist_rotating_reuses_live_cache(spark):
     """Without an eviction, rotating the same plan returns the HELD frame
     (cache reuse), not a new persist."""
     plan = spark.range(50).withColumn("y", F.col("id") + 1)
-    a = _persist_rotating("t_reuse", plan)
+    a = stages.hold("t_reuse", plan)
     a.count()
-    b = _persist_rotating(
+    b = stages.hold(
         "t_reuse", spark.range(50).withColumn("y", F.col("id") + 1)
     )
     assert b is a
     a.unpersist(False)
-    del _ACTIVE_CACHE[spark]["t_reuse"]
+    del stages._HELD[spark][("hold", "t_reuse")]
 
 
 def test_persist_rotating_rotates_distinct_plans(spark):
     """A genuinely different plan under the same tag displaces and
     unpersists the old frame and caches the new one."""
-    a = _persist_rotating("t_rot", spark.range(3))
+    a = stages.hold("t_rot", spark.range(3))
     a.count()
-    b = _persist_rotating("t_rot", spark.range(7))
+    b = stages.hold("t_rot", spark.range(7))
     assert b.count() == 7
     assert not a.storageLevel.useMemory  # rotated out
     assert b.storageLevel.useMemory
     b.unpersist(False)
-    del _ACTIVE_CACHE[spark]["t_rot"]
+    del stages._HELD[spark][("hold", "t_rot")]
 
 
 # --- KLL mergeable quantile sketch --------------------------------------------

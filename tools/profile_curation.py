@@ -1,6 +1,6 @@
 """Stage-level wall-clock profile of the two big curation DAGs.
 
-Monkey-patches similarity.stage_checkpoint to time each eager stage
+Monkey-patches stages.checkpoint to time each eager stage
 materialization, then times the final action — so the 19-20 s wall of
 corpus_curation_all_modalities / corpus_curation_incremental_multimodal
 decomposes into named stages.  Measurement-only; nothing here changes
@@ -22,7 +22,7 @@ def main() -> None:
     names = sys.argv[1:]
     from pyspark.sql import functions as F
 
-    from kwack_spark.operators import similarity
+    from kwack_spark import stages
     from kwack_spark.plans.registry import query_map
     from kwack_spark.session import get_session
     from kwack_spark.sources.parquet import load_table
@@ -40,7 +40,7 @@ def main() -> None:
         lambda it: it, "id long"
     ).write.mode("overwrite").format("noop").save()
 
-    orig = similarity.stage_checkpoint
+    orig = stages.checkpoint
     timings: list[tuple[str, float]] = []
 
     def timed(tag, df):
@@ -49,7 +49,7 @@ def main() -> None:
         timings.append((tag, time.perf_counter() - t))
         return out
 
-    similarity.stage_checkpoint = timed
+    stages.checkpoint = timed
     try:
         for name in names:
             for rep in range(2):
@@ -73,7 +73,7 @@ def main() -> None:
                         except Exception:
                             pass
     finally:
-        similarity.stage_checkpoint = orig
+        stages.checkpoint = orig
     spark.stop()
 
 
