@@ -18,6 +18,14 @@ from kwack_spark.config import DEFAULT_ROW_ATTRIBUTES, KwackConfig
 from kwack_spark.engine import KwackSpark
 
 
+def _topic_item(item: str) -> tuple[str, str]:
+    """The one parser of the ``topic=value`` flags (-v, -k, -p)."""
+    topic, sep, value = item.partition("=")
+    if not sep or not topic.strip():
+        raise argparse.ArgumentTypeError(f"expected topic=<value>, got {item!r}")
+    return topic.strip(), value
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="kwack-spark",
@@ -25,15 +33,18 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("-t", "--topic", action="append", default=[], help="topic(s) to consume")
     p.add_argument(
-        "-p", "--partition", action="append", default=[],
+        "-p", "--partition", action="append", default=[], type=_topic_item,
         help="topic partitions to consume (topic=0,1,...)",
     )
     p.add_argument("-b", "--bootstrap-server", help="Kafka bootstrap servers")
     p.add_argument(
-        "-v", "--value-serde", action="append", default=[],
+        "-v", "--value-serde", action="append", default=[], type=_topic_item,
         help="topic=serde (primitives | json | latest | <id> | avro:<schema|@file> | proto:...;msg:M | json:...;tag:a->b)",
     )
-    p.add_argument("-k", "--key-serde", action="append", default=[], help="topic=serde for keys")
+    p.add_argument(
+        "-k", "--key-serde", action="append", default=[], type=_topic_item,
+        help="topic=serde for keys",
+    )
     p.add_argument(
         "-o", "--offset", default="beginning",
         help="start offset: beginning|end|<abs>|-<rel>|@<ts ms>",
@@ -126,17 +137,10 @@ def config_from_args(args: argparse.Namespace) -> KwackConfig:
         cfg.kafka_bootstrap = args.bootstrap_server
     if args.topic:
         cfg.topics = list(dict.fromkeys(cfg.topics + args.topic))
-    for item in args.value_serde:
-        topic, _, s = item.partition("=")
-        cfg.topic_serdes[topic.strip()] = s
-    for item in args.key_serde:
-        topic, _, s = item.partition("=")
-        cfg.key_serdes[topic.strip()] = s
-    for item in args.partition:
-        topic, _, ps = item.partition("=")
-        cfg.topic_partitions[topic.strip()] = [
-            int(p) for p in ps.split(",") if p.strip()
-        ]
+    cfg.topic_serdes.update(args.value_serde)
+    cfg.key_serdes.update(args.key_serde)
+    for topic, ps in args.partition:
+        cfg.topic_partitions[topic] = [int(p) for p in ps.split(",") if p.strip()]
     cfg.starting_offset = args.offset
     if args.schema_registry_url:
         cfg.registry_url = args.schema_registry_url

@@ -79,19 +79,6 @@ def parse_serde(spec: str) -> Serde:
     return Serde(kind=kind, schema_str=schema, message=message, tag=tag)
 
 
-def parse_topic_serdes(specs: list[str] | dict[str, str]) -> dict[str, Serde]:
-    """['topic=serde', ...] or {topic: serde} -> {topic: Serde}."""
-    if isinstance(specs, dict):
-        return {t: parse_serde(s) for t, s in specs.items()}
-    out: dict[str, Serde] = {}
-    for item in specs:
-        topic, sep, s = item.partition("=")
-        if not sep:
-            raise ValueError(f"expected topic=serde, got: {item!r}")
-        out[topic.strip()] = parse_serde(s)
-    return out
-
-
 @dataclass(frozen=True)
 class OffsetSpec:
     """Parsed offset spec; the mapping to Spark Kafka source options lives

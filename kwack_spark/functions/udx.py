@@ -17,7 +17,6 @@ can verify them bit-for-bit.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
 

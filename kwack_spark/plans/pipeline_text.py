@@ -7,14 +7,11 @@ module at the bottom.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import functions as F
 
 from kwack_spark import stages
 from kwack_spark.functions import text as TX
-from kwack_spark.functions import vectors as V
-from kwack_spark.operators import asof, dedup, sampling
+from kwack_spark.operators import dedup
 from kwack_spark.plans.registry import register
 from kwack_spark.plans.relational import T
 from kwack_spark.plans.pipeline import (  # shared core

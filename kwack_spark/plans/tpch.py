@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kwack_spark.plans.registry import register
-from kwack_spark.plans.relational import T, _dsum, davg, dec, dsum
+from kwack_spark.plans.relational import T, _dsum, dec
 
 # exact revenue term used across the suite (matches q3/q5 in relational.py)
 _REV_SQL = """CAST(l_extendedprice AS DECIMAL(12,2))

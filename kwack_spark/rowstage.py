@@ -4,12 +4,61 @@ Every per-row Python kernel in kwack_spark (the Kafka decode in
 ``sources/kafka.py`` and the media kernels in ``operators/multimodal.py``)
 runs through ``per_row``: one narrow ``mapInArrow`` pass.  pyarrow is
 imported inside the stage, never at module import.
+
+Each Python task starts with ``importlib.invalidate_caches()`` (pyspark's
+``worker_util.setup_spark_files``), and on Python 3.11 every
+``zipimporter`` in ``sys.path_importer_cache`` then re-reads its archive's
+whole central directory: ~16 importers over ``pyspark.zip`` cost a reused
+worker over 100 ms of CPU per task.  The first ``per_row`` task in a worker
+installs ``_guard_zip_rereads``, after which an importer re-reads only when
+its archive's ``(st_ino, st_size, st_mtime_ns)`` differs from what that
+importer last read.  That keeps ``invalidate_caches``' contract: the zips on
+``sys.path`` do not change while a worker lives, one rewritten in place
+(a ``--py-files`` zip) has a new stat and is still re-read, and a newly
+added path gets a new importer.  ``FileFinder`` and Spark are untouched.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import types as ST
+
+# zipimporter.invalidate_caches as shipped; set once per process by the guard
+_zip_reread = None
+
+
+def _zip_stat(archive):
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _zip_invalidate_if_changed(self):
+    """``zipimporter.invalidate_caches`` that skips an unchanged archive."""
+    st = _zip_stat(self.archive)
+    if st is None or st != getattr(self, "_kwack_zip_stat", None):
+        _zip_reread(self)
+        self._kwack_zip_stat = st
+
+
+def _guard_zip_rereads():
+    """Install ``_zip_invalidate_if_changed`` once per process and stamp the
+    cached zip importers, which this task's set-up has just re-read."""
+    global _zip_reread
+    if _zip_reread is not None:
+        return
+    import zipimport
+
+    _zip_reread = zipimport.zipimporter.invalidate_caches
+    zipimport.zipimporter.invalidate_caches = _zip_invalidate_if_changed
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, zipimport.zipimporter):
+            imp._kwack_zip_stat = _zip_stat(imp.archive)
 
 
 def per_row(df: DataFrame, in_cols, row_fn, out_schema: ST.StructType) -> DataFrame:
@@ -31,6 +80,7 @@ def per_row(df: DataFrame, in_cols, row_fn, out_schema: ST.StructType) -> DataFr
     schema = to_arrow_schema(out_schema)
 
     def stage(batches):
+        _guard_zip_rereads()
         import pyarrow as pa
 
         for batch in batches:

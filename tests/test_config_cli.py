@@ -7,7 +7,7 @@ from pathlib import Path
 import pytest
 
 from kwack_spark.cli import build_parser, config_from_args
-from kwack_spark.config import KwackConfig, parse_offset, parse_serde, parse_topic_serdes
+from kwack_spark.config import KwackConfig, parse_offset, parse_serde
 
 
 def test_primitive_serdes():
@@ -39,8 +39,18 @@ def test_schema_from_file(tmp_path):
 
 
 def test_topic_serde_map():
-    m = parse_topic_serdes(["t1=string", "t2=latest"])
-    assert m["t1"].kind == "string" and m["t2"].kind == "latest"
+    cfg = config_from_args(build_parser().parse_args(["-v", "t1=string", "-v", " t2 =latest"]))
+    assert cfg.value_serde("t1").kind == "string" and cfg.value_serde("t2").kind == "latest"
+
+
+@pytest.mark.parametrize("flag, item", [("-v", "avro"), ("-k", "string"), ("-p", "orders")])
+def test_topic_flags_require_topic_equals_value(flag, item, capsys):
+    """-v, -k and -p without '=' are a usage error (exit 2) naming the item,
+    not a topic named like the serde or a topic with no partitions."""
+    with pytest.raises(SystemExit) as ei:
+        build_parser().parse_args([flag, item])
+    assert ei.value.code == 2
+    assert f"expected topic=<value>, got {item!r}" in capsys.readouterr().err
 
 
 def test_offsets():
